@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from recon_spark.operators.scratch import scratch
 from recon_spark.schema import NOT_LABELED
 
 
@@ -201,51 +202,56 @@ def hardest_examples_colocated(
     """hardest_examples with co-located span arrays: per-row tp/fp/fn
     via array predicates (no explode, no join), then the same global
     normalization. Empty-span docs are already rows, so no all-docs
-    re-join is needed."""
-    tp = (
-        f"size(filter({gold_spans}, g -> exists({pred_spans}, "
-        "p -> p.start = g.start AND p.end = g.end AND p.label = g.label)))"
-    )
-    fp = (
-        f"size(filter({pred_spans}, p -> NOT exists({gold_spans}, "
-        "g -> g.start = p.start AND g.end = p.end AND g.label = p.label)))"
-    )
-    fn = (
-        f"size(filter({gold_spans}, g -> NOT exists({pred_spans}, "
-        "p -> p.start = g.start AND p.end = g.end AND p.label = g.label)))"
-    )
-    scored = df.select(
+    re-join is needed.
+
+    The per-document score frame (doc_id, count, fscore) is pinned with
+    operators.scratch.scratch(), and the returned plan reads that pin.
+    Under RECON_RELIABLE_SCRATCH=1 the pin is a persist() that the
+    caller releases (spark.catalog.clearCache()), the helper's
+    documented contract; by default it is a lazy localCheckpoint that
+    the ContextCleaner releases once the returned frame is
+    garbage-collected."""
+    match = "p.start = g.start AND p.end = g.end AND p.label = g.label"
+    per_doc = df.select(
         F.col(id_col).alias("doc_id"),
-        (F.expr(fp) + F.expr(fn)).cast("long").alias("count"),
-        F.when(
-            (F.size(gold_spans) > 0) & (F.size(pred_spans) > 0),
-            F.when(
-                (2 * F.expr(tp) + F.expr(fp) + F.expr(fn)) > 0,
-                2.0 * F.expr(tp) / (2 * F.expr(tp) + F.expr(fp) + F.expr(fn)),
-            ).otherwise(0.0),
-        )
-        .otherwise(1.0)
-        .alias("fscore"),
+        F.expr(
+            f"size(filter({gold_spans}, g -> exists({pred_spans}, p -> {match})))"
+        ).alias("tp"),
+        F.expr(
+            f"size(filter({pred_spans}, p -> NOT exists({gold_spans}, g -> {match})))"
+        ).alias("fp"),
+        F.expr(
+            f"size(filter({gold_spans}, g -> NOT exists({pred_spans}, p -> {match})))"
+        ).alias("fn"),
+        ((F.size(gold_spans) > 0) & (F.size(pred_spans) > 0)).alias("both"),
     )
-    # The three global scalars (max_count, lo, hi) are collected EAGERLY
-    # against a transiently persisted score frame, then embedded as
-    # literals: the returned plan references the subtree exactly once,
-    # and the cache is released before returning (no session-lifetime
-    # pin — callers in a loop previously accumulated one cached RDD per
-    # call). Extraction executions: 1 while cached + 1 at caller
-    # materialization, vs 3-4 for the unpersisted broadcast-agg chain.
-    scored = scored.persist()
-    try:
-        max_count = scored.agg(F.max("count")).collect()[0][0] or 0
-        raw_score = F.col("fscore") - F.col("count") / F.lit(
-            max_count if max_count > 0 else 1
+    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
+    denom = 2 * tp + fp + fn
+    # Extraction and the span-matching HOFs run ONCE per call: the first
+    # scalar collect fills the pin; the second collect, the caller's
+    # materialization and the orderBy's range-partition sampling job all
+    # read the pinned blocks. A pin released before returning would let
+    # the last two re-run the upstream Python kernel.
+    scored = scratch(
+        per_doc.select(
+            "doc_id",
+            (fp + fn).cast("long").alias("count"),
+            F.when(
+                F.col("both"),
+                F.when(denom > 0, 2.0 * tp / denom).otherwise(0.0),
+            )
+            .otherwise(1.0)
+            .alias("fscore"),
         )
-        row = scored.agg(
-            F.min(raw_score).alias("lo"), F.max(raw_score).alias("hi")
-        ).collect()[0]
-        lo, hi = row["lo"], row["hi"]
-    finally:
-        scored.unpersist()
+    )
+    max_count = scored.agg(F.max("count")).collect()[0][0] or 0
+    raw_score = F.col("fscore") - F.col("count") / F.lit(
+        max_count if max_count > 0 else 1
+    )
+    row = scored.agg(
+        F.min(raw_score).alias("lo"), F.max(raw_score).alias("hi")
+    ).collect()[0]
+    lo, hi = row["lo"], row["hi"]
     if lo is None or hi is None or not hi > lo:
         score = F.lit(0.0)
     else:

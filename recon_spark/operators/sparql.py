@@ -1006,16 +1006,16 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
         return df.localCheckpoint(eager=True)
 
     keys: list[str] = []
-    edges = graph
     if pat.g is not None:
         _require_graph_col(graph)
         if isinstance(pat.g, Lit):
-            edges = edges.where(F.col("graph") == F.lit(pat.g.value))
+            # scopes the edges AND the zero-length identity terms below
+            graph = graph.where(F.col("graph") == F.lit(pat.g.value))
         else:
             keys = ["graph"]
     assert isinstance(pat.p, Lit)  # enforced by the parser
     edges = (
-        edges.where(F.col("pred") == F.lit(pat.p.value))
+        graph.where(F.col("pred") == F.lit(pat.p.value))
         .select(
             F.col("subj").alias("src"),
             F.col("obj").alias("dst"),
@@ -1083,8 +1083,8 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
         # each named graph when GRAPH-scoped); a ground endpoint
         # contributes its own identity row even off-graph (§9.3)
         if seed is not None:
-            ident = edges.sparkSession.createDataFrame(
-                [(seed, seed)], "src string, dst string"
+            ident = graph.sparkSession.range(1, numPartitions=1).select(
+                F.lit(seed).alias("src"), F.lit(seed).alias("dst")
             )
             if keys:
                 gcol = graph.select("graph").distinct()

@@ -41,24 +41,67 @@ def test_model_variant_differs_from_gold(spark):
     assert bad == 0
 
 
-def test_colocated_insights_match_join_operators(spark):
+def test_colocated_insights_match_join_operators(spark, monkeypatch):
     """Per-row (co-located) error classification and hardest scoring must
-    equal the two-source full-outer-join operators."""
+    equal the two-source full-outer-join operators, hardest rows in their
+    returned orderBy(score, count, doc_id) order, on the detected spans
+    and on degenerate inputs, in both scratch-pin modes."""
+    from pyspark.sql import functions as F
+
     from recon_spark.operators import insights as I
     from recon_spark.operators.extraction import detect_mentions
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     both = detect_mentions(detect_mentions(docs), which="model", out_col="pred_spans")
-    gold = both.select("doc_id", "text", "spans")
-    pred = both.select("doc_id", "pred_spans")
+    # every doc a perfect match: hi == lo, so every score is 0.0
+    perfect = both.withColumn("pred_spans", F.col("spans"))
+    # an empty gold or pred array takes the fscore = 1.0 branch
+    one_side = both.select(
+        "doc_id", "text",
+        F.when(F.col("doc_id") % 3 == 0, F.expr("filter(spans, s -> false)"))
+        .otherwise(F.col("spans")).alias("spans"),
+        F.when(F.col("doc_id") % 3 == 1, F.expr("filter(pred_spans, s -> false)"))
+        .otherwise(F.col("pred_spans")).alias("pred_spans"),
+    )
+    n_docs = docs.count()
 
-    a = sorted(map(tuple, I.prediction_errors(gold, pred).collect()))
-    b = sorted(map(tuple, I.prediction_errors_colocated(both).collect()))
-    assert a == b
+    def check(case):
+        gold = case.select("doc_id", "text", "spans")
+        pred = case.select("doc_id", "pred_spans")
+        a = sorted(map(tuple, I.prediction_errors(gold, pred).collect()))
+        b = sorted(map(tuple, I.prediction_errors_colocated(case).collect()))
+        assert a == b
+        c = [tuple(r) for r in I.hardest_examples(docs, gold, pred).collect()]
+        d = [tuple(r) for r in I.hardest_examples_colocated(case).collect()]
+        assert c == d and len(d) == n_docs
+        return d
 
-    c = sorted(map(tuple, I.hardest_examples(docs, gold, pred).collect()))
-    d = sorted(map(tuple, I.hardest_examples_colocated(both).collect()))
-    assert c == d
+    try:
+        for mode in ("", "1"):  # default localCheckpoint pin, then persist
+            monkeypatch.setenv("RECON_RELIABLE_SCRATCH", mode)
+            assert len({r[2] for r in check(both)}) > 1
+            assert {r[1:] for r in check(perfect)} == {(0, 0.0)}
+            assert len({r[2] for r in check(one_side)}) > 1
+    finally:
+        spark.catalog.clearCache()  # the reliable-mode caller release
+
+
+def test_hardest_examples_colocated_plan_reads_pin(spark, monkeypatch):
+    """The returned plan reads the pinned score frame, not the Python
+    extraction kernel: the caller's materialization and the orderBy's
+    sampling job do not re-run mapInArrow."""
+    from recon_spark.operators import insights as I
+    from recon_spark.operators.extraction import detect_mentions_both
+
+    monkeypatch.delenv("RECON_RELIABLE_SCRATCH", raising=False)
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    both = detect_mentions_both(docs)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "MapInArrow" in plan(both)
+    assert "MapInArrow" not in plan(I.hardest_examples_colocated(both))
 
 
 def test_detect_mentions_both_equals_chained(spark):

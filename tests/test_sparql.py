@@ -1124,6 +1124,13 @@ def test_zero_or_more_path(spark):
     got = sorted(map(tuple, out.collect()))
     assert ("g2", "c", "c") in got and ("g1", "a", "b") in got
     assert ("g2", "a", "a") not in got  # a is not a term of g2
+    # GRAPH <iri>: identity over that graph's terms only
+    out = compile_sparql(
+        quads, "SELECT ?s ?o WHERE { GRAPH <g1> { ?s <join>* ?o } }"
+    )
+    assert sorted(map(tuple, out.collect())) == [
+        ("a", "a"), ("a", "b"), ("b", "b"),
+    ]
 
 
 def test_sum_avg_aggregates_skip_non_numeric(spark):
