@@ -144,9 +144,12 @@ def rdfs_entail(
 
     This rule order is a complete stratification for the
     property/class RDFS fragment: property closure feeds typing, typing
-    feeds class closure, and no rule feeds back. Output is the distinct
-    union of asserted + inferred triples; type assertions use the local
-    name ``type`` for rdf:type (recon_spark.rdf handles IRI framing).
+    feeds class closure, and no rule feeds back, unless the T-Box puts
+    ``type_pred`` itself in the property schema (``_type_feedback``
+    closes that case). Asserted type rows take part in rdfs9. Output
+    is the distinct union of asserted + inferred triples; type
+    assertions use the local name ``type`` for rdf:type
+    (recon_spark.rdf handles IRI framing).
     """
     cl = tbox_closure(tbox)
     sp = F.broadcast(_dim(spark, cl["sp"], "p", "q"))
@@ -170,11 +173,17 @@ def rdfs_entail(
     ext = base.unionByName(
         base.join(sp, base.pred == sp.p).select("subj", F.col("q").alias("pred"), "obj")
     )
-    # rdfs2/rdfs3 over the extended assertions (domain/range of inferred
-    # super-properties fire too, per the RDFS rule set)
+    # type assertions (asserted, or rdfs7 from a sub-property of type)
+    # plus rdfs2/rdfs3 over the extended assertions (domain/range of
+    # inferred super-properties fire too, per the RDFS rule set)
     typ0 = (
-        ext.join(dom, ext.pred == dom.p)
-        .select(F.col("subj").alias("node"), F.col("cls"))
+        ext.where(ext.pred == type_pred)
+        .select(F.col("subj").alias("node"), F.col("obj").alias("cls"))
+        .unionByName(
+            ext.join(dom, ext.pred == dom.p).select(
+                F.col("subj").alias("node"), F.col("cls")
+            )
+        )
         .unionByName(
             ext.join(rng, ext.pred == rng.p).select(
                 F.col("obj").alias("node"), F.col("cls")
@@ -185,16 +194,63 @@ def rdfs_entail(
     typ = typ0.unionByName(
         typ0.join(sc, typ0.cls == sc.cls).select("node", F.col("sup").alias("cls"))
     )
-    return (
-        ext.unionByName(
-            typ.select(
-                F.col("node").alias("subj"),
-                F.lit(type_pred).alias("pred"),
-                F.col("cls").alias("obj"),
+    typ, t_sup = _type_feedback(spark, typ, cl, type_pred)
+    inferred = typ.select(
+        F.col("node").alias("subj"), F.lit(type_pred).alias("pred"), F.col("cls").alias("obj")
+    )
+    if t_sup:
+        # rdfs7 over the inferred type rows
+        inferred = inferred.unionByName(
+            typ.crossJoin(F.broadcast(_dim1(spark, t_sup, "pred"))).select(
+                F.col("node").alias("subj"), "pred", F.col("cls").alias("obj")
             )
         )
-        .dropDuplicates(["subj", "pred", "obj"])
+    return ext.unionByName(inferred).dropDuplicates(["subj", "pred", "obj"])
+
+
+def _dim1(spark: SparkSession, values: list[str], col: str) -> DataFrame:
+    return spark.createDataFrame([(v,) for v in values], f"{col} string")
+
+
+def _type_feedback(
+    spark: SparkSession,
+    typ: DataFrame,
+    cl: dict[str, list[tuple[str, str]]],
+    type_pred: str,
+) -> tuple[DataFrame, list[str]]:
+    """Close the (node, cls) type rows under the rules through which
+    typing feeds back into the property rules: a T-Box that gives
+    ``type_pred`` super-properties (rdfs7) or a domain/range, directly or
+    through those super-properties (rdfs2/rdfs3). Returns the closed rows
+    and the super-properties, whose rdfs7 rows the caller adds. Without
+    such axioms (the usual case) ``typ`` comes back unchanged.
+
+    With D (R) the subClassOf-closed domain (range) classes of type_pred
+    and its super-properties, every typed node gains D and every class
+    used as a type gains R. The least fixpoint has a closed form: once
+    anything is typed, the classes of D and R are used as types too; if
+    R is non-empty every class used as a type is itself typed (with R),
+    so it gains D as well. D and R are closed under subClassOf, so
+    rdfs9 adds nothing to the new rows."""
+    t_sup = sorted({q for p, q in cl["sp"] if p == type_pred and q != type_pred})
+    t_props = {type_pred, *t_sup}
+
+    def closed(classes: set[str]) -> list[str]:
+        return sorted(classes | {sup for c, sup in cl["sc"] if c in classes})
+
+    t_dom = closed({c for p, c in cl["domain"] if p in t_props})
+    t_rng = closed({c for p, c in cl["range"] if p in t_props})
+    if not (t_dom or t_rng):
+        return typ, t_sup
+    added = F.broadcast(_dim1(spark, sorted({*t_dom, *t_rng}), "node"))
+    used = typ.select(F.col("cls").alias("node")).unionByName(
+        typ.select(F.lit(1).alias("any")).limit(1).crossJoin(added).select("node")
     )
+    typed = typ.select("node").unionByName(used) if t_rng else typ.select("node")
+    for nodes, classes in ((typed, t_dom), (used, t_rng)):
+        if classes:
+            typ = typ.unionByName(nodes.crossJoin(F.broadcast(_dim1(spark, classes, "cls"))))
+    return typ, t_sup
 
 
 # --------------------------------------------------------------------------
@@ -363,8 +419,11 @@ def sql_entailed_cte(
     DuckDB's own recursive-CTE engine — an independent fixpoint
     implementation, not a replay of the driver-side Python closure.
     ``suffix`` namespaces the intermediate CTEs so two closures (base +
-    delta) can share one WITH clause; the shared closure CTEs sp/sc are
-    emitted only by the suffix-less instantiation."""
+    delta) can share one WITH clause; the shared CTEs (sp/sc closures,
+    ``type_pred`` with its super-properties, and the typing rules) are
+    emitted only by the suffix-less instantiation. ``typ`` is a
+    recursive fixpoint of rdfs9 and, for a T-Box that gives
+    ``type_pred`` a domain or range, rdfs2/rdfs3 over the type rows."""
     x = suffix
     shared = "" if x else f"""ont AS (SELECT * FROM {sql_ontology_values(tbox)}),
 sp AS (
@@ -377,6 +436,18 @@ sc AS (
   UNION
   SELECT sc.s, t.o FROM sc JOIN ont t ON t.p = 'subClassOf' AND sc.o = t.s
 ),
+type_props AS (
+  SELECT '{type_pred}' AS p
+  UNION
+  SELECT o FROM sp WHERE s = '{type_pred}'
+),
+type_rules AS (
+  SELECT 'sc' AS k, s, o FROM sc
+  UNION ALL
+  SELECT 'domain', NULL, d.o FROM ont d JOIN type_props t ON d.p = 'domain' AND d.s = t.p
+  UNION ALL
+  SELECT 'range', NULL, r.o FROM ont r JOIN type_props t ON r.p = 'range' AND r.s = t.p
+),
 """
     return f"""{shared}ext{x} AS (
   SELECT subj, pred, obj FROM {kg}
@@ -384,20 +455,23 @@ sc AS (
   SELECT k.subj, sp.o AS pred, k.obj FROM {kg} k JOIN sp ON k.pred = sp.s
 ),
 typ0{x} AS (
+  SELECT subj AS node, obj AS cls FROM ext{x} WHERE pred = '{type_pred}'
+  UNION ALL
   SELECT e.subj AS node, d.o AS cls FROM ext{x} e JOIN ont d ON d.p = 'domain' AND e.pred = d.s
   UNION ALL
   SELECT e.obj AS node, r.o AS cls FROM ext{x} e JOIN ont r ON r.p = 'range' AND e.pred = r.s
 ),
 typ{x} AS (
   SELECT node, cls FROM typ0{x}
-  UNION ALL
-  SELECT t.node, sc.o AS cls FROM typ0{x} t JOIN sc ON t.cls = sc.s
+  UNION
+  SELECT CASE WHEN r.k = 'range' THEN t.cls ELSE t.node END AS node, r.o AS cls
+  FROM typ{x} t JOIN type_rules r ON r.k <> 'sc' OR t.cls = r.s
 ),
 ent{x} AS (
   SELECT DISTINCT subj, pred, obj FROM (
     SELECT subj, pred, obj FROM ext{x}
     UNION ALL
-    SELECT node AS subj, '{type_pred}' AS pred, cls AS obj FROM typ{x}
+    SELECT t.node AS subj, q.p AS pred, t.cls AS obj FROM typ{x} t CROSS JOIN type_props q
   )
 )"""
 

@@ -1339,15 +1339,16 @@ def _solutions(
     # FILTER [NOT] EXISTS: semi/anti join on the shared variables —
     # evaluated over the required bindings. Referencing a variable that
     # only OPTIONAL binds is rejected explicitly (null-substitution
-    # semantics differ from a join), rather than silently degrading to
-    # the uncorrelated gate below.
+    # semantics differ from a join), also when the EXISTS group shares
+    # a required variable too: the join would silently correlate on the
+    # required ones only, or degrade to the uncorrelated gate below.
     opt_only = {
         v for opt in q.optionals for p_ in opt.patterns for v in p_.vars
     } - bound
     for ex in q.exists:
         ef, eb = _join_patterns(graph, ex.patterns, allow_product)
         clash = eb & opt_only
-        if clash and not (eb & bound):
+        if clash:
             raise SparqlError(
                 f"FILTER EXISTS over OPTIONAL-bound variables {sorted(clash)} "
                 "is not supported (evaluate before OPTIONAL or restructure)"

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "recon_spark",
@@ -20,6 +22,23 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or return the running) SparkSession.
+
+    For ``local``/``local[...]`` masters the Python workers fork from
+    ``recon_spark.daemon`` instead of ``pyspark.daemon``
+    (``spark.python.daemon.module``). Each Python task calls
+    ``importlib.invalidate_caches()``, and on CPython < 3.12 every
+    ``zipimporter`` then re-reads its whole archive, ``pyspark.zip``
+    included: about 300 ms of worker CPU per task, almost none of it UDF
+    work. The daemon makes that re-read lazy, as CPython 3.12 does
+    (gh-103200; the daemon leaves ``zipimport`` alone there), and
+    freezes the pre-imported modules before forking. Local masters only:
+    there the daemon runs on the driver's host, so the package's parent
+    directory goes on ``spark.executorEnv.PYTHONPATH`` (ahead of the
+    caller's own value) for ``python -m recon_spark.daemon`` to find it.
+    Other masters keep Spark's default daemon, since their executors may
+    not have the package installed.
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -58,6 +77,12 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        conf.setdefault("spark.python.daemon.module", "recon_spark.daemon")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PKG_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

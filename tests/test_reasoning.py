@@ -11,6 +11,7 @@ from recon_spark.operators.reasoning import (
     _transitive_closure,
     rdfs_entail,
     shape_violations,
+    sql_entailed_cte,
     tbox_closure,
 )
 from recon_spark.queries.reasoning import ORACLES, QUERIES
@@ -67,6 +68,28 @@ def test_rdfs_rules_on_micro_kg(spark):
     assert not any(s == "s3" and p == "type" for s, p, _ in triples)
     # asserted triples survive
     assert ("s2", "join", "o2") in triples
+
+
+def test_rdfs9_fires_on_asserted_type(spark, ddb):
+    """An asserted (x type Reader) inherits Reader's super-classes, in
+    the Spark closure and in its DuckDB twin."""
+    abox = [("x", "type", "Reader"), ("y", "scan", "z")]
+    want = {("x", "type", "Operator"), ("x", "type", "Thing")}
+    got = {
+        (r.subj, r.pred, r.obj)
+        for r in rdfs_entail(
+            spark, spark.createDataFrame(abox, "subj string, pred string, obj string")
+        ).collect()
+    }
+    assert want <= got
+    sql_got = set(
+        ddb.execute(
+            "WITH RECURSIVE kg(subj, pred, obj) AS "
+            "(VALUES ('x', 'type', 'Reader'), ('y', 'scan', 'z')), "
+            f"{sql_entailed_cte('kg')} SELECT * FROM ent"
+        ).fetchall()
+    )
+    assert sql_got == got
 
 
 def test_every_shape_fires_on_micro_kg(spark):
@@ -236,14 +259,16 @@ def _naive_rdfs_fixpoint(abox, tbox):
         schema = schema2
 
 
-def test_stratified_engine_equals_naive_fixpoint_random(spark):
+def test_stratified_engine_equals_naive_fixpoint_random(spark, ddb):
     """Randomized instances: the stratified broadcast engine must equal
     the order-free brute-force closure (catches any rule-ordering gap
     in the property/class fragment)."""
     import random
 
     rng = random.Random(42)
-    preds = ["p%d" % i for i in range(5)]
+    # `type` is in the pool: asserted type rows (whose object is then a
+    # class, so rdfs9 can fire) and type inside the property schema
+    preds = ["p%d" % i for i in range(5)] + ["type"]
     classes = ["C%d" % i for i in range(4)]
     nodes = ["n%d" % i for i in range(6)]
     for trial in range(6):
@@ -256,10 +281,10 @@ def test_stratified_engine_equals_naive_fixpoint_random(spark):
             tbox.append((rng.choice(preds), "domain", rng.choice(classes)))
         for _ in range(rng.randint(0, 2)):
             tbox.append((rng.choice(preds), "range", rng.choice(classes)))
-        abox = [
-            (rng.choice(nodes), rng.choice(preds), rng.choice(nodes))
-            for _ in range(rng.randint(2, 8))
-        ]
+        abox = []
+        for _ in range(rng.randint(2, 8)):
+            s, p = rng.choice(nodes), rng.choice(preds)
+            abox.append((s, p, rng.choice(classes if p == "type" else nodes)))
         want = _naive_rdfs_fixpoint(set(abox), tuple(tbox))
         got = {
             (r.subj, r.pred, r.obj)
@@ -274,3 +299,12 @@ def test_stratified_engine_equals_naive_fixpoint_random(spark):
         want_abox = {t for t in want if t[1] not in
                      ("subPropertyOf", "subClassOf", "domain", "range")}
         assert got == want_abox, f"trial {trial}: tbox={tbox} abox={abox}"
+        # DuckDB's recursive-CTE closure must agree too
+        rows = ", ".join(f"('{s}', '{p}', '{o}')" for s, p, o in abox)
+        sql_got = set(
+            ddb.execute(
+                f"WITH RECURSIVE kg(subj, pred, obj) AS (VALUES {rows}), "
+                f"{sql_entailed_cte('kg', tbox=tuple(tbox))} SELECT * FROM ent"
+            ).fetchall()
+        )
+        assert sql_got == want_abox, f"trial {trial}: tbox={tbox} abox={abox}"

@@ -1039,6 +1039,17 @@ def test_exists_errors(exists_graph):
             compile_sparql(exists_graph, bad).columns
 
 
+def test_exists_over_optional_var_rejected_with_shared_required_var(exists_graph):
+    # ?s is required, ?g only OPTIONAL-bound: correlating on ?s alone
+    # would drop the ?g condition without a word
+    with pytest.raises(SparqlError, match="OPTIONAL-bound"):
+        compile_sparql(
+            exists_graph,
+            "SELECT ?s WHERE { ?s <agg> ?o . OPTIONAL { ?s <group> ?g } "
+            "FILTER EXISTS { ?s <agg> ?g } }",
+        ).columns
+
+
 # --------------------------------------------------------------------------
 # Inverse paths + OFFSET
 # --------------------------------------------------------------------------
