@@ -11,8 +11,8 @@ Extraction spec (both engines implement exactly this):
   unigrams), emit the match, continue scanning after it. This is exactly
   the semantics of a leftmost-first regex alternation ordered longest
   surface first, which is what the DuckDB oracle uses
-  (regexp_extract_all over RE2) and what the pandas-UDF scanner and the
-  pure-JVM fold both implement on the Spark side.
+  (regexp_extract_all over RE2) and what the Spark-side Arrow kernel
+  (operators/extraction.py) runs with Python's ``re``.
 
 Ambiguous surfaces get their label from document parity (doc_id % 2) — a
 deterministic stand-in for "context" that both engines can compute — which
@@ -65,14 +65,6 @@ ALL_SURFACES: list[str] = sorted(
 MENTION_PATTERN = r"\b(" + "|".join(ALL_SURFACES) + r")\b"
 
 
-def label_of(surface: str, doc_id: int) -> str | None:
-    if surface in GAZ_FIXED:
-        return GAZ_FIXED[surface]
-    if surface in GAZ_AMBIG:
-        return GAZ_AMBIG[surface][int(doc_id) % 2]
-    return None
-
-
 # --- Degraded "model" gazetteer --------------------------------------------
 # A deterministic stand-in for a trained recognizer whose predictions
 # disagree with gold in every way the reference's error taxonomy
@@ -97,14 +89,6 @@ MODEL_SURFACES: list[str] = sorted(
     list(MODEL_FIXED) + list(MODEL_AMBIG), key=lambda s: (-len(s), s)
 )
 MODEL_PATTERN = r"\b(" + "|".join(MODEL_SURFACES) + r")\b"
-
-
-def model_label_of(surface: str, doc_id: int) -> str | None:
-    if surface in MODEL_FIXED:
-        return MODEL_FIXED[surface]
-    if surface in MODEL_AMBIG:
-        return MODEL_AMBIG[surface][int(doc_id) % 2]
-    return None
 
 
 # --- Entity-linking alias dictionary (FIXTURES.md §4) -----------------------
@@ -154,7 +138,7 @@ def sql_label_case(
     ambig: dict[str, tuple[str, str]] | None = None,
 ) -> str:
     """CASE expression mapping a matched surface to its label — the exact
-    dual of label_of() / model_label_of()."""
+    dual of the Arrow kernel's fixed/parity lookup (operators/extraction.py)."""
     fixed = GAZ_FIXED if fixed is None else fixed
     ambig = GAZ_AMBIG if ambig is None else ambig
     parts = [f"CASE {surface_col}"]

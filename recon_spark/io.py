@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from recon_spark.schema import SPAN_STRUCT, TOKEN_STRUCT
+from recon_spark.schema import SPAN_ARROW, SPAN_STRUCT, TOKEN_ARROW, TOKEN_STRUCT
 from recon_spark.operators.validation import span_offsets_valid
 
 # Prodigy jsonl rows: {text, spans: [{text?, start, end, label}], meta?, tokens?}
@@ -485,26 +485,6 @@ def _hf_ingest_arrow(base: DataFrame, tokens_col: str, keep: list[str]) -> DataF
             T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
         ]
     )
-    tok_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("id", pa.int32()),
-        ]
-    )
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
 
     def _ingest(batches):
         for batch in batches:
@@ -577,7 +557,7 @@ def _hf_ingest_arrow(base: DataFrame, tokens_col: str, keep: list[str]) -> DataF
                     pa.array(t_end, pa.int32()),
                     pa.array(t_id, pa.int32()),
                 ],
-                fields=list(tok_pa),
+                fields=list(TOKEN_ARROW),
             )
             span_struct = pa.StructArray.from_arrays(
                 [
@@ -590,7 +570,7 @@ def _hf_ingest_arrow(base: DataFrame, tokens_col: str, keep: list[str]) -> DataF
                     pa.nulls(n_s, pa.string()),
                     pa.array(["iob"] * n_s, pa.string()),
                 ],
-                fields=list(span_pa),
+                fields=list(SPAN_ARROW),
             )
             yield (
                 batch.append_column("text", pa.array(texts, pa.string()))

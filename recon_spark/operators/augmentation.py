@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from recon_spark.core.spans import substitute_spans
 from recon_spark.operators.sample import KNUTH
+from recon_spark.schema import SPAN_ARROW, SPAN_DDL
 
 _SPAN_FIELDS = ["text", "start", "end", "label", "token_start", "token_end", "kb_id", "source"]
 
@@ -152,22 +153,8 @@ def ent_label_sub(
     and re-basing all downstream offsets. One-to-many mapInArrow."""
     import pyarrow as pa
 
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
     out_ddl = (
-        f"{id_col} long, variant int, {text_col} string, {spans_col} "
-        "array<struct<text: string, start: int, end: int, label: string, "
-        "token_start: int, token_end: int, kb_id: string, source: string>>"
+        f"{id_col} long, variant int, {text_col} string, {spans_col} {SPAN_DDL}"
     )
 
     def _gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -189,7 +176,7 @@ def ent_label_sub(
                     pa.array(o_id, pa.int64()),
                     pa.array(o_v, pa.int32()),
                     pa.array(o_text, pa.string()),
-                    pa.array(o_spans, pa.list_(span_pa)),
+                    pa.array(o_spans, pa.list_(SPAN_ARROW)),
                 ],
                 [id_col, "variant", text_col, spans_col],
             )
@@ -222,21 +209,7 @@ def kb_expansion(
     import pyarrow as pa
 
     out_ddl = (
-        f"{id_col} long, variant int, {text_col} string, {spans_col} "
-        "array<struct<text: string, start: int, end: int, label: string, "
-        "token_start: int, token_end: int, kb_id: string, source: string>>"
-    )
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
+        f"{id_col} long, variant int, {text_col} string, {spans_col} {SPAN_DDL}"
     )
 
     def _gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
@@ -273,7 +246,7 @@ def kb_expansion(
                     pa.array(o_id, pa.int64()),
                     pa.array(o_v, pa.int32()),
                     pa.array(o_text, pa.string()),
-                    pa.array(o_spans, pa.list_(span_pa)),
+                    pa.array(o_spans, pa.list_(SPAN_ARROW)),
                 ],
                 [id_col, "variant", text_col, spans_col],
             )

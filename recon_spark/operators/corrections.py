@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from recon_spark.schema import SPAN_ARROW, SPAN_DDL
+
 
 def _rebuild_span(updates: dict[str, str]) -> str:
     """named_struct(...) SQL preserving span field order with overrides."""
@@ -200,22 +202,8 @@ def split_sentences(
 
     from recon_spark.core.spans import split_sentences as _split_py
 
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
     out_ddl = (
-        f"{id_col} long, sent_id int, {text_col} string, {spans_col} "
-        "array<struct<text: string, start: int, end: int, label: string, "
-        "token_start: int, token_end: int, kb_id: string, source: string>>"
+        f"{id_col} long, sent_id int, {text_col} string, {spans_col} {SPAN_DDL}"
     )
     fields = ["text", "start", "end", "label", "token_start", "token_end", "kb_id", "source"]
 
@@ -236,7 +224,7 @@ def split_sentences(
                     pa.array(o_id, pa.int64()),
                     pa.array(o_sid, pa.int32()),
                     pa.array(o_text, pa.string()),
-                    pa.array(o_spans, pa.list_(span_pa)),
+                    pa.array(o_spans, pa.list_(SPAN_ARROW)),
                 ],
                 [id_col, "sent_id", text_col, spans_col],
             )

@@ -1,19 +1,25 @@
 """Mention detection + SVO triple extraction (the recognizer analog).
 
 Reference analog: ``EntityRecognizer.predict`` batch inference
-(/root/reference/recon/recognizer.py:31-43, 111-138) — re-expressed two ways:
+(reference ``recon/recognizer.py:31-43, 111-138``).
 
-1. ``detect_mentions`` — Arrow-vectorized pandas UDF (the north-star hot
-   path: batched mention detection per page; model/pattern compiled once
-   per executor, rows processed per Arrow batch, no row-at-a-time Python
-   dispatch).
-2. ``detect_mentions_jvm`` — pure Spark-SQL higher-order-function fold
-   (zero Python anywhere; used to cross-check the UDF and for the
-   whole-stage-codegen benchmark variant).
+Mention detection is one Arrow kernel, ``_scan_batch``. Per record batch
+it builds each text's char->token map once, runs the regex of every
+requested gazetteer side (``gold``: the annotation gazetteer, ``model``:
+the degraded recognizer stand-in), looks up the labels and assembles the
+span columns as flat Arrow arrays + list offsets (no per-span Python
+dicts, no pandas boxing). Three ``mapInArrow`` entry points run it:
 
-Both implement the same spec (gazetteer.py): maximal-munch left-to-right
-scan over whitespace tokens, longest surface first. Equality of the two
-implementations is asserted in tests/test_extraction.py.
+- ``detect_mentions`` — one side, appended as a span-array column;
+- ``detect_mentions_both`` — gold and model in the same pass, sharing
+  one Arrow transit and one token map per text;
+- ``detect_mentions_long`` — one side as long-form (id, surface, label)
+  rows, with no token map and no span structs.
+
+The scan spec (gazetteer.py): maximal-munch left-to-right scan over
+whitespace tokens, longest surface first. tests/test_extraction.py checks
+the kernel against the token-loop scanner of tests/reference_impl.py; the
+DuckDB oracles restate the spec in SQL.
 
 Scale notes: extraction is embarrassingly parallel (per-row, no shuffle).
 Upstream bucketing by url/doc-id hash keeps re-extraction deterministic and
@@ -25,78 +31,102 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from recon_spark.gazetteer import (
     GAZ_AMBIG,
     GAZ_FIXED,
     MENTION_PATTERN,
+    MODEL_AMBIG,
+    MODEL_FIXED,
     MODEL_PATTERN,
     PREDICATES,
-    label_of,
-    model_label_of,
 )
+from recon_spark.schema import SPAN_ARROW, SPAN_STRUCT
 
-_SPAN_DDL = (
-    "ARRAY<STRUCT<text: STRING, start: INT, end: INT, label: STRING, "
-    "token_start: INT, token_end: INT, kb_id: STRING, source: STRING>>"
-)
-
-
-def _scan_text(doc_id: int, text: str, mention_re, labeler, source: str) -> list[dict]:
-    """Per-row kernel: regex maximal-munch scan → span dicts."""
-    spans = []
-    tok_of_char: dict[int, int] = {}
-    pos = 0
-    for tid, w in enumerate(text.split(" ")):
-        tok_of_char[pos] = tid
-        pos += len(w) + 1
-    for m in mention_re.finditer(text):
-        surface = m.group(1)
-        start, end = m.start(1), m.end(1)
-        t0 = tok_of_char.get(start, -1)
-        t1 = t0 + surface.count(" ")
-        spans.append(
-            {
-                "text": surface,
-                "start": start,
-                "end": end,
-                "label": labeler(surface, doc_id),
-                "token_start": t0,
-                "token_end": t1,
-                "kb_id": None,
-                "source": source,
-            }
-        )
-    return spans
+# which -> (pattern, fixed labels, parity-dependent labels, span source)
+_SIDES = {
+    "gold": (MENTION_PATTERN, GAZ_FIXED, GAZ_AMBIG, "gazetteer"),
+    "model": (MODEL_PATTERN, MODEL_FIXED, MODEL_AMBIG, "model"),
+}
+_NO_TOKENS: dict[int, int] = {}
 
 
-def detect_mentions_pandas(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    which: str = "gold",
-    out_col: str = "spans",
-) -> DataFrame:
-    """Mention detection as a scalar-iterator pandas UDF (reference
-    vectorized path; superseded by the mapInArrow implementation below,
-    kept for cross-checking in tests)."""
-    pattern = MENTION_PATTERN if which == "gold" else MODEL_PATTERN
-    labeler = label_of if which == "gold" else model_label_of
-    source = "gazetteer" if which == "gold" else "model"
+def _scan_batch(batch, id_col, text_col, sides, spans=True) -> list:
+    """Maximal-munch scan of one record batch for each of ``sides``
+    (``(compiled regex, fixed, ambig, source)``), returning one
+    ``list<struct>`` column per side, one list per row.
 
-    @F.pandas_udf(_SPAN_DDL)
-    def _detect(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        rx = re.compile(pattern)
-        for doc_ids, texts in batches:
-            yield pd.Series(
-                [_scan_text(d, t, rx, labeler, source) for d, t in zip(doc_ids, texts)],
-                dtype=object,
+    With ``spans`` the struct is ``SPAN_ARROW``. Without, it is
+    ``(surface, label)`` and no token map is built (long form)."""
+    doc_ids = batch.column(id_col).to_pylist()
+    texts = batch.column(text_col).to_pylist()
+    pars = [int(d) % 2 for d in doc_ids]
+    if spans:
+        toks: list[dict[int, int]] = []
+        for t in texts:  # char -> token map, shared by every side
+            tok: dict[int, int] = {}
+            pos = 0
+            for tid, w in enumerate(t.split(" ")):
+                tok[pos] = tid
+                pos += len(w) + 1
+            toks.append(tok)
+    else:
+        toks = [_NO_TOKENS] * len(texts)
+    cols = []
+    for rx, fixed, ambig, source in sides:
+        offsets = [0]
+        s_text: list = []
+        s_start: list = []
+        s_label: list = []
+        s_ts: list = []
+        for par, t, tok in zip(pars, texts, toks):
+            for m in rx.finditer(t):
+                surf = m.group(1)
+                start = m.start(1)
+                s_text.append(surf)
+                s_start.append(start)
+                lab = fixed.get(surf)
+                s_label.append(lab if lab is not None else ambig[surf][par])
+                s_ts.append(tok.get(start, -1))
+            offsets.append(len(s_text))
+        text = pa.array(s_text, pa.string())
+        label = pa.array(s_label, pa.string())
+        if spans:
+            start_a = pa.array(s_start, pa.int32())
+            ts = pa.array(s_ts, pa.int32())
+            n = len(text)
+            struct_arr = pa.StructArray.from_arrays(
+                [
+                    text,
+                    start_a,
+                    pc.add(start_a, pc.utf8_length(text)),  # end
+                    label,
+                    ts,
+                    pc.add(ts, pc.count_substring(text, " ")),  # token_end
+                    pa.nulls(n, pa.string()),
+                    pa.repeat(source, n),
+                ],
+                fields=list(SPAN_ARROW),
             )
+        else:
+            struct_arr = pa.StructArray.from_arrays([text, label], ["surface", "label"])
+        cols.append(pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct_arr))
+    return cols
 
-    return df.withColumn(out_col, _detect(F.col(id_col), F.col(text_col)))
+
+def _compiled(*which: str) -> list[tuple]:
+    return [(re.compile(p), f, a, s) for p, f, a, s in (_SIDES[w] for w in which)]
+
+
+def _with_span_cols(df: DataFrame, *names: str) -> T.StructType:
+    return T.StructType(
+        df.schema.fields + [T.StructField(n, T.ArrayType(SPAN_STRUCT)) for n in names]
+    )
 
 
 def detect_mentions(
@@ -106,91 +136,21 @@ def detect_mentions(
     which: str = "gold",
     out_col: str = "spans",
 ) -> DataFrame:
-    """Add a column of detected mentions — mapInArrow hot path.
-
-    Builds the span column as flat Arrow arrays + list offsets directly
-    (no per-span Python dicts, no pandas boxing): measured 3x faster than
-    the equivalent pandas UDF at sf0.1 x100. All input columns pass
-    through untouched.
+    """Add a column of detected mentions (one ``mapInArrow`` pass); all
+    input columns pass through untouched.
 
     which='gold' uses the annotation gazetteer; which='model' the
     degraded model gazetteer (the EntityRecognizer stand-in for the
     prediction-error / hardest-example harnesses).
     """
-    import pyarrow as pa
-    from pyspark.sql import types as T
 
-    from recon_spark.gazetteer import MODEL_AMBIG, MODEL_FIXED
-
-    pattern = MENTION_PATTERN if which == "gold" else MODEL_PATTERN
-    fixed = GAZ_FIXED if which == "gold" else MODEL_FIXED
-    ambig = GAZ_AMBIG if which == "gold" else MODEL_AMBIG
-    source = "gazetteer" if which == "gold" else "model"
-
-    from recon_spark.schema import SPAN_STRUCT
-
-    out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.ArrayType(SPAN_STRUCT))])
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
-
-    def _extract(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        rx = re.compile(pattern)
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sides = _compiled(which)
         for batch in batches:
-            doc_ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            offsets = [0]
-            s_text: list = []
-            s_start: list = []
-            s_end: list = []
-            s_label: list = []
-            s_ts: list = []
-            s_te: list = []
-            for did, t in zip(doc_ids, texts):
-                par = int(did) % 2
-                tok: dict[int, int] = {}
-                pos = 0
-                for tid, w in enumerate(t.split(" ")):
-                    tok[pos] = tid
-                    pos += len(w) + 1
-                for m in rx.finditer(t):
-                    surf = m.group(1)
-                    s_text.append(surf)
-                    s_start.append(m.start(1))
-                    s_end.append(m.end(1))
-                    lab = fixed.get(surf)
-                    s_label.append(lab if lab is not None else ambig[surf][par])
-                    t0 = tok.get(m.start(1), -1)
-                    s_ts.append(t0)
-                    s_te.append(t0 + surf.count(" "))
-                offsets.append(len(s_text))
-            n = len(s_text)
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    pa.array(s_text, pa.string()),
-                    pa.array(s_start, pa.int32()),
-                    pa.array(s_end, pa.int32()),
-                    pa.array(s_label, pa.string()),
-                    pa.array(s_ts, pa.int32()),
-                    pa.array(s_te, pa.int32()),
-                    pa.nulls(n, pa.string()),
-                    pa.array([source] * n, pa.string()),
-                ],
-                fields=list(span_pa),
-            )
-            spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct_arr)
+            (spans,) = _scan_batch(batch, id_col, text_col, sides)
             yield batch.append_column(out_col, spans)
 
-    return df.mapInArrow(_extract, out_schema)
+    return df.mapInArrow(_extract, _with_span_cols(df, out_col))
 
 
 def detect_mentions_both(
@@ -209,169 +169,14 @@ def detect_mentions_both(
     batch transit and the char->token map: measured ~1.7x on the dual
     path at sf0.1. Output asserted equal to the chained calls in
     tests/test_extraction.py."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
 
-    from recon_spark.gazetteer import MODEL_AMBIG, MODEL_FIXED
-    from recon_spark.schema import SPAN_STRUCT
-
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField(gold_col, T.ArrayType(SPAN_STRUCT)),
-            T.StructField(pred_col, T.ArrayType(SPAN_STRUCT)),
-        ]
-    )
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
-    sides = (
-        (MENTION_PATTERN, GAZ_FIXED, GAZ_AMBIG, "gazetteer"),
-        (MODEL_PATTERN, MODEL_FIXED, MODEL_AMBIG, "model"),
-    )
-
-    def _extract(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        rxs = [re.compile(p) for p, _f, _a, _s in sides]
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sides = _compiled("gold", "model")
         for batch in batches:
-            doc_ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            cols = []
-            toks: list[dict[int, int]] = []
-            for t in texts:  # char->token map shared by both sides
-                tok: dict[int, int] = {}
-                pos = 0
-                for tid, w in enumerate(t.split(" ")):
-                    tok[pos] = tid
-                    pos += len(w) + 1
-                toks.append(tok)
-            for rx, (_p, fixed, ambig, source) in zip(rxs, sides):
-                offsets = [0]
-                s_text: list = []
-                s_start: list = []
-                s_end: list = []
-                s_label: list = []
-                s_ts: list = []
-                s_te: list = []
-                for did, t, tok in zip(doc_ids, texts, toks):
-                    par = int(did) % 2
-                    for m in rx.finditer(t):
-                        surf = m.group(1)
-                        s_text.append(surf)
-                        s_start.append(m.start(1))
-                        s_end.append(m.end(1))
-                        lab = fixed.get(surf)
-                        s_label.append(lab if lab is not None else ambig[surf][par])
-                        t0 = tok.get(m.start(1), -1)
-                        s_ts.append(t0)
-                        s_te.append(t0 + surf.count(" "))
-                    offsets.append(len(s_text))
-                n = len(s_text)
-                struct_arr = pa.StructArray.from_arrays(
-                    [
-                        pa.array(s_text, pa.string()),
-                        pa.array(s_start, pa.int32()),
-                        pa.array(s_end, pa.int32()),
-                        pa.array(s_label, pa.string()),
-                        pa.array(s_ts, pa.int32()),
-                        pa.array(s_te, pa.int32()),
-                        pa.nulls(n, pa.string()),
-                        pa.array([source] * n, pa.string()),
-                    ],
-                    fields=list(span_pa),
-                )
-                cols.append(
-                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct_arr)
-                )
-            out = batch.append_column(gold_col, cols[0])
-            yield out.append_column(pred_col, cols[1])
+            gold, pred = _scan_batch(batch, id_col, text_col, sides)
+            yield batch.append_column(gold_col, gold).append_column(pred_col, pred)
 
-    return df.mapInArrow(_extract, out_schema)
-
-
-def _sql_label_case_spark(surface_expr: str, docid_expr: str) -> str:
-    parts = [f"CASE {surface_expr}"]
-    for s, lab in GAZ_FIXED.items():
-        parts.append(f" WHEN '{s}' THEN '{lab}'")
-    for s, (even, odd) in GAZ_AMBIG.items():
-        parts.append(
-            f" WHEN '{s}' THEN (CASE WHEN {docid_expr} % 2 = 0 THEN '{even}' ELSE '{odd}' END)"
-        )
-    parts.append(" END")
-    return "".join(parts)
-
-
-def detect_mentions_jvm(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Pure JVM mention detection: one aggregate() fold per row, no Python.
-
-    State: (last consumed token index, char pos, mentions). Bigram surfaces
-    tried before unigrams at each position — identical output to
-    detect_mentions().
-    """
-    bigrams = sorted(s for s in list(GAZ_FIXED) + list(GAZ_AMBIG) if " " in s)
-    unigrams = sorted(s for s in list(GAZ_FIXED) + list(GAZ_AMBIG) if " " not in s)
-    big_arr = "array(" + ", ".join(f"'{s}'" for s in bigrams) + ")"
-    uni_arr = "array(" + ", ".join(f"'{s}'" for s in unigrams) + ")"
-    w = "__w"
-    label2 = _sql_label_case_spark(
-        f"concat(element_at({w}, i + 1), ' ', element_at({w}, i + 2))", id_col
-    )
-    label1 = _sql_label_case_spark(f"element_at({w}, i + 1)", id_col)
-
-    expr = f"""
-    aggregate(
-      sequence(0, size({w}) - 1),
-      named_struct(
-        'last', -1, 'pos', 0,
-        'ms', CAST(array() AS {_SPAN_DDL})),
-      (acc, i) -> CASE
-          WHEN i > acc.last
-               AND i + 1 < size({w})
-               AND array_contains({big_arr}, concat(element_at({w}, i + 1), ' ', element_at({w}, i + 2)))
-          THEN named_struct(
-            'last', i + 1,
-            'pos', acc.pos + length(element_at({w}, i + 1)) + 1,
-            'ms', array_append(acc.ms, named_struct(
-              'text', concat(element_at({w}, i + 1), ' ', element_at({w}, i + 2)),
-              'start', acc.pos,
-              'end', acc.pos + length(element_at({w}, i + 1)) + 1 + length(element_at({w}, i + 2)),
-              'label', {label2},
-              'token_start', i, 'token_end', i + 1,
-              'kb_id', CAST(NULL AS STRING), 'source', 'gazetteer')))
-          WHEN i > acc.last AND array_contains({uni_arr}, element_at({w}, i + 1))
-          THEN named_struct(
-            'last', i,
-            'pos', acc.pos + length(element_at({w}, i + 1)) + 1,
-            'ms', array_append(acc.ms, named_struct(
-              'text', element_at({w}, i + 1),
-              'start', acc.pos,
-              'end', acc.pos + length(element_at({w}, i + 1)),
-              'label', {label1},
-              'token_start', i, 'token_end', i,
-              'kb_id', CAST(NULL AS STRING), 'source', 'gazetteer')))
-          ELSE named_struct(
-            'last', acc.last,
-            'pos', acc.pos + length(element_at({w}, i + 1)) + 1,
-            'ms', acc.ms)
-        END,
-      acc -> acc.ms
-    )
-    """
-    return (
-        df.withColumn(w, F.split(F.col(text_col), " "))
-        .withColumn("spans", F.expr(expr))
-        .drop(w)
-    )
+    return df.mapInArrow(_extract, _with_span_cols(df, gold_col, pred_col))
 
 
 def detect_mentions_long(
@@ -384,37 +189,16 @@ def detect_mentions_long(
     directly from the Arrow kernel — for aggregation consumers this skips
     building + exploding the nested span structs in the JVM entirely
     (the Generate-over-struct copy was the memory-bandwidth hot spot).
-    Row-count-changing mapInArrow; same scan spec as detect_mentions."""
-    import pyarrow as pa
+    Row-count-changing mapInArrow; same scan as detect_mentions."""
 
-    from recon_spark.gazetteer import MODEL_AMBIG, MODEL_FIXED
-
-    pattern = MENTION_PATTERN if which == "gold" else MODEL_PATTERN
-    fixed = GAZ_FIXED if which == "gold" else MODEL_FIXED
-    ambig = GAZ_AMBIG if which == "gold" else MODEL_AMBIG
-
-    def _extract(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        rx = re.compile(pattern)
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sides = _compiled(which)
         for batch in batches:
-            doc_ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o_id: list = []
-            o_surface: list = []
-            o_label: list = []
-            for did, t in zip(doc_ids, texts):
-                par = int(did) % 2
-                for m in rx.finditer(t):
-                    surf = m.group(1)
-                    o_id.append(did)
-                    o_surface.append(surf)
-                    lab = fixed.get(surf)
-                    o_label.append(lab if lab is not None else ambig[surf][par])
+            (ms,) = _scan_batch(batch, id_col, text_col, sides, spans=False)
+            ids = pc.take(batch.column(id_col), ms.value_parent_indices())
+            flat = ms.values
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_id, pa.int64()),
-                    pa.array(o_surface, pa.string()),
-                    pa.array(o_label, pa.string()),
-                ],
+                [ids.cast(pa.int64()), flat.field(0), flat.field(1)],
                 [id_col, "surface", "label"],
             )
 

@@ -64,6 +64,44 @@ def evaluate_recognizer(
             F.coalesce("fn", F.lit(0)).alias("fn"),
         )
     )
+    return _with_prf(per_label)
+
+
+def evaluate_recognizer_colocated(
+    df: DataFrame, gold_spans: str = "spans", pred_spans: str = "pred_spans"
+) -> DataFrame:
+    """evaluate_recognizer over gold and pred span arrays on the SAME row
+    (detect_mentions_both's output): no join, one explode and one
+    aggregation. A span is a hit iff the other side holds a span with
+    the same (start, end, label); gold hits are tp, gold misses fn, pred
+    misses fp — the join's counts when offsets are unique per side, as
+    maximal-munch spans are."""
+
+    def tagged(spans: str, other: str, gold: str) -> str:
+        return (
+            f"transform({spans}, s -> named_struct('label', s.label, 'gold', {gold},"
+            f" 'hit', exists({other}, o -> o.start = s.start AND o.end = s.end"
+            " AND o.label = s.label)))"
+        )
+
+    m = df.select(
+        F.explode(
+            F.concat(
+                F.expr(tagged(gold_spans, pred_spans, "true")),
+                F.expr(tagged(pred_spans, gold_spans, "false")),
+            )
+        ).alias("m")
+    ).select("m.*")
+    per_label = m.groupBy("label").agg(
+        F.count(F.when(F.col("gold") & F.col("hit"), 1)).alias("tp"),
+        F.count(F.when(~F.col("gold") & ~F.col("hit"), 1)).alias("fp"),
+        F.count(F.when(F.col("gold") & ~F.col("hit"), 1)).alias("fn"),
+    )
+    return _with_prf(per_label)
+
+
+def _with_prf(per_label: DataFrame) -> DataFrame:
+    """(label, tp, fp, fn) + an __ALL__ micro row -> rounded PRF."""
     overall = per_label.agg(
         F.lit("__ALL__").alias("label"),
         F.sum("tp").alias("tp"),

@@ -23,12 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from recon_spark.core.spans import filter_overlaps as _filter_overlaps_py
+from recon_spark.schema import SPAN_DDL
 
 _TOKEN_DDL = "ARRAY<STRUCT<text: STRING, start: INT, end: INT, id: INT>>"
-_SPAN_DDL = (
-    "ARRAY<STRUCT<text: STRING, start: INT, end: INT, label: STRING, "
-    "token_start: INT, token_end: INT, kb_id: STRING, source: STRING>>"
-)
 
 
 def add_tokens(
@@ -89,26 +86,11 @@ def add_tokens_arrow(
     from pyspark.sql import types as T
 
     from recon_spark.core.spans import align_spans_to_tokens, tokenize_ws
-    from recon_spark.schema import TOKEN_STRUCT
+    from recon_spark.schema import SPAN_ARROW, TOKEN_ARROW, TOKEN_STRUCT
 
     drop_idx = [i for i, f in enumerate(df.schema.fields) if f.name == tokens_col]
     base_fields = [f for f in df.schema.fields if f.name != tokens_col]
     out_schema = T.StructType(base_fields + [T.StructField(tokens_col, T.ArrayType(TOKEN_STRUCT))])
-    tok_pa = pa.struct(
-        [("text", pa.string()), ("start", pa.int32()), ("end", pa.int32()), ("id", pa.int32())]
-    )
-    span_pa = pa.struct(
-        [
-            ("text", pa.string()),
-            ("start", pa.int32()),
-            ("end", pa.int32()),
-            ("label", pa.string()),
-            ("token_start", pa.int32()),
-            ("token_end", pa.int32()),
-            ("kb_id", pa.string()),
-            ("source", pa.string()),
-        ]
-    )
     span_fields = ["text", "start", "end", "label", "token_start", "token_end", "kb_id", "source"]
 
     def _gen(batches):
@@ -137,11 +119,11 @@ def add_tokens_arrow(
             names = []
             for f in base_fields:
                 if f.name == spans_col:
-                    cols.append(pa.array(spans_out, pa.list_(span_pa)))
+                    cols.append(pa.array(spans_out, pa.list_(SPAN_ARROW)))
                 else:
                     cols.append(batch.column(f.name).take(idx))
                 names.append(f.name)
-            cols.append(pa.array(toks_out, pa.list_(tok_pa)))
+            cols.append(pa.array(toks_out, pa.list_(TOKEN_ARROW)))
             names.append(tokens_col)
             yield pa.RecordBatch.from_arrays(cols, names)
 
@@ -182,7 +164,7 @@ def filter_overlaps_jvm(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     greedy = f"""
     aggregate(
       {cmp_priority},
-      CAST(array() AS {_SPAN_DDL}),
+      CAST(array() AS {SPAN_DDL}),
       (acc, x) -> CASE WHEN exists(acc,
             k -> least(k.end, x.end) - greatest(k.start, x.start) > 0)
           THEN acc ELSE array_append(acc, x) END)
@@ -200,7 +182,7 @@ def filter_overlaps(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     oracle in core/spans.py, golden cases from the reference's
     tests/test_validation.py replicated in tests/test_span_core.py)."""
 
-    @F.pandas_udf(_SPAN_DDL)
+    @F.pandas_udf(SPAN_DDL)
     def _resolve(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for spans_series in batches:
             yield pd.Series(

@@ -550,12 +550,10 @@ GROUP BY 1, 2, 3 ORDER BY n DESC, subj, pred, obj
 
 
 def q_recognizer_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from recon_spark.operators.scorer import evaluate_recognizer
+    from recon_spark.operators.scorer import evaluate_recognizer_colocated
 
-    docs = _docs(spark, sf_dir)
-    gold = detect_mentions(docs, which="gold")
-    pred = detect_mentions(docs, which="model", out_col="pred_spans")
-    return evaluate_recognizer(gold, pred.select("doc_id", "pred_spans"))
+    both = detect_mentions_both(_docs(spark, sf_dir))  # fused single Arrow pass
+    return evaluate_recognizer_colocated(both)
 
 
 SQL_RECOGNIZER_SCORES = f"""

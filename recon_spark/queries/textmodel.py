@@ -94,7 +94,9 @@ def sql_bpe_ctes(n_merges: int = N_MERGES, docs_table: str = "documents") -> str
     greedily left-to-right (pos/pending/out accumulator — the
     non-overlapping scan a regex replace cannot express for runs of
     identical symbols). Ends with ``words_{n}`` = the fully merged
-    dictionary and ``m1..m{n}`` = the learned merges.
+    dictionary and ``m1..m{n}`` = the learned merges. A round whose
+    ``m{r}`` is empty (no adjacent pairs left) carries the previous
+    dictionary forward, as bpe_train stops early.
 
     Every per-round CTE is AS MATERIALIZED: each round references the
     previous one 2-3 times, and DuckDB's default inlining would copy
@@ -136,6 +138,8 @@ words_{r} AS MATERIALIZED (
   SELECT word, freq,
          CASE WHEN pending IS NULL THEN out ELSE list_append(out, pending) END AS toks
   FROM s{r} WHERE pos = len(toks)
+  UNION ALL
+  SELECT word, freq, toks FROM {prev} WHERE NOT EXISTS (SELECT 1 FROM m{r})
 )""")
     return ",\n".join(parts)
 

@@ -8,6 +8,7 @@ DataFrame row with nested ``ARRAY<STRUCT>`` columns; ``meta`` becomes
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # Span: recon/types.py:41-59 (text,start,end,label + optional token offsets,
@@ -34,6 +35,13 @@ TOKEN_STRUCT = T.StructType(
         T.StructField("id", T.IntegerType()),
     ]
 )
+
+# The same two structs as Arrow types, for mapInArrow kernels that build
+# span/token columns directly, and the span-array column as DDL.
+_ARROW_OF = {T.StringType(): pa.string(), T.IntegerType(): pa.int32()}
+SPAN_ARROW = pa.struct([(f.name, _ARROW_OF[f.dataType]) for f in SPAN_STRUCT.fields])
+TOKEN_ARROW = pa.struct([(f.name, _ARROW_OF[f.dataType]) for f in TOKEN_STRUCT.fields])
+SPAN_DDL = T.ArrayType(SPAN_STRUCT).simpleString()
 
 # Example: recon/types.py:77-188. example_hash is our content identity
 # (hashing.py); split is the Corpus partition column (recon/corpus.py:13-52).

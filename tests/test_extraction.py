@@ -1,12 +1,18 @@
-"""Three-way equivalence of the mention-detection implementations:
-mapInArrow (hot path) == pandas UDF == pure-JVM fold."""
+"""Mention detection: the Arrow kernel's entry points against the
+independent token-loop scanner of tests/reference_impl.py, plus the
+co-located insight/scoring operators built on the fused gold+model pass."""
 
+from pyspark.sql import functions as F
+
+from recon_spark.core.spans import tokenize_ws
 from recon_spark.operators.extraction import (
     detect_mentions,
-    detect_mentions_jvm,
-    detect_mentions_pandas,
+    detect_mentions_both,
+    detect_mentions_long,
 )
+from recon_spark.pages import generate_pages
 from tests.conftest import SF_SMOKE
+from tests.reference_impl import ref_mentions
 
 
 def _spans(df):
@@ -16,13 +22,45 @@ def _spans(df):
     }
 
 
-def test_three_way_equivalence(spark):
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    arrow = _spans(detect_mentions(docs))
-    pandas_ = _spans(detect_mentions_pandas(docs))
-    jvm = _spans(detect_mentions_jvm(docs))
-    assert arrow == pandas_
-    assert arrow == jvm
+def test_entry_points_match_reference_scanner(spark):
+    """Gold spans of detect_mentions, the gold side of
+    detect_mentions_both and detect_mentions_long all equal ref_mentions
+    on generated pages, and token_start/token_end name the tokenize_ws
+    tokens holding the span's first and last char. The pages end
+    sentences in dotted tokens ("data."), so a scanner that does not
+    stop a surface at its trailing period disagrees."""
+    pages = generate_pages(spark, 200, seed=7).select(
+        F.col("page_id").alias("doc_id"), "text"
+    )
+    texts = {r.doc_id: r.text for r in pages.collect()}
+    ref = {d: ref_mentions(d, t) for d, t in texts.items()}
+    dotted = [(d, e) for d, ms in ref.items() for *_, e in ms if texts[d][e:e + 1] == "."]
+    assert len(dotted) > 100  # the fixture can tell the scanners apart
+
+    want = {d: [(s, lab, a, b) for s, lab, a, b in ms] for d, ms in ref.items()}
+    gold = {
+        r.doc_id: r.spans
+        for r in detect_mentions(pages).select("doc_id", "spans").collect()
+    }
+    fused = {
+        r.doc_id: r.spans
+        for r in detect_mentions_both(pages).select("doc_id", "spans").collect()
+    }
+    for got in (gold, fused):
+        assert {
+            d: [(s.text, s.label, s.start, s.end) for s in spans] for d, spans in got.items()
+        } == want
+    assert fused == gold
+    long_rows = sorted(map(tuple, detect_mentions_long(pages).collect()))
+    assert long_rows == sorted((d, s, lab) for d, ms in ref.items() for s, lab, _, _ in ms)
+
+    for d, spans in gold.items():
+        toks = tokenize_ws(texts[d])
+        for s in spans:
+            first = [t[3] for t in toks if t[1] == s.start]
+            last = [t[3] for t in toks if t[1] <= s.end - 1 < t[2]]
+            assert (s.token_start, s.token_end) == (first[0], last[0])
+            assert (s.kb_id, s.source) == (None, "gazetteer")
 
 
 def test_model_variant_differs_from_gold(spark):
@@ -46,10 +84,7 @@ def test_colocated_insights_match_join_operators(spark, monkeypatch):
     equal the two-source full-outer-join operators, hardest rows in their
     returned orderBy(score, count, doc_id) order, on the detected spans
     and on degenerate inputs, in both scratch-pin modes."""
-    from pyspark.sql import functions as F
-
     from recon_spark.operators import insights as I
-    from recon_spark.operators.extraction import detect_mentions
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     both = detect_mentions(detect_mentions(docs), which="model", out_col="pred_spans")
@@ -91,7 +126,6 @@ def test_hardest_examples_colocated_plan_reads_pin(spark, monkeypatch):
     extraction kernel: the caller's materialization and the orderBy's
     sampling job do not re-run mapInArrow."""
     from recon_spark.operators import insights as I
-    from recon_spark.operators.extraction import detect_mentions_both
 
     monkeypatch.delenv("RECON_RELIABLE_SCRATCH", raising=False)
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -105,8 +139,6 @@ def test_hardest_examples_colocated_plan_reads_pin(spark, monkeypatch):
 
 
 def test_detect_mentions_both_equals_chained(spark):
-    from recon_spark.operators.extraction import detect_mentions, detect_mentions_both
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     chained = detect_mentions(
         detect_mentions(docs), which="model", out_col="pred_spans"
@@ -115,3 +147,16 @@ def test_detect_mentions_both_equals_chained(spark):
     a = {r["doc_id"]: (r["spans"], r["pred_spans"]) for r in chained.collect()}
     b = {r["doc_id"]: (r["spans"], r["pred_spans"]) for r in fused.collect()}
     assert a == b and len(a) > 0
+
+
+def test_colocated_recognizer_scores_match_join(spark):
+    """Per-row scoring of the fused pass equals the span-join scorer."""
+    from recon_spark.operators.scorer import (
+        evaluate_recognizer,
+        evaluate_recognizer_colocated,
+    )
+
+    both = detect_mentions_both(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    a = [tuple(r) for r in evaluate_recognizer(both, both).collect()]
+    b = [tuple(r) for r in evaluate_recognizer_colocated(both).collect()]
+    assert a == b and any(r[2] for r in b) and any(r[3] for r in b)

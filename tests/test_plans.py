@@ -5,7 +5,6 @@ broadcast, no Python in JVM-only paths, salted aggs two-stage."""
 from pyspark.sql import functions as F
 
 from recon_spark.operators.extraction import (
-    detect_mentions_jvm,
     extract_triples_tokens,
     mentions_long,
     detect_mentions,
@@ -17,6 +16,20 @@ from tests.conftest import SF_SMOKE
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def with_literal_spans(docs):
+    """A Python-free span column: each doc's first word as a span,
+    plus one that starts mid-word (misaligned)."""
+    span = (
+        "named_struct('text', substring_index(text, ' ', 1), 'start', {s},"
+        " 'end', length(substring_index(text, ' ', 1)), 'label', 'L',"
+        " 'token_start', CAST(NULL AS INT), 'token_end', CAST(NULL AS INT),"
+        " 'kb_id', CAST(NULL AS STRING), 'source', 'literal')"
+    )
+    return docs.withColumn(
+        "spans", F.expr(f"array({span.format(s=0)}, {span.format(s=1)})")
+    )
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):
@@ -39,11 +52,10 @@ def test_alias_join_is_broadcast(spark):
 
 def test_jvm_extraction_has_no_python_stage(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    for df in (detect_mentions_jvm(docs), extract_triples_tokens(docs)):
-        plan = plan_of(df)
-        assert "ArrowEvalPython" not in plan
-        assert "BatchEvalPython" not in plan
-        assert "MapInArrow" not in plan  # wholly JVM: codegen-able project
+    plan = plan_of(extract_triples_tokens(docs))
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "MapInArrow" not in plan  # wholly JVM: codegen-able project
 
 
 def test_salted_coverage_is_two_stage(spark):
@@ -106,10 +118,9 @@ def test_merge_corrected_join_is_broadcast(spark):
 
 def test_add_tokens_is_jvm_only(spark):
     from recon_spark.operators.validation import add_tokens
-    from recon_spark.operators.extraction import detect_mentions_jvm
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = plan_of(add_tokens(detect_mentions_jvm(docs)))
+    plan = plan_of(add_tokens(with_literal_spans(docs)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Exchange" not in plan  # tokenize + align: per-row, zero shuffle
 
@@ -131,12 +142,10 @@ def test_filter_overlaps_adds_no_shuffle(spark):
 
 
 def test_filter_overlaps_jvm_has_no_python_stage(spark):
-    from pyspark.sql import functions as F
-    from recon_spark.operators.extraction import detect_mentions_jvm
     from recon_spark.operators.validation import filter_overlaps_jvm
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = plan_of(filter_overlaps_jvm(detect_mentions_jvm(docs)))
+    plan = plan_of(filter_overlaps_jvm(with_literal_spans(docs)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "MapInArrow" not in plan and "Exchange" not in plan
 

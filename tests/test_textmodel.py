@@ -5,12 +5,14 @@ Spark-vs-DuckDB oracle parity at the smoke scale factor."""
 
 import math
 
+import duckdb
 import pytest
 
 from pyspark.sql import functions as F
 
 from recon_spark.operators.bpe import (
     EOW,
+    N_MERGES,
     bpe_apply,
     bpe_train,
     merge_fold,
@@ -115,6 +117,29 @@ def test_bpe_train_no_cached_blocks(spark):
     _, words = bpe_train(docs, n_merges=2)
     words.collect()
     assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == before
+
+
+def test_bpe_oracle_carries_dictionary_when_pairs_run_out(spark):
+    """'ab ab b' has no adjacent pairs left after two merges: the DuckDB
+    chain's later rounds must keep the merged dictionary (as bpe_train
+    stops early), not cross-join an empty merge into an empty one."""
+    from recon_spark.queries.textmodel import SQL_BPE_MERGES, SQL_BPE_TOKEN_COUNTS
+
+    text = "ab ab b"
+    docs = spark.createDataFrame([(0, text)], "doc_id long, text string")
+    merges, words = bpe_train(docs)
+    assert 0 < len(merges) < N_MERGES
+    counts: dict[str, int] = {}
+    for r in words.collect():
+        for t in r.toks:
+            counts[t] = counts.get(t, 0) + r.freq
+    assert counts == {"ab" + EOW: 2, "b" + EOW: 1}
+    with duckdb.connect() as con:  # own catalog: the shared one has views
+        con.execute(f"CREATE TABLE documents AS SELECT 0::BIGINT AS doc_id, '{text}' AS text")
+        assert dict(con.sql(SQL_BPE_TOKEN_COUNTS).fetchall()) == counts
+        assert [tuple(r[1:]) for r in con.sql(SQL_BPE_MERGES).fetchall()] == [
+            (a, b, c) for _, a, b, c in merges
+        ]
 
 
 # ---------------------------------------------------------------- LM
