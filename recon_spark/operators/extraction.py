@@ -87,12 +87,13 @@ def _scan_batch(batch, id_col, text_col, sides, spans=True) -> list:
         for par, t, tok in zip(pars, texts, toks):
             for m in rx.finditer(t):
                 surf = m.group(1)
-                start = m.start(1)
                 s_text.append(surf)
-                s_start.append(start)
                 lab = fixed.get(surf)
                 s_label.append(lab if lab is not None else ambig[surf][par])
-                s_ts.append(tok.get(start, -1))
+                if spans:
+                    start = m.start(1)
+                    s_start.append(start)
+                    s_ts.append(tok.get(start, -1))
             offsets.append(len(s_text))
         text = pa.array(s_text, pa.string())
         label = pa.array(s_label, pa.string())

@@ -13,69 +13,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from recon_spark.operators.insights import _span_keys
-
 
 def evaluate_recognizer(
-    gold: DataFrame,
-    pred: DataFrame,
-    id_col: str = "doc_id",
-    gold_spans: str = "spans",
-    pred_spans: str = "pred_spans",
-) -> DataFrame:
-    """(label, tp, fp, fn, precision, recall, f1) per label plus an
-    __ALL__ micro-average row; PRF rounded to 6 decimals."""
-    g = _span_keys(gold, id_col, gold_spans).withColumnRenamed("label", "gold_label")
-    p = (
-        _span_keys(pred, id_col, pred_spans)
-        .withColumnRenamed("label", "pred_label")
-        .withColumnRenamed("text", "pred_text")
-    )
-    j = g.join(p, ["doc_id", "start", "end"], "full_outer")
-
-    tp = (
-        j.where(F.col("gold_label") == F.col("pred_label"))
-        .groupBy(F.col("gold_label").alias("label"))
-        .agg(F.count(F.lit(1)).alias("tp"))
-    )
-    fp = (
-        j.where(
-            F.col("pred_label").isNotNull()
-            & (F.col("gold_label").isNull() | (F.col("gold_label") != F.col("pred_label")))
-        )
-        .groupBy(F.col("pred_label").alias("label"))
-        .agg(F.count(F.lit(1)).alias("fp"))
-    )
-    fn = (
-        j.where(
-            F.col("gold_label").isNotNull()
-            & (F.col("pred_label").isNull() | (F.col("gold_label") != F.col("pred_label")))
-        )
-        .groupBy(F.col("gold_label").alias("label"))
-        .agg(F.count(F.lit(1)).alias("fn"))
-    )
-    per_label = (
-        tp.join(fp, "label", "full_outer")
-        .join(fn, "label", "full_outer")
-        .select(
-            "label",
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            F.coalesce("fp", F.lit(0)).alias("fp"),
-            F.coalesce("fn", F.lit(0)).alias("fn"),
-        )
-    )
-    return _with_prf(per_label)
-
-
-def evaluate_recognizer_colocated(
     df: DataFrame, gold_spans: str = "spans", pred_spans: str = "pred_spans"
 ) -> DataFrame:
-    """evaluate_recognizer over gold and pred span arrays on the SAME row
-    (detect_mentions_both's output): no join, one explode and one
-    aggregation. A span is a hit iff the other side holds a span with
-    the same (start, end, label); gold hits are tp, gold misses fn, pred
-    misses fp — the join's counts when offsets are unique per side, as
-    maximal-munch spans are."""
+    """(label, tp, fp, fn, precision, recall, f1) per label plus an
+    __ALL__ micro-average row; PRF rounded to 6 decimals.
+
+    Gold and predicted span arrays sit on the SAME row (as
+    ``detect_mentions_both`` emits them), so scoring is one explode and
+    one aggregation, no join. A span is a hit iff the other side of its
+    row holds a span with the same (start, end, label): gold hits are tp,
+    gold misses fn, pred misses fp. Spans are unique per (start, end) on
+    each side, as maximal-munch spans are."""
 
     def tagged(spans: str, other: str, gold: str) -> str:
         return (
@@ -97,11 +47,6 @@ def evaluate_recognizer_colocated(
         F.count(F.when(~F.col("gold") & ~F.col("hit"), 1)).alias("fp"),
         F.count(F.when(F.col("gold") & ~F.col("hit"), 1)).alias("fn"),
     )
-    return _with_prf(per_label)
-
-
-def _with_prf(per_label: DataFrame) -> DataFrame:
-    """(label, tp, fp, fn) + an __ALL__ micro row -> rounded PRF."""
     overall = per_label.agg(
         F.lit("__ALL__").alias("label"),
         F.sum("tp").alias("tp"),

@@ -550,10 +550,10 @@ GROUP BY 1, 2, 3 ORDER BY n DESC, subj, pred, obj
 
 
 def q_recognizer_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from recon_spark.operators.scorer import evaluate_recognizer_colocated
+    from recon_spark.operators.scorer import evaluate_recognizer
 
     both = detect_mentions_both(_docs(spark, sf_dir))  # fused single Arrow pass
-    return evaluate_recognizer_colocated(both)
+    return evaluate_recognizer(both)
 
 
 SQL_RECOGNIZER_SCORES = f"""

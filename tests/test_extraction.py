@@ -149,14 +149,27 @@ def test_detect_mentions_both_equals_chained(spark):
     assert a == b and len(a) > 0
 
 
-def test_colocated_recognizer_scores_match_join(spark):
-    """Per-row scoring of the fused pass equals the span-join scorer."""
-    from recon_spark.operators.scorer import (
-        evaluate_recognizer,
-        evaluate_recognizer_colocated,
-    )
+def test_recognizer_scores_hand_counted(spark):
+    """evaluate_recognizer on hand-made rows: an exact match is tp, a
+    same-offset wrong label is fn for the gold label and fp for the
+    predicted one, unmatched spans are fn/fp, and rows with an empty side
+    still count the other side."""
+    from recon_spark.operators.scorer import evaluate_recognizer
+    from recon_spark.schema import SPAN_DDL
 
-    both = detect_mentions_both(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
-    a = [tuple(r) for r in evaluate_recognizer(both, both).collect()]
-    b = [tuple(r) for r in evaluate_recognizer_colocated(both).collect()]
-    assert a == b and any(r[2] for r in b) and any(r[3] for r in b)
+    def sp(start, end, label):
+        return ("w", start, end, label, None, None, None, "t")
+
+    rows = [
+        (1, [sp(0, 1, "A"), sp(2, 3, "B"), sp(4, 5, "B")], [sp(0, 1, "A"), sp(2, 3, "C")]),
+        (2, [], [sp(0, 1, "A")]),
+        (3, [sp(0, 1, "C")], []),
+    ]
+    df = spark.createDataFrame(rows, f"doc_id long, spans {SPAN_DDL}, pred_spans {SPAN_DDL}")
+    got = {r.label: (r.tp, r.fp, r.fn, r.precision, r.recall) for r in evaluate_recognizer(df).collect()}
+    assert got == {
+        "A": (1, 1, 0, 0.5, 1.0),
+        "B": (0, 0, 2, 0.0, 0.0),
+        "C": (0, 1, 1, 0.0, 0.0),
+        "__ALL__": (1, 2, 3, 0.333333, 0.25),
+    }

@@ -295,9 +295,8 @@ def test_recognizer_self_evaluation_is_perfect(spark):
     from recon_spark.operators.scorer import evaluate_recognizer
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    gold = detect_mentions(docs)
-    pred = gold.withColumn("pred_spans", F.col("spans")).select("doc_id", "pred_spans")
-    rows = evaluate_recognizer(gold, pred).collect()
+    both = detect_mentions(docs).withColumn("pred_spans", F.col("spans"))
+    rows = evaluate_recognizer(both).collect()
     assert len(rows) > 1  # per-label rows + __ALL__
     for r in rows:
         assert (r["precision"], r["recall"], r["f1"]) == (1.0, 1.0, 1.0), r
