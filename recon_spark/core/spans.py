@@ -1,9 +1,10 @@
 """Pure-Python span algorithms shared by driver-side oracles and executors.
 
-These are the per-row kernels called from Arrow-vectorized pandas UDFs.
-Keeping them as plain functions over plain tuples means: (a) identical
-semantics on driver and executors, (b) unit-testable without Spark,
-(c) no pydantic / object overhead inside UDF batches.
+They are the specs that the JVM span operators (operators/validation.py,
+operators/corrections.py) and extraction's token ids are tested
+against, and the per-row kernel of augmentation's Arrow operators
+(substitute_spans). Plain functions over plain dicts: unit-testable
+without Spark, no pydantic / object overhead inside UDF batches.
 
 Semantics mirror the reference's observable behavior:
 - overlap resolution: greedy keep-longest per overlapping chain
@@ -45,24 +46,25 @@ def _select_longest_from_chain(chain: list[Span]) -> list[Span]:
 
 def filter_overlaps(spans: list[Span]) -> list[Span]:
     """Resolve overlapping spans: keep-longest per overlapping chain,
-    output sorted by start."""
+    output sorted by (start, end). A span joins the chain when it starts
+    inside the chain's extent, so a zero-length span inside it does not
+    cut the chain in two."""
     if not spans:
         return []
     ordered = sorted(spans, key=lambda s: (s["start"], s["end"]))
     out: list[Span] = []
     chain: list[Span] = [ordered[0]]
-    chain_start, chain_end = ordered[0]["start"], ordered[0]["end"]
+    chain_end = ordered[0]["end"]
     for cur in ordered[1:]:
-        if min(cur["end"], chain_end) - max(cur["start"], chain_start) > 0:
+        if cur["start"] < chain_end:
             chain.append(cur)
-            chain_start = min(chain_start, cur["start"])
             chain_end = max(chain_end, cur["end"])
         else:
             out.extend(_select_longest_from_chain(chain))
             chain = [cur]
-            chain_start, chain_end = cur["start"], cur["end"]
+            chain_end = cur["end"]
     out.extend(_select_longest_from_chain(chain))
-    return sorted(out, key=lambda s: s["start"])
+    return sorted(out, key=lambda s: (s["start"], s["end"]))
 
 
 DEFAULT_STRIP_CHARS = (".", "!", "?", "-", ":", " ")

@@ -342,16 +342,15 @@ def from_hf_dataset(
     tokens_col: str = "tokens",
     tags_col: str = "ner_tags",
     labels: list[str] | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Load a Hugging-Face-style token-classification table into the
     examples shape (reference Dataset.from_hf_dataset,
     recon/dataset.py:494-526): rows of (tokens array<string>,
     tags array<string> IOB2 — or array<int> + a ClassLabel ``labels``
     list, the HF datasets convention) become (text, tokens, spans)
-    with character offsets re-derived from the tokens and spans
-    reconstructed by the pure-JVM IOB fold
-    (operators/preprocess.py:iob_to_spans).
+    with character offsets re-derived from the tokens (single-space
+    joined text, the reference's convention) and spans reconstructed
+    from the IOB tags.
 
     ``data`` may be a Spark DataFrame, a pyarrow Table, a pandas
     DataFrame, or a parquet path (what ``datasets.Dataset.to_parquet``
@@ -359,21 +358,9 @@ def from_hf_dataset(
     arrow/pandas inputs go through createDataFrame and are for
     annotation-tool-sized data).
 
-    Two engines, asserted equal in tests (the extraction-operator
-    pattern — extraction.py keeps a JVM fold as the spec for its
-    mapInArrow hot path):
-
-    - ``engine='arrow'`` (default): one linear Arrow-batched kernel
-      builds text, token offsets, and IOB spans as flat arrays + list
-      offsets per batch. This is the ingest path for a 10^9-row HF
-      export on shared storage: map-only, no shuffle, vectorized
-      transport.
-    - ``engine='jvm'``: the original pure-JVM higher-order folds.
-      Kept as the cross-engine-auditable SPEC, not the hot path: the
-      ``aggregate``/``array_append`` accumulator is O(tokens^2) per row
-      and runs interpreted (no codegen for struct-array lambdas) —
-      measured ~25x slower than the Arrow kernel at sf0.1, which is why
-      it is no longer the default.
+    One linear Arrow-batched kernel (_hf_ingest_arrow) builds text,
+    token offsets, and IOB spans as flat arrays + list offsets per
+    batch: map-only, no shuffle, vectorized transport.
     """
     if isinstance(data, DataFrame):
         df = data
@@ -406,9 +393,8 @@ def from_hf_dataset(
             "appended output columns (text, tokens, spans) — rename them "
             "or pass them as tokens_col/tags_col"
         )
-    # null token ELEMENTS (HF exports contain them) become '' in both
-    # engines: a None would crash the Arrow kernel's len() and NULL-out
-    # the JVM fold's offset accumulator
+    # null token ELEMENTS (HF exports contain them) become '': a None
+    # would crash the kernel's len()
     toks = F.transform(F.col(tokens_col), lambda t: F.coalesce(t, F.lit("")))
     if labels is not None:
         # HF ClassLabel ints -> IOB tag strings via a literal array
@@ -420,61 +406,20 @@ def from_hf_dataset(
     else:
         tags = F.col(tags_col)
 
-    if engine == "arrow":
-        keep = [c for c in df.columns if c not in (tokens_col, tags_col)]
-        # rename inputs out of the way: the kernel APPENDS text/tokens/spans,
-        # so an input literally named "tokens" would collide
-        base = df.withColumn("__tags", tags).select(
-            *keep, toks.alias("__toks"), "__tags"
-        )
-        return _hf_ingest_arrow(base, "__toks", keep)
-    if engine != "jvm":
-        raise ValueError(f"from_hf_dataset: engine must be 'arrow' or 'jvm', got {engine!r}")
-
-    # char offsets re-derived from the tokens (single-space joined text,
-    # the reference's convention): one JVM fold, no Python
-    offsets = """
-    aggregate({toks}, named_struct('pos', 0,
-        'out', CAST(array() AS ARRAY<STRUCT<text: STRING, start: INT, end: INT, id: INT>>)),
-      (acc, t) -> named_struct(
-        'pos', acc.pos + length(t) + 1,
-        'out', array_append(acc.out, named_struct(
-          'text', t, 'start', acc.pos,
-          'end', acc.pos + length(t), 'id', size(acc.out)))),
-      acc -> acc.out)
-    """
-    from recon_spark.operators.preprocess import iob_to_spans
-
-    out = (
-        df.withColumn("__tags", tags)
-        .withColumn("__toks", toks)  # null elements already coalesced to ''
-        .withColumn("text", F.array_join(F.col("__toks"), " "))
-        .withColumn("tokens", F.expr(offsets.format(toks="__toks")))
-        .withColumn("spans", iob_to_spans("__tags", "tokens"))
-    )
-    # materialize span surfaces from the offsets (the span-text
-    # validator, same fill as read_jsonl)
-    fill = """
-    transform(spans, s -> named_struct(
-        'text', coalesce(s.text, substring(text, s.start + 1, s.end - s.start)),
-        'start', s.start, 'end', s.end, 'label', s.label,
-        'token_start', s.token_start, 'token_end', s.token_end,
-        'kb_id', s.kb_id, 'source', s.source))
-    """
     keep = [c for c in df.columns if c not in (tokens_col, tags_col)]
-    return out.withColumn("spans", F.expr(fill)).select(
-        *keep, "text", "tokens", "spans"
-    )
+    # rename inputs out of the way: the kernel APPENDS text/tokens/spans,
+    # so an input literally named "tokens" would collide
+    base = df.withColumn("__tags", tags).select(*keep, toks.alias("__toks"), "__tags")
+    return _hf_ingest_arrow(base, "__toks", keep)
 
 
 def _hf_ingest_arrow(base: DataFrame, tokens_col: str, keep: list[str]) -> DataFrame:
     """from_hf_dataset's linear Arrow kernel: per batch, one pass over
     (tokens, __tags) builds text, token char offsets, and IOB2 spans as
     flat arrays + list offsets (no per-row Python objects beyond the
-    token lists themselves). Semantics are bit-identical to the JVM
-    folds in from_hf_dataset(engine='jvm') — including the IOB2 repair
-    (an I- with a new label starts a fresh span) and treating any
-    non-B/I tag as O — and tests assert the two engines equal."""
+    token lists themselves). IOB2 repair: an I- with a new label, or
+    after O, starts a fresh span; any non-B/I tag (O, null, malformed)
+    closes the open span."""
     import pyarrow as pa
 
     out_schema = T.StructType(
@@ -531,7 +476,7 @@ def _hf_ingest_arrow(base: DataFrame, tokens_col: str, keep: list[str]) -> DataF
 
                 o, lab = -1, None
                 n = len(tgs)
-                for i in range(1, n + 2):  # n+1 = the JVM fold's flush step
+                for i in range(1, n + 2):  # step n+1 flushes the open span
                     tag = tgs[i - 1] if i <= n else None
                     if tag is not None and tag.startswith("B-"):
                         if o >= 0:

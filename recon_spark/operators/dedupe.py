@@ -83,7 +83,7 @@ def _wcodes_expr(text_col: str, hash_mode: str = "wcode") -> str:
 
 
 def _py_token_codes(hash_mode: str):
-    """The numpy kernels' replica of _token_code_sql: ws -> int64 array.
+    """The numpy kernel's replica of _token_code_sql: ws -> int64 array.
     Asserted bit-equal to the JVM expression in tests."""
     import numpy as np
 
@@ -207,25 +207,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signature_jvm(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_mode: str = "wcode",
-) -> DataFrame:
-    """(id, minhash ARRAY<BIGINT>[16]) — pure JVM reference implementation
-    (16 interpreted HOF passes per row; kept for cross-checking the
-    vectorized path in tests)."""
-    sh = with_shingles(df, text_col, hash_mode=hash_mode)
-    mins = ", ".join(
-        f"array_min(transform(shingles, h -> ({a}L * h + {b}L) % {P}))"
-        for a, b in zip(PERM_A, PERM_B)
-    )
-    return sh.where(F.size("shingles") > 0).select(
-        F.col(id_col).alias("id"), F.expr(f"array({mins})").alias("minhash")
-    )
-
-
 def minhash_signature(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -233,9 +214,10 @@ def minhash_signature(
     hash_mode: str = "wcode",
 ) -> DataFrame:
     """(id, minhash ARRAY<BIGINT>[16]) — Arrow-vectorized numpy kernel
-    (exact same integer arithmetic as the JVM/oracle spec; int64-safe
-    since all operands < 2^31 and products < 2^62). Per-row, shuffle-free;
-    ~50x faster than 16 interpreted higher-order passes."""
+    over the hash spec in the module docstring (the DuckDB oracle's
+    integer arithmetic; int64-safe since all operands < 2^31 and
+    products < 2^62). Per-row, shuffle-free; ~50x faster than 16
+    interpreted higher-order passes."""
     import numpy as np
 
     a_perm = PERM_A
@@ -330,7 +312,9 @@ def connected_components(
     (near-dup clusters are tiny, so 2-3 rounds). Each round is one
     shuffle on id; the frontier check stops early; AQE handles the
     shrinking join sizes. Both paths produce identical labels
-    (component = min reachable id)."""
+    (component = min reachable id): a component whose diameter needs
+    more than ``max_iter`` rounds raises ValueError instead of returning
+    partial labels."""
     # single action: fetch threshold+1 rows; a full count would run the
     # (expensive) candidate-generation job twice
     from pyspark.sql.types import StructField, StructType
@@ -403,6 +387,13 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        labels.unpersist()
+        edges.unpersist()
+        raise ValueError(
+            f"connected_components: label propagation did not converge "
+            f"within {max_iter} rounds"
+        )
     edges.unpersist()
     return labels.orderBy("id")
 
@@ -431,11 +422,8 @@ def simhash32(
 ) -> DataFrame:
     """(id, simhash BIGINT): 32-bit SimHash over shingle multiset.
     Bit j is 1 iff sum over shingles of (2*bit_j(g32) - 1) > 0, where
-    g32 = (h * 2654435761) % 2^32. Per-row, shuffle-free, pure JVM.
-
-    Default path: measured at parity with the numpy variant at sf0.1
-    (interpreted-fold cost ~ per-row numpy overhead) and bit-identical
-    to the DuckDB oracle by construction."""
+    g32 = (h * 2654435761) % 2^32. Per-row, shuffle-free, pure JVM;
+    bit-identical to the DuckDB oracle by construction."""
     sh = with_shingles(df, text_col, hash_mode=hash_mode).withColumn(
         "__g", F.expr("transform(shingles, h -> (h * 2654435761L) % 4294967296L)")
     )
@@ -444,50 +432,6 @@ def simhash32(
         for j in range(32)
     )
     return sh.select(F.col(id_col).alias("id"), F.expr(f"({bits})").alias("simhash"))
-
-
-def simhash32_vectorized(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_mode: str = "wcode",
-) -> DataFrame:
-    """simhash32 — Arrow-vectorized numpy kernel: per row, unpack each
-    shingle's 32 g32 bits into a (n_shingles x 32) 0/1 matrix, column
-    sums vs n/2 give the bit votes. Exact same integer spec as
-    simhash32 (asserted bit-equal in tests). At sf0.1 it only matches
-    the JVM fold (row-at-a-time numpy setup dominates); it wins when
-    docs are long (shingle count >> numpy per-row overhead)."""
-    import numpy as np
-
-    p = P
-    mode = hash_mode
-    _token_code_sql(mode)  # validate eagerly
-
-    @F.pandas_udf("long")
-    def _simhash(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        jbits = np.arange(32, dtype=np.uint64)
-        weights = (np.int64(1) << np.arange(32, dtype=np.int64))
-        codes = _py_token_codes(mode)
-
-        def one(text: str):
-            ws = text.split(" ")
-            if len(ws) < 3:
-                return 0  # empty shingle set: every vote sum is 0, no bit set
-            wc = codes(ws)
-            h = ((wc[:-2] * 31 + wc[1:-1]) % p * 31 + wc[2:]) % p
-            g = (h.astype(np.uint64) * np.uint64(2654435761)) % np.uint64(1 << 32)
-            ones = ((g[:, None] >> jbits) & np.uint64(1)).astype(np.int64)
-            # bit j set iff (#ones - #zeros) > 0  <=>  2*sum > n
-            votes = 2 * ones.sum(axis=0) > len(g)
-            return int((votes * weights).sum())
-
-        for texts in batches:
-            yield pd.Series([one(t) for t in texts], dtype="int64")
-
-    return df.select(
-        F.col(id_col).alias("id"), _simhash(F.col(text_col)).alias("simhash")
-    )
 
 
 def simhash_neardup_pairs(

@@ -213,8 +213,7 @@ def mentions_long(df_with_spans: DataFrame, id_col: str = "doc_id") -> DataFrame
 
     The span array is narrowed to a 2-field struct BEFORE the explode:
     generating 14M rows from 8-field nested structs is memory-bandwidth
-    bound (measured 2x the CPU of the narrowed form at sf0.1 x100).
-    Offset-carrying explosions live in insights._span_keys."""
+    bound (measured 2x the CPU of the narrowed form at sf0.1 x100)."""
     return (
         df_with_spans.select(
             id_col,

@@ -5,9 +5,10 @@ get_label_disparities (:47-71), top_label_disparities (:74-110),
 top_prediction_errors (:113-236), get_hardest_examples (:239-290),
 get_annotation_labels (:293-315).
 
-Shapes: self-join / intersect for disparities; full-outer span join +
-CASE classification for prediction errors; join + per-doc agg + global
-min-max for hardest examples. All sort-descending outputs carry
+Shapes: self-join / intersect for disparities; per-row span-array
+matching for prediction errors and hardest examples (gold and pred
+arrays on one row, as detect_mentions_both emits them), then a small
+aggregate or a global min-max. All sort-descending outputs carry
 deterministic tiebreakers (the reference relies on Python stable sort;
 Spark sorts are not stable across partitions — SURVEY.md §7.3.3).
 """
@@ -103,66 +104,19 @@ def most_common_label_corrections(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _span_keys(df_with_spans: DataFrame, id_col: str, spans_col: str) -> DataFrame:
-    return df_with_spans.select(
-        F.col(id_col).alias("doc_id"), F.explode(spans_col).alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.start").alias("start"),
-        F.col("s.end").alias("end"),
-        F.col("s.label").alias("label"),
-        F.col("s.text").alias("text"),
-    )
-
-
-def prediction_errors(
-    gold: DataFrame,
-    pred: DataFrame,
-    id_col: str = "doc_id",
-    gold_spans: str = "spans",
-    pred_spans: str = "pred_spans",
-) -> DataFrame:
-    """Classify model errors by full-outer span join on (doc, start, end):
-    same offsets + different label → label confusion; pred-only → false
-    positive (true=NOT_LABELED); gold-only → false negative
-    (pred=NOT_LABELED). Aggregated to (text, true_label, pred_label, n)
-    sorted desc — reference top_prediction_errors semantics (its `seen`
-    set dedupe of FN-after-confusion is exactly what the single join row
-    gives for free)."""
-    g = _span_keys(gold, id_col, gold_spans).withColumnRenamed("label", "gold_label")
-    p = (
-        _span_keys(pred, id_col, pred_spans)
-        .withColumnRenamed("label", "pred_label")
-        .withColumnRenamed("text", "pred_text")
-    )
-    j = g.join(p, ["doc_id", "start", "end"], "full_outer")
-    errors = j.where(
-        F.col("gold_label").isNull()
-        | F.col("pred_label").isNull()
-        | (F.col("gold_label") != F.col("pred_label"))
-    ).select(
-        F.coalesce("text", "pred_text").alias("text"),
-        F.coalesce("gold_label", F.lit(NOT_LABELED)).alias("true_label"),
-        F.coalesce("pred_label", F.lit(NOT_LABELED)).alias("pred_label"),
-    )
-    return (
-        errors.groupBy("text", "true_label", "pred_label")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "text", "true_label", "pred_label")
-    )
-
-
 def prediction_errors_colocated(
     df: DataFrame,
     gold_spans: str = "spans",
     pred_spans: str = "pred_spans",
 ) -> DataFrame:
-    """prediction_errors when gold and pred span arrays share a row
-    (the single-pipeline case): the (start,end) alignment is a per-row
-    array comparison — zero explode, zero join, zero shuffle before the
-    final small aggregate. Identical classification to the full-outer
-    join (each (doc,start,end) occurs at most once per side), asserted
-    against the same oracle."""
+    """Classify model errors, with gold and pred span arrays on the same
+    row, by matching spans on (start, end): same offsets + different
+    label → label confusion; pred-only → false positive
+    (true=NOT_LABELED); gold-only → false negative (pred=NOT_LABELED).
+    Aggregated to (text, true_label, pred_label, n) sorted desc —
+    reference top_prediction_errors semantics. The alignment is a
+    per-row array comparison: zero explode, zero join, zero shuffle
+    before the final small aggregate."""
     err_ddl = "ARRAY<STRUCT<text: STRING, true_label: STRING, pred_label: STRING>>"
     errs = f"""
     filter(concat(
@@ -199,10 +153,12 @@ def hardest_examples_colocated(
     gold_spans: str = "spans",
     pred_spans: str = "pred_spans",
 ) -> DataFrame:
-    """hardest_examples with co-located span arrays: per-row tp/fp/fn
-    via array predicates (no explode, no join), then the same global
-    normalization. Empty-span docs are already rows, so no all-docs
-    re-join is needed.
+    """Per-document difficulty, with gold and pred span arrays on the
+    same row: PRF fscore over exact (start, end, label) matches, score
+    1.0 when either side has no spans, minus errors/max_errors, min-max
+    normalized, sorted ascending (hardest first) with doc_id tiebreak —
+    reference get_hardest_examples. tp/fp/fn come from per-row array
+    predicates (no explode, no join); empty-span docs are rows already.
 
     The per-document score frame (doc_id, count, fscore) is pinned with
     operators.scratch.scratch(), and the returned plan reads that pin.
@@ -259,93 +215,3 @@ def hardest_examples_colocated(
     return scored.select(
         "doc_id", "count", score.alias("score")
     ).orderBy("score", "count", "doc_id")
-
-
-def hardest_examples(
-    docs: DataFrame,
-    gold: DataFrame,
-    pred: DataFrame,
-    id_col: str = "doc_id",
-    gold_spans: str = "spans",
-    pred_spans: str = "pred_spans",
-) -> DataFrame:
-    """Per-document difficulty: PRF fscore over exact (start,end,label)
-    matches, score 1.0 when either side has no spans, minus
-    errors/max_errors, min-max normalized, sorted ascending (hardest
-    first) with doc_id tiebreak — reference get_hardest_examples."""
-    g = _span_keys(gold, id_col, gold_spans).withColumnRenamed("label", "gold_label")
-    p = (
-        _span_keys(pred, id_col, pred_spans)
-        .withColumnRenamed("label", "pred_label")
-        .withColumnRenamed("text", "pred_text")
-    )
-    j = g.join(p, ["doc_id", "start", "end"], "full_outer")
-    per_doc = j.groupBy("doc_id").agg(
-        F.sum(
-            (F.col("gold_label") == F.col("pred_label")).cast("long")
-        ).alias("tp"),
-        F.sum(
-            (
-                F.col("pred_label").isNotNull()
-                & (
-                    F.col("gold_label").isNull()
-                    | (F.col("gold_label") != F.col("pred_label"))
-                )
-            ).cast("long")
-        ).alias("fp"),
-        F.sum(
-            (
-                F.col("gold_label").isNotNull()
-                & (
-                    F.col("pred_label").isNull()
-                    | (F.col("gold_label") != F.col("pred_label"))
-                )
-            ).cast("long")
-        ).alias("fn"),
-        F.max((F.col("gold_label").isNotNull()).cast("int")).alias("has_gold"),
-        F.max((F.col("pred_label").isNotNull()).cast("int")).alias("has_pred"),
-    )
-    # docs with zero mentions on both sides never reach the join output
-    all_docs = docs.select(F.col(id_col).alias("doc_id"))
-    per_doc = (
-        all_docs.join(per_doc, "doc_id", "left")
-        .fillna(0, subset=["tp", "fp", "fn", "has_gold", "has_pred"])
-    )
-    scored = per_doc.select(
-        "doc_id",
-        (F.col("fp") + F.col("fn")).alias("count"),
-        F.when(
-            (F.col("has_gold") == 1) & (F.col("has_pred") == 1),
-            F.when(
-                (2 * F.col("tp") + F.col("fp") + F.col("fn")) > 0,
-                2.0 * F.col("tp") / (2 * F.col("tp") + F.col("fp") + F.col("fn")),
-            ).otherwise(0.0),
-        )
-        .otherwise(1.0)
-        .alias("fscore"),
-    )
-    glob = scored.agg(F.max("count").alias("max_count"))
-    adj = scored.crossJoin(F.broadcast(glob)).select(
-        "doc_id",
-        "count",
-        (
-            F.col("fscore")
-            - F.col("count") / F.when(F.col("max_count") > 0, F.col("max_count")).otherwise(1)
-        ).alias("raw_score"),
-    )
-    rng = adj.agg(F.min("raw_score").alias("lo"), F.max("raw_score").alias("hi"))
-    return (
-        adj.crossJoin(F.broadcast(rng))
-        .select(
-            "doc_id",
-            "count",
-            F.round(
-                F.when(
-                    F.col("hi") > F.col("lo"),
-                    (F.col("raw_score") - F.col("lo")) / (F.col("hi") - F.col("lo")),
-                ).otherwise(0.0),
-                6,
-            ).alias("score"),
-        )
-        .orderBy("score", "count", "doc_id")
-    )

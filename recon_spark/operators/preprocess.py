@@ -48,63 +48,3 @@ def merge_corrected(
             f"__corr_{c}"
         )
     return out
-
-
-def iob_to_spans(tags_col: str = "tags", tokens_col: str = "tokens") -> F.Column:
-    """Reconstruct spans from IOB tag + token arrays, pure JVM
-    (Dataset.from_hf_dataset's tag->span re-derivation,
-    /root/reference/recon/dataset.py:494-526). tokens: array<struct<
-    text,start,end,id>>, tags: array<string> like ['B-ORG','I-ORG','O'].
-
-    Returns a column of array<struct<text,start,end,label,...>> built by
-    a single aggregate fold over the tag indices."""
-    span_ddl = (
-        "ARRAY<STRUCT<text: STRING, start: INT, end: INT, label: STRING, "
-        "token_start: INT, token_end: INT, kb_id: STRING, source: STRING>>"
-    )
-    # state: (open_start_idx, open_label, spans); B starts, I extends when
-    # label matches (else starts fresh, per IOB2 repair), O closes
-    # closing at 1-based position i: the span covers 1-based tokens
-    # [acc.o + 1 .. i - 1] (acc.o is the 0-based first-token index)
-    mk = (
-        "named_struct('text', CAST(NULL AS STRING), "
-        "'start', element_at({t}, acc.o + 1).start, "
-        "'end', element_at({t}, i - 1).end, "
-        "'label', acc.lab, "
-        "'token_start', acc.o, 'token_end', i - 2, "
-        "'kb_id', CAST(NULL AS STRING), 'source', 'iob')"
-    ).format(t=tokens_col)
-    expr = f"""
-    aggregate(
-      sequence(1, size({tags_col}) + 1),
-      named_struct('o', -1, 'lab', CAST(NULL AS STRING),
-                   'sp', CAST(array() AS {span_ddl})),
-      (acc, i) -> CASE
-        WHEN i > size({tags_col}) THEN
-          CASE WHEN acc.o >= 0
-               THEN named_struct('o', -1, 'lab', CAST(NULL AS STRING),
-                                 'sp', array_append(acc.sp, {mk}))
-               ELSE acc END
-        WHEN startswith(element_at({tags_col}, i), 'B-') THEN
-          named_struct('o', i - 1, 'lab', substring(element_at({tags_col}, i), 3),
-                       'sp', CASE WHEN acc.o >= 0
-                                  THEN array_append(acc.sp, {mk})
-                                  ELSE acc.sp END)
-        WHEN startswith(element_at({tags_col}, i), 'I-')
-             AND acc.o >= 0
-             AND substring(element_at({tags_col}, i), 3) = acc.lab THEN acc
-        WHEN startswith(element_at({tags_col}, i), 'I-') THEN
-          named_struct('o', i - 1, 'lab', substring(element_at({tags_col}, i), 3),
-                       'sp', CASE WHEN acc.o >= 0
-                                  THEN array_append(acc.sp, {mk})
-                                  ELSE acc.sp END)
-        ELSE
-          CASE WHEN acc.o >= 0
-               THEN named_struct('o', -1, 'lab', CAST(NULL AS STRING),
-                                 'sp', array_append(acc.sp, {mk}))
-               ELSE acc END
-      END,
-      acc -> acc.sp
-    )
-    """
-    return F.expr(expr)

@@ -8,8 +8,10 @@ Scale notes: brute force is O(Q·N·d) with the query side broadcast —
 right answer when Q is small (dedupe against a blocklist, eval probes).
 The LSH path bounds the candidate set per query; at 100 TB the bucketed
 join shuffles only (signature, id) pairs, and signatures are computed
-per-row with zero shuffle. All dot products run as JVM higher-order
-aggregates over the zipped arrays (no Python).
+per-row with zero shuffle. The exact pair scan (cosine_neardup_pairs)
+and the k-means assignment run as JVM higher-order aggregates over the
+zipped arrays; top-k, LSH signatures and candidate verification run as
+Arrow-batched numpy kernels.
 """
 
 from __future__ import annotations
@@ -46,47 +48,17 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector (self excluded):
-    (query_id, neighbor_id, cos, rank). Query side is broadcast; ranking
-    by unrounded cosine with neighbor-id tiebreak, cosine rounded for
-    output."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    dot = _DOT.format(a="qv", b="nv")
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            F.expr(f"{dot} / ({_NORM.format(a='qv')} * {_NORM.format(a='nv')})"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
-        .orderBy("query_id", "rank")
-    )
+    """Exact top-k cosine neighbors for each query vector (self
+    excluded): (query_id, neighbor_id, cos, rank), ranked by unrounded
+    cosine with neighbor-id tiebreak, cosine rounded for output.
 
-
-def cosine_topk_vectorized(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """cosine_topk as two-stage top-k: the query matrix is collected
-    (Q x d — queries are few by contract) and broadcast; each Arrow
-    batch computes a (batch x Q) einsum and emits only its LOCAL top-k
-    rows per query; a final window ranks the union (Q * k * n_batches
-    rows, tiny). Exact: global top-k of per-batch top-ks = top-k, with
-    the same (cos DESC, neighbor_id) tie-break. ~5x the interpreted
-    crossJoin+fold plan, same output (asserted equal in tests); at
-    scale the window input no longer grows with N."""
+    Two-stage top-k: the query matrix is collected (Q x d — queries are
+    few by contract) and broadcast; each Arrow batch computes a
+    (batch x Q) einsum and emits only its LOCAL top-k rows per query; a
+    final window ranks the union (Q * k * n_batches rows, tiny). Exact:
+    global top-k of per-batch top-ks = top-k, with the same
+    (cos DESC, neighbor_id) tie-break. ~5x an interpreted crossJoin +
+    fold plan; the window input does not grow with N."""
     import heapq
 
     import numpy as np
@@ -174,29 +146,6 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def with_lsh_signature_jvm(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    out_col: str = "lsh_sig",
-) -> DataFrame:
-    """Random-hyperplane sign signature as a BIGINT (per-row, no shuffle).
-
-    Pure-JVM reference implementation: n_planes interpreted
-    ``aggregate(zip_with(...))`` folds per row. Kept for cross-checking
-    the vectorized path in tests; use ``with_lsh_signature`` on hot
-    paths (~10x faster — the folds were the slowest headline stage)."""
-    planes = hyperplanes(dim, n_planes, seed)
-    bits = []
-    for j, p in enumerate(planes):
-        arr = "array(" + ", ".join(f"{x}D" for x in p) + ")"
-        dot = _DOT.format(a=vec_col, b=arr)
-        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << j}L ELSE 0L END)")
-    return df.withColumn(out_col, F.expr(" + ".join(bits)))
-
-
 def with_lsh_signature(
     df: DataFrame,
     dim: int,
@@ -205,11 +154,10 @@ def with_lsh_signature(
     vec_col: str = "embedding",
     out_col: str = "lsh_sig",
 ) -> DataFrame:
-    """Random-hyperplane sign signature as a BIGINT — Arrow-vectorized
-    numpy kernel (one (batch x dim) @ (dim x n_planes) matmul per Arrow
-    batch). Same bit spec as ``with_lsh_signature_jvm`` (bit j set iff
-    dot(vec, plane_j) > 0 in float64) and asserted bit-equal in tests;
-    per-row, shuffle-free."""
+    """Random-hyperplane sign signature as a BIGINT: bit j set iff
+    dot(vec, plane_j) > 0 in float64. Arrow-vectorized numpy kernel (one
+    (batch x dim) @ (dim x n_planes) matmul per Arrow batch); per-row,
+    shuffle-free."""
     import numpy as np
 
     planes = hyperplanes(dim, n_planes, seed)
@@ -577,86 +525,3 @@ def ivf_neardup_pairs(
         .distinct()
     )
     return _verify_pairs(cand, vectors, threshold, id_col, vec_col, vectorized_verify)
-
-
-def cosine_neardup_pairs_blas(
-    vectors: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_shards: int = 1,
-    max_collect_rows: int = 20_000_000,
-) -> DataFrame:
-    """Exact all-pairs cosine via blocked BLAS: the right side is
-    collected, L2-normalized, and broadcast in `n_shards` pieces; each
-    Arrow batch of left rows computes a (batch x shard) matmul per
-    shard, and the shard outputs union. ~40x the interpreted
-    zip_with/aggregate fold. Values can differ from the fold path in
-    the last ulp (summation order), so the fold path
-    (cosine_neardup_pairs) remains the oracle-pinned exact baseline;
-    this is the throughput path, asserted equal after round(6) in
-    tests (including the sharded path).
-
-    Sharding bounds driver + executor peak memory to N/n_shards vectors
-    per broadcast (the driver drops its local copy after each
-    broadcast; executors fetch a shard when its union branch runs).
-    `max_collect_rows` guards the collect the same way
-    connected_components guards its driver union-find: past the bound
-    the exact path raises and points at the candidate-based
-    lsh/ivf_neardup_pairs, which never materialize the table anywhere."""
-    import numpy as np
-
-    spark = vectors.sparkSession
-    n = vectors.count()
-    if n > max_collect_rows:
-        raise ValueError(
-            f"cosine_neardup_pairs_blas: {n} vectors exceeds "
-            f"max_collect_rows={max_collect_rows}; exact all-pairs is a "
-            "collect-and-broadcast path. Use lsh_neardup_pairs / "
-            "ivf_neardup_pairs (candidate generation + exact verify) at "
-            "this scale, or raise n_shards and max_collect_rows "
-            "explicitly."
-        )
-
-    def _shard_gen(b_ids, b_mat):
-        def _gen(batches):
-            all_ids, all_mat = b_ids.value, b_mat.value
-            for pdf in batches:
-                out_a, out_b, out_c = [], [], []
-                bids = pdf[id_col].to_numpy(dtype=np.int64)
-                bmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                if len(bmat):
-                    bmat /= np.linalg.norm(bmat, axis=1, keepdims=True)
-                    sims = bmat @ all_mat.T  # (batch, shard)
-                    for i in range(len(bids)):
-                        mask = (sims[i] >= threshold) & (all_ids > bids[i])
-                        js = np.nonzero(mask)[0]
-                        out_a.extend([int(bids[i])] * len(js))
-                        out_b.extend(all_ids[js].tolist())
-                        out_c.extend(_round_half_away(sims[i][js]).tolist())
-                yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cos": out_c})
-
-        return _gen
-
-    left = vectors.select(id_col, vec_col)
-    outs = []
-    for s in range(n_shards):
-        shard = left if n_shards == 1 else left.where(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == s
-        )
-        rows = shard.collect()
-        if not rows:  # an unoccupied hash bucket contributes no pairs
-            continue
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_mat = spark.sparkContext.broadcast(mat)
-        del rows, ids, mat  # driver holds one shard at a time
-        outs.append(left.mapInPandas(_shard_gen(b_ids, b_mat), "id_a long, id_b long, cos double"))
-    if not outs:
-        return spark.createDataFrame([], "id_a long, id_b long, cos double")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("id_a", "id_b")

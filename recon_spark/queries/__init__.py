@@ -35,100 +35,3 @@ ORACLES = {
     **CORE_ORACLES, **PIPELINE_ORACLES, **EXTRA_ORACLES, **GRAPH_ORACLES,
     **REASONING_ORACLES, **TEXTMODEL_ORACLES,
 }
-
-# Driver-sampling exposure: the correctness driver samples ~50 queries per
-# round, commonly from the front of the dict. As of round 4 every query in
-# the registry has a green driver row (r1∪r2∪r3∪r4, including the one
-# historical red, facts_history). The front now holds the round-5
-# additions (never yet driver-sampled) plus the r5-CHANGED queries whose
-# implementations moved this round: the PSL pair (now the full 9.5k-rule
-# list + new host classes), the WARC pair (extraction rerouted through
-# html_to_text_v2, staging gained duplicate records), and the bucketed
-# continuous sessionizer.
-_NEVER_DRIVER_SAMPLED = [
-    "sparql_subquery",
-    "sparql_sum_avg",
-    "sparql_zero_or_more",
-    "sparql_inverse_path",
-    "sparql_exists",
-    "sparql_not_exists",
-    "sparql_seq_path",
-    "sparql_alt_path",
-    "sparql_union",
-    "sparql_minus",
-    "sparql_bind",
-    "lm_perplexity_trigram",
-    "lm_perplexity",
-    "lm_quality_gate",
-    "bpe_merges",
-    "bpe_token_counts",
-    "bpe_doc_tokens",
-    "stream_entailment",
-    "kg_sameas_rewrite",
-    "owl_entailment",
-    "rdfs_entailment",
-    "rdfs_types",
-    "shape_violations",
-    "rdfs_entail_delta",
-    "jsonld_extract",
-    "image_captions",
-    "page_meta",
-    "seq_packing",
-    "seq_packing_stats",
-    "seq_packing_text",
-    "sparql_construct",
-    "sparql_graph_provenance",
-    "sparql_path_closure",
-    "sparql_values_lookup",
-    "sparql_ask",
-    "sparql_describe",
-    "rdf_ntriples_roundtrip",
-    "rdf_nquads_provenance",
-    "rdf_escape_gauntlet",
-    "video_caption_align",
-    "warc_media_inventory",
-    "video_keyframe_sample",
-    "video_scene_cuts",
-    "multimodal_decode_video",
-    "audio_chunks",
-    "audio_flac_tags",
-    "audio_id3_tags",
-    "audio_fingerprint_dedup",
-    "audio_quality_gate",
-    "warc_media_triage",
-    "multimodal_decode_ogg",
-    "multimodal_probe",
-    "multimodal_decode_flac",
-    "sparql_star",
-    "sparql_path",
-    "sparql_optional_agg",
-    "anchor_text_aliases",
-    "wat_roundtrip",
-    "triples_mined_aliases",
-    "multimodal_decode_jpeg_prog",
-    "host_link_graph",
-    "host_pagerank",
-    "robots_gate",
-    "sitemap_coverage",
-    "cdx_index",
-    "frontier_plan",
-    "wet_roundtrip",
-    "multimodal_decode_g711",
-    "multimodal_gif_frames",
-    "warc_media_tolerant",
-    "multimodal_decode_jpeg", "warc_media_decode",
-    "multimodal_decode_png", "multimodal_decode_gif", "multimodal_decode_tiff",
-    "warc_real_html", "curation_funnel_warc",
-    "reg_domain_psl", "domain_stats_psl",
-    "warc_ingest", "warc_to_triples",
-    "stream_sessions_continuous",
-]
-
-
-def _fronted(d: dict) -> dict:
-    front = {k: d[k] for k in _NEVER_DRIVER_SAMPLED if k in d}
-    return {**front, **{k: v for k, v in d.items() if k not in front}}
-
-
-QUERIES = _fronted(QUERIES)
-ORACLES = _fronted(ORACLES)

@@ -285,8 +285,7 @@ FROM ranked WHERE rk = 1 AND n_labels > 1 ORDER BY annotation
 
 def q_prediction_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gold and pred arrays co-located on one row: zero-shuffle error
-    # classification (join-based I.prediction_errors covers the
-    # two-source case and is asserted equal in tests)
+    # classification
     docs = _docs(spark, sf_dir)
     both = detect_mentions_both(docs)  # fused single Arrow pass
     return I.prediction_errors_colocated(both)

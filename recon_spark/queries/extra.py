@@ -36,7 +36,7 @@ from recon_spark.gazetteer import (
 )
 from recon_spark.operators import stats as S
 from recon_spark.operators.augmentation import ent_label_sub
-from recon_spark.operators.corrections import search, split_sentences_jvm, strip_annotations
+from recon_spark.operators.corrections import search, split_sentences, strip_annotations
 from recon_spark.operators.dedupe import connected_components, minhash_lsh_candidates
 from recon_spark.operators.extraction import (
     detect_mentions,
@@ -47,7 +47,7 @@ from recon_spark.operators.sample import KNUTH
 from recon_spark.operators.similarity import lsh_neardup_pairs
 from recon_spark.operators.validation import (
     add_tokens,
-    filter_overlaps_jvm,
+    filter_overlaps,
     validate_span_offsets,
 )
 from recon_spark.queries.core import SQL_ENTITY_COVERAGE, _docs
@@ -63,8 +63,9 @@ def q_filter_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = gp.withColumn("spans", F.expr("concat(spans, pred_spans)")).select(
         "doc_id", "text", "spans"
     )
-    resolved = filter_overlaps_jvm(merged)  # JVM fold; pandas-kernel
-    # variant asserted bit-equal in tests/test_span_core.py
+    # concat puts gold before model: the fold's array-position tie-break
+    # is the oracle's srk
+    resolved = filter_overlaps(merged)
     return (
         resolved.select("doc_id", F.explode("spans").alias("s"))
         .select(
@@ -124,8 +125,7 @@ _SENT_DELIM = " the "
 
 def q_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = detect_mentions(_docs(spark, sf_dir)).select("doc_id", "text", "spans")
-    s = split_sentences_jvm(d, delimiter=_SENT_DELIM)  # JVM fold; mapInArrow
-    # kernel asserted bit-equal in tests/test_span_core.py
+    s = split_sentences(d, delimiter=_SENT_DELIM)
     # n_ok re-checks the span-offset invariant on the re-based spans; it
     # must equal n_spans (the oracle counts mentions per sentence).
     return s.select(
@@ -205,7 +205,7 @@ WITH {sql_mentions_pos_cte()},
 mcount AS (SELECT doc_id, count(*) AS c FROM mentions GROUP BY doc_id)
 SELECT d.lang,
        CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len(string_split(d.text, ' '))) AS BIGINT) AS n_tokens,
+       CAST(sum(len(list_filter(string_split(d.text, ' '), w -> w <> ''))) AS BIGINT) AS n_tokens,
        CAST(sum(coalesce(m.c, 0)) AS BIGINT) AS n_spans
 FROM documents d LEFT JOIN mcount m USING (doc_id)
 GROUP BY d.lang ORDER BY d.lang

@@ -296,9 +296,7 @@ ORDER BY id_a, id_b
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    # two-stage vectorized top-k (asserted equal to the broadcast
-    # crossJoin+fold plan in tests/test_mask_similarity.py)
-    return SIM.cosine_topk_vectorized(emb, queries, k=10)
+    return SIM.cosine_topk(emb, queries, k=10)
 
 
 SQL_ANN_COSINE_TOPK = """

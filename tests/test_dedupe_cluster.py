@@ -1,5 +1,7 @@
 """Connected-components dedup clustering vs a driver-side union-find."""
 
+import pytest
+
 from recon_spark.operators.dedupe import (
     connected_components,
     dedupe_corpus,
@@ -61,29 +63,36 @@ def test_lsh_candidates_cover_jaccard_pairs(spark):
     assert true_pairs <= cand
 
 
-def test_blas_allpairs_matches_fold_path(spark):
-    """The BLAS-blocked exact all-pairs must agree with the oracle-pinned
-    expression fold (same pair set, cosines within rounding)."""
-    from recon_spark.operators.similarity import (
-        cosine_neardup_pairs,
-        cosine_neardup_pairs_blas,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = {(r.id_a, r.id_b, round(r.cos, 5)) for r in cosine_neardup_pairs(emb, threshold=0.45).collect()}
-    b = {(r.id_a, r.id_b, round(r.cos, 5)) for r in cosine_neardup_pairs_blas(emb, threshold=0.45).collect()}
-    assert a == b
-
-
-def test_simhash_vectorized_equals_jvm(spark):
-    from recon_spark.operators.dedupe import simhash32, simhash32_vectorized
+def test_simhash_matches_python_spec(spark):
+    from recon_spark.operators.dedupe import simhash32
+    from tests.reference_impl import ref_simhash
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     short = spark.createDataFrame([(9001, "one two")], "doc_id long, text string")
     both = docs.select("doc_id", "text").unionByName(short)
-    a = {r["id"]: r["simhash"] for r in simhash32_vectorized(both).collect()}
-    b = {r["id"]: r["simhash"] for r in simhash32(both).collect()}
-    assert a == b and a[9001] == 0 and len(a) > 1
+    texts = {r["doc_id"]: r["text"] for r in both.collect()}
+    got = {r["id"]: r["simhash"] for r in simhash32(both).collect()}
+    assert got == {i: ref_simhash(t) for i, t in texts.items()}
+    assert got[9001] == 0 and len(set(got.values())) > 1
+
+
+def test_connected_components_raises_past_max_iter(spark):
+    """A 61-node chain needs 60 label-propagation rounds: past the
+    50-round cap the distributed branch raises instead of returning
+    partial labels, while the driver branch gives one component."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(60)], "id_a long, id_b long")
+    got = connected_components(chain).collect()
+    assert {r["component"] for r in got} == {0} and len(got) == 61
+    with pytest.raises(ValueError, match="did not converge within 50 rounds"):
+        connected_components(chain, driver_threshold=0)
+
+
+def test_connected_components_branches_agree_within_cap(spark):
+    edges = [(i, i + 1) for i in range(12)] + [(40, 30), (30, 35), (50, 51)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    driver = sorted(map(tuple, connected_components(df).collect()))
+    dist = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
+    assert driver == dist == sorted(union_find(edges).items())
 
 
 def test_scratch_reliable_mode_same_results_and_releasable(spark):

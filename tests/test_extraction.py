@@ -79,15 +79,20 @@ def test_model_variant_differs_from_gold(spark):
     assert bad == 0
 
 
-def test_colocated_insights_match_join_operators(spark, monkeypatch):
-    """Per-row (co-located) error classification and hardest scoring must
-    equal the two-source full-outer-join operators, hardest rows in their
+def _span_tuples(spans):
+    return [(s.text, s.start, s.end, s.label) for s in spans]
+
+
+def test_colocated_insights_match_reference(spark, monkeypatch):
+    """Per-row error classification and hardest scoring equal the
+    driver-side reference (tests/reference_impl), hardest rows in their
     returned orderBy(score, count, doc_id) order, on the detected spans
     and on degenerate inputs, in both scratch-pin modes."""
     from recon_spark.operators import insights as I
+    from tests.reference_impl import get_hardest_examples, top_prediction_errors
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    both = detect_mentions(detect_mentions(docs), which="model", out_col="pred_spans")
+    both = detect_mentions_both(docs)
     # every doc a perfect match: hi == lo, so every score is 0.0
     perfect = both.withColumn("pred_spans", F.col("spans"))
     # an empty gold or pred array takes the fscore = 1.0 branch
@@ -101,15 +106,15 @@ def test_colocated_insights_match_join_operators(spark, monkeypatch):
     n_docs = docs.count()
 
     def check(case):
-        gold = case.select("doc_id", "text", "spans")
-        pred = case.select("doc_id", "pred_spans")
-        a = sorted(map(tuple, I.prediction_errors(gold, pred).collect()))
-        b = sorted(map(tuple, I.prediction_errors_colocated(case).collect()))
-        assert a == b
-        c = [tuple(r) for r in I.hardest_examples(docs, gold, pred).collect()]
-        d = [tuple(r) for r in I.hardest_examples_colocated(case).collect()]
-        assert c == d and len(d) == n_docs
-        return d
+        rows = [
+            (r.doc_id, _span_tuples(r.spans), _span_tuples(r.pred_spans))
+            for r in case.select("doc_id", "spans", "pred_spans").collect()
+        ]
+        errors = [tuple(r) for r in I.prediction_errors_colocated(case).collect()]
+        assert errors == top_prediction_errors(rows)
+        hardest = [tuple(r) for r in I.hardest_examples_colocated(case).collect()]
+        assert hardest == get_hardest_examples(rows) and len(hardest) == n_docs
+        return hardest
 
     try:
         for mode in ("", "1"):  # default localCheckpoint pin, then persist
@@ -119,6 +124,39 @@ def test_colocated_insights_match_join_operators(spark, monkeypatch):
             assert len({r[2] for r in check(one_side)}) > 1
     finally:
         spark.catalog.clearCache()  # the reliable-mode caller release
+
+
+def test_insights_hand_counted(spark):
+    """Doc 1: one exact match, one same-offset label confusion, one
+    pred-only span. Doc 2: both sides empty. Doc 3: gold only. Doc 4:
+    a perfect match."""
+    from recon_spark.operators import insights as I
+    from recon_spark.schema import SPAN_DDL
+    from tests.reference_impl import get_hardest_examples, top_prediction_errors
+
+    def sp(text, start, label):
+        return (text, start, start + len(text), label, None, None, None, "t")
+
+    rows = [
+        (1, [sp("x", 0, "A"), sp("y", 2, "B")], [sp("x", 0, "A"), sp("y", 2, "C"), sp("z", 4, "D")]),
+        (2, [], []),
+        (3, [sp("w", 0, "E")], []),
+        (4, [sp("x", 0, "A")], [sp("x", 0, "A")]),
+    ]
+    df = spark.createDataFrame(rows, f"doc_id long, spans {SPAN_DDL}, pred_spans {SPAN_DDL}")
+    errors = [
+        ("w", "E", "NOT_LABELED", 1),
+        ("y", "B", "C", 1),
+        ("z", "NOT_LABELED", "D", 1),
+    ]
+    # max errors 3; raw = fscore - count/3: doc1 0.4 - 1, doc3 1 - 1/3,
+    # docs 2 and 4 1.0; min-max over [-0.6, 1.0]
+    hardest = [(1, 3, 0.0), (3, 1, 0.791667), (2, 0, 1.0), (4, 0, 1.0)]
+    assert [tuple(r) for r in I.prediction_errors_colocated(df).collect()] == errors
+    assert [tuple(r) for r in I.hardest_examples_colocated(df).collect()] == hardest
+    ref_rows = [(d, [s[:4] for s in g], [s[:4] for s in p]) for d, g, p in rows]
+    assert top_prediction_errors(ref_rows) == errors
+    assert get_hardest_examples(ref_rows) == hardest
 
 
 def test_hardest_examples_colocated_plan_reads_pin(spark, monkeypatch):

@@ -76,30 +76,25 @@ def test_whole_stage_codegen_covers_triple_extraction(spark):
     assert "*(1)" in plan
 
 
-def test_lsh_signature_jvm_path_is_jvm_only(spark):
-    from recon_spark.operators.similarity import with_lsh_signature_jvm
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    plan = plan_of(with_lsh_signature_jvm(emb, dim=64, n_planes=16, vec_col="embedding"))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Exchange" not in plan  # per-row signature: zero shuffle
-
-
 def test_lsh_signature_vectorized_no_shuffle_and_bit_equal(spark):
-    from recon_spark.operators.similarity import (
-        with_lsh_signature,
-        with_lsh_signature_jvm,
-    )
+    """The Arrow kernel adds no shuffle, and its signature equals the
+    spec computed with numpy on the collected vectors: bit j set iff
+    vec @ plane_j > 0 in float64."""
+    import numpy as np
+
+    from recon_spark.operators.similarity import hyperplanes, with_lsh_signature
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     fast = with_lsh_signature(emb, dim=64, n_planes=16, vec_col="embedding")
     plan = plan_of(fast)
     assert "ArrowEvalPython" in plan  # vectorized numpy kernel
     assert "Exchange" not in plan  # still per-row: zero shuffle
-    slow = with_lsh_signature_jvm(emb, dim=64, n_planes=16, vec_col="embedding")
-    a = {r["vec_id"]: r["lsh_sig"] for r in fast.select("vec_id", "lsh_sig").collect()}
-    b = {r["vec_id"]: r["lsh_sig"] for r in slow.select("vec_id", "lsh_sig").collect()}
-    assert a == b and len(a) > 0
+    planes = np.asarray(hyperplanes(64, 16), dtype=np.float64)
+    rows = fast.select("vec_id", "embedding", "lsh_sig").collect()
+    for r in rows:
+        bits = np.asarray(r["embedding"], dtype=np.float64) @ planes.T > 0
+        assert r["lsh_sig"] == sum(1 << j for j in np.nonzero(bits)[0]), r["vec_id"]
+    assert len({r["lsh_sig"] for r in rows}) > 1
 
 
 def test_merge_corrected_join_is_broadcast(spark):
@@ -142,10 +137,10 @@ def test_filter_overlaps_adds_no_shuffle(spark):
 
 
 def test_filter_overlaps_jvm_has_no_python_stage(spark):
-    from recon_spark.operators.validation import filter_overlaps_jvm
+    from recon_spark.operators.validation import filter_overlaps
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = plan_of(filter_overlaps_jvm(with_literal_spans(docs)))
+    plan = plan_of(filter_overlaps(with_literal_spans(docs)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "MapInArrow" not in plan and "Exchange" not in plan
 

@@ -2,8 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from recon_spark.operators.preprocess import compute_once, iob_to_spans, merge_corrected
-from recon_spark.operators.validation import add_tokens
+from recon_spark.io import from_hf_dataset
+from recon_spark.operators.preprocess import compute_once, merge_corrected
 
 
 def test_compute_once_runs_fn_per_distinct_key(spark):
@@ -36,48 +36,34 @@ def test_merge_corrected_prefers_correction(spark):
     assert out == {"a": "OLD1", "b": "NEW", "c": "OLD3"}
 
 
+def _hf_spans(spark, rows):
+    """from_hf_dataset over (id, tokens, string IOB tags) rows:
+    {id: (text, [(text, start, end, label, token_start, token_end)])}."""
+    src = spark.createDataFrame(rows, "id long, tokens array<string>, ner_tags array<string>")
+    return {
+        r.id: (r.text, [(s.text, s.start, s.end, s.label, s.token_start, s.token_end) for s in r.spans])
+        for r in from_hf_dataset(spark, src).collect()
+    }
+
+
 def test_iob_to_spans_reconstruction(spark):
     text = "apache spark beats plain mapreduce says the dev"
     tags = ["B-TECH", "I-TECH", "O", "O", "B-TECH", "O", "O", "B-ROLE"]
-    df = spark.createDataFrame([(1, text, tags, [])],
-        "id long, text string, tags array<string>, spans array<struct<"
-        "text: string, start: int, end: int, label: string, token_start: int,"
-        "token_end: int, kb_id: string, source: string>>",
-    )
-    df = add_tokens(df, drop_misaligned=False)
-    out = df.withColumn("spans", iob_to_spans()).withColumn(
-        "spans",
-        F.expr(
-            "transform(spans, s -> named_struct("
-            "'text', substring(text, s.start + 1, s.end - s.start),"
-            "'start', s.start, 'end', s.end, 'label', s.label,"
-            "'token_start', s.token_start, 'token_end', s.token_end,"
-            "'kb_id', s.kb_id, 'source', s.source))"
-        ),
-    )
-    spans = out.collect()[0]["spans"]
-    got = [(s["text"], s["label"], s["token_start"], s["token_end"]) for s in spans]
-    assert got == [
+    got_text, spans = _hf_spans(spark, [(1, text.split(" "), tags)])[1]
+    assert got_text == text
+    assert [(s[0], s[3], s[4], s[5]) for s in spans] == [
         ("apache spark", "TECH", 0, 1),
         ("mapreduce", "TECH", 4, 4),
         ("dev", "ROLE", 7, 7),
     ]
     for s in spans:
-        assert text[s["start"] : s["end"]] == s["text"]
+        assert text[s[1] : s[2]] == s[0]
 
 
 def test_iob_repair_orphan_i_tag(spark):
     # IOB2 repair: orphan I- starts a new span (reference re-derivation)
-    text = "x spark y"
-    tags = ["O", "I-TECH", "O"]
-    df = spark.createDataFrame([(1, text, tags, [])],
-        "id long, text string, tags array<string>, spans array<struct<"
-        "text: string, start: int, end: int, label: string, token_start: int,"
-        "token_end: int, kb_id: string, source: string>>",
-    )
-    df = add_tokens(df, drop_misaligned=False)
-    spans = df.withColumn("spans", iob_to_spans()).collect()[0]["spans"]
-    assert [(s["start"], s["end"], s["label"]) for s in spans] == [(2, 7, "TECH")]
+    _, spans = _hf_spans(spark, [(1, ["x", "spark", "y"], ["O", "I-TECH", "O"])])[1]
+    assert [(s[1], s[2], s[3]) for s in spans] == [(2, 7, "TECH")]
 
 
 def test_bpe_token_counts_on_punctuation(spark):
@@ -96,11 +82,9 @@ def test_bpe_token_counts_on_punctuation(spark):
 
 def test_from_hf_dataset_roundtrip_arrow_table(spark):
     """HF-style (tokens, int ClassLabel tags) -> examples shape: text,
-    char offsets, and spans reconstructed by the IOB fold
+    char offsets, and spans reconstructed from the IOB tags
     (reference Dataset.from_hf_dataset, recon/dataset.py:494-526)."""
     import pyarrow as pa
-
-    from recon_spark.io import from_hf_dataset
 
     tbl = pa.table(
         {
@@ -138,8 +122,6 @@ def test_from_hf_dataset_roundtrip_arrow_table(spark):
 
 
 def test_from_hf_dataset_string_tags_and_parquet_path(spark, tmp_path):
-    from recon_spark.io import from_hf_dataset
-
     src = spark.createDataFrame(
         [(0, ["a", "bb", "ccc"], ["B-X", "I-X", "O"])],
         "id long, tokens array<string>, ner_tags array<string>",
@@ -151,46 +133,34 @@ def test_from_hf_dataset_string_tags_and_parquet_path(spark, tmp_path):
     assert [(s.text, s.start, s.end) for s in rows[0].spans] == [("a bb", 0, 4)]
 
 
-def test_from_hf_dataset_jvm_engine_is_jvm_only(spark):
-    from recon_spark.io import from_hf_dataset
-
-    docs = spark.createDataFrame(
-        [(0, ["x", "y"], [0, 0])],
-        "id long, tokens array<string>, ner_tags array<int>",
-    )
-    body = (
-        from_hf_dataset(spark, docs, labels=["O"], engine="jvm")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BatchEvalPython" not in body and "ArrowEvalPython" not in body
-    assert "MapInArrow" not in body
-
-
-def test_from_hf_dataset_engines_agree(spark):
-    """The Arrow hot path and the JVM fold spec must produce identical
-    rows — the extraction-operator parity pattern — including on the
-    IOB2-repair and malformed-tag edges."""
-    from recon_spark.io import from_hf_dataset
-
-    src = spark.createDataFrame(
+def test_from_hf_dataset_edge_cases(spark):
+    """IOB2 repair, orphan I-, back-to-back B-, a span open at the end,
+    a malformed tag, an empty row and a null token, as expected rows."""
+    got = _hf_spans(
+        spark,
         [
             (0, ["John", "Smith", "visited", "New", "York"],
              ["B-PER", "I-PER", "O", "B-LOC", "I-LOC"]),
             (1, ["a"], ["O"]),
             (2, [], []),
-            # IOB2 repair: I- with a new label starts fresh; I- after O too
+            # I- with a new label starts fresh; I- after O too
             (3, ["x", "y", "z", "w"], ["B-A", "I-B", "O", "I-C"]),
             # back-to-back B-, trailing open span at sequence end
             (4, ["p", "q", "r"], ["B-A", "B-A", "I-A"]),
             # malformed tag treated as O
             (5, ["m", "n"], ["B-A", "WAT"]),
+            # a null token becomes ''
+            (6, ["a", None, "b"], ["B-X", "I-X", "I-X"]),
         ],
-        "id long, tokens array<string>, ner_tags array<string>",
     )
-    a = from_hf_dataset(spark, src, engine="arrow").orderBy("id").collect()
-    j = from_hf_dataset(spark, src, engine="jvm").orderBy("id").collect()
-    assert [r.asDict(recursive=True) for r in a] == [
-        r.asDict(recursive=True) for r in j
-    ]
+    assert got == {
+        0: ("John Smith visited New York",
+            [("John Smith", 0, 10, "PER", 0, 1), ("New York", 19, 27, "LOC", 3, 4)]),
+        1: ("a", []),
+        2: ("", []),
+        3: ("x y z w",
+            [("x", 0, 1, "A", 0, 0), ("y", 2, 3, "B", 1, 1), ("w", 6, 7, "C", 3, 3)]),
+        4: ("p q r", [("p", 0, 1, "A", 0, 0), ("q r", 2, 5, "A", 1, 2)]),
+        5: ("m n", [("m", 0, 1, "A", 0, 0)]),
+        6: ("a  b", [("a  b", 0, 4, "X", 0, 2)]),
+    }

@@ -26,10 +26,9 @@ from recon_spark.operators.dedupe import (
     jaccard_pairs,
     minhash_lsh_candidates,
     minhash_signature,
-    minhash_signature_jvm,
     simhash32,
-    simhash32_vectorized,
 )
+from tests.reference_impl import ref_minhash, ref_simhash
 
 # every word in a column collides under wcode (same first 2 chars, same
 # length) but is a different word — e.g. "running" vs "rulings"
@@ -136,26 +135,21 @@ def test_jaccard_estimates_recover_under_production_hash(spark):
     assert prod_j.get((3, 4)) == wcode_j.get((3, 4))
 
 
-def test_minhash_vectorized_equals_jvm_production(spark):
+def test_minhash_matches_python_spec_production(spark):
     docs = _adversarial_corpus(spark)
-    fast = {
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    got = {
         r.id: list(r.minhash)
         for r in minhash_signature(docs, hash_mode="production").collect()
     }
-    ref = {
-        r.id: list(r.minhash)
-        for r in minhash_signature_jvm(docs, hash_mode="production").collect()
-    }
-    assert fast == ref
+    want = {i: ref_minhash(t, "production") for i, t in texts.items()}
+    assert got == {i: m for i, m in want.items() if m is not None} and got
 
 
-def test_simhash_vectorized_equals_jvm_production(spark):
+def test_simhash_matches_python_spec_production(spark):
     docs = _adversarial_corpus(spark)
-    fast = {
-        r.id: r.simhash
-        for r in simhash32_vectorized(docs, hash_mode="production").collect()
-    }
-    ref = {r.id: r.simhash for r in simhash32(docs, hash_mode="production").collect()}
-    assert fast == ref
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    got = {r.id: r.simhash for r in simhash32(docs, hash_mode="production").collect()}
+    assert got == {i: ref_simhash(t, "production") for i, t in texts.items()}
     # the adversarial pair must NOT be simhash-identical in production mode
-    assert ref[1] != ref[2]
+    assert got[1] != got[2]

@@ -243,14 +243,14 @@ def test_split_sentences_golden(spark):
     consumes the '. ' delimiter (the reference's spaCy sents keep the
     period on the sentence) — sentence text differs by that trailing
     period, span offsets and counts are identical."""
-    from recon_spark.operators.corrections import split_sentences_jvm
+    from recon_spark.operators.corrections import split_sentences
 
     df = _mk_spans_df(
         spark,
         "This is a first sentence with entity. This is an entity in the 2nd sentence.",
         [("entity", 30, 36, "ENTITY"), ("entity", 49, 55, "ENTITY")],
     )
-    rows = split_sentences_jvm(df, delimiter=". ").orderBy("sent_id").collect()
+    rows = split_sentences(df, delimiter=". ").orderBy("sent_id").collect()
     assert len(rows) == 2
     s0 = [(s["text"], s["start"], s["end"]) for s in rows[0]["spans"]]
     s1 = [(s["text"], s["start"], s["end"]) for s in rows[1]["spans"]]

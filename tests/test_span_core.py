@@ -58,6 +58,12 @@ class TestFilterOverlaps:
         spans = [sp(0, 20), sp(1, 3), sp(4, 8), sp(9, 19)]
         assert keys(filter_overlaps(spans)) == [(0, 20)]
 
+    def test_zero_length_span_does_not_cut_chain(self):
+        # (2,2) overlaps nothing but starts inside (0,5): (3,8) still
+        # joins the chain and loses to the equally long (0,5)
+        spans = [sp(0, 5), sp(2, 2), sp(3, 8)]
+        assert keys(filter_overlaps(spans)) == [(0, 5), (2, 2)]
+
 
 class TestStripAnnotation:
     def test_strip_both_ends(self):
@@ -127,49 +133,189 @@ class TestTokenize:
         assert misaligned is None
 
 
-def test_filter_overlaps_jvm_matches_pandas_kernel(spark):
-    """The JVM array_sort+aggregate greedy must be bit-equal to the
-    pandas kernel on the gold∪model overlap workload."""
+SPAN_FIELDS = ("text", "start", "end", "label", "token_start", "token_end", "kb_id", "source")
+
+
+def span_row(text, start, end, label="L", source=None):
+    return (text, start, end, label, None, None, None, source)
+
+
+def span_dicts(spans):
+    return [s.asDict() for s in spans]
+
+
+def random_span_rows(seed, n_rows):
+    """Rows of (doc_id, text, spans) drawn to hit where two overlap or
+    sentence-split implementations can differ: zero-length spans,
+    identical offsets from two sources, arrays not sorted by start."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n_rows):
+        words = [rng.choice(["ab", "c", "de", "f", "ghi"]) for _ in range(rng.randint(1, 12))]
+        text = " ".join(words)
+        n = len(text)
+        spans = []
+        for _ in range(rng.randint(0, 8)):
+            a = rng.randint(0, n)
+            b = rng.randint(a, min(n, a + 6))
+            src = rng.choice(["gazetteer", "model"])
+            spans.append(span_row(text[a:b], a, b, rng.choice("AB"), src))
+            if rng.random() < 0.3:  # same offsets from the other source
+                other = "model" if src == "gazetteer" else "gazetteer"
+                spans.append(span_row(text[a:b], a, b, rng.choice("AB"), other))
+        rng.shuffle(spans)
+        rows.append((i, text, spans))
+    return rows
+
+
+def spans_frame(spark, rows):
+    from recon_spark.schema import SPAN_DDL
+
+    return spark.createDataFrame(rows, f"doc_id long, text string, spans {SPAN_DDL}")
+
+
+def test_filter_overlaps_matches_python_kernel(spark):
+    """The JVM fold equals core.spans.filter_overlaps: on the three
+    divergence inputs (written out), on random rows with zero-length
+    spans, duplicate offsets and unsorted arrays, and on the gold+model
+    overlap workload."""
     from pyspark.sql import functions as F
 
+    from recon_spark.operators.extraction import detect_mentions_both
+    from recon_spark.operators import validation as V
+
+    cases = {
+        # identical offsets, model span first: array position breaks the tie
+        1: [span_row("spark", 0, 5, "B", "model"), span_row("spark", 0, 5, "A", "gazetteer")],
+        # a zero-length span inside the chain
+        2: [span_row("spark", 0, 5), span_row("", 2, 2), span_row("ark j", 3, 8)],
+        # not sorted by start; an empty span sharing a start with a kept one
+        3: [span_row("joins", 6, 11), span_row("", 6, 6), span_row("spark", 0, 5)],
+    }
+    want = {
+        1: [("spark", 0, 5, "B", "model")],
+        2: [("spark", 0, 5, "L", None), ("", 2, 2, "L", None)],
+        3: [("spark", 0, 5, "L", None), ("", 6, 6, "L", None), ("joins", 6, 11, "L", None)],
+    }
+    text = "spark joins tables"
+    got = {
+        r["doc_id"]: [(s.text, s.start, s.end, s.label, s.source) for s in r["spans"]]
+        for r in V.filter_overlaps(spans_frame(spark, [(k, text, v) for k, v in cases.items()])).collect()
+    }
+    assert got == want
+    for k, spans in cases.items():
+        py = filter_overlaps([dict(zip(SPAN_FIELDS, s)) for s in spans])
+        assert [(s["text"], s["start"], s["end"], s["label"], s["source"]) for s in py] == want[k]
+
+    rand = spans_frame(spark, random_span_rows(7, 400))
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    merged = detect_mentions_both(docs).select(
+        "doc_id", "text", F.expr("concat(spans, pred_spans)").alias("spans")
+    )
+    for df in (rand, merged):
+        rows = df.collect()
+        out = {r["doc_id"]: span_dicts(r["spans"]) for r in V.filter_overlaps(df).collect()}
+        assert len(out) == len(rows) > 0
+        for r in rows:
+            assert out[r["doc_id"]] == filter_overlaps(span_dicts(r["spans"])), r["doc_id"]
+
+
+def test_split_sentences_matches_python_kernel(spark):
+    """The JVM fold equals core.spans.split_sentences, which sorts each
+    sentence's spans by start: on an unsorted array (written out), on
+    random rows and on detected mentions."""
+    from recon_spark.operators import corrections as C
     from recon_spark.operators.extraction import detect_mentions
-    from recon_spark.operators.validation import filter_overlaps, filter_overlaps_jvm
+
+    text = "ab cd. ef gh"
+    unsorted = [
+        span_row("gh", 10, 12), span_row("ab", 0, 2), span_row("ef", 7, 9), span_row("cd", 3, 5)
+    ]
+    got = [
+        (r["sent_id"], r["text"], [(s.text, s.start, s.end) for s in r["spans"]])
+        for r in C.split_sentences(spans_frame(spark, [(1, text, unsorted)]))
+        .orderBy("sent_id").collect()
+    ]
+    want = [
+        (0, "ab cd", [("ab", 0, 2), ("cd", 3, 5)]),
+        (1, "ef gh", [("ef", 0, 2), ("gh", 3, 5)]),
+    ]
+    assert got == want
+    py = split_sentences(text, [dict(zip(SPAN_FIELDS, s)) for s in unsorted])
+    assert [(k, t, [(s["text"], s["start"], s["end"]) for s in sp]) for k, (t, sp) in enumerate(py)] == want
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    g = detect_mentions(docs)
-    gp = detect_mentions(g, which="model", out_col="pred_spans")
-    merged = gp.withColumn("spans", F.expr("concat(spans, pred_spans)")).select(
-        "doc_id", "text", "spans"
-    )
-    a = {r["doc_id"]: r["spans"] for r in filter_overlaps(merged).collect()}
-    b = {r["doc_id"]: r["spans"] for r in filter_overlaps_jvm(merged).collect()}
-    assert a == b
+    mentions = detect_mentions(docs).select("doc_id", "text", "spans")
+    for df, delim in (
+        (spans_frame(spark, random_span_rows(11, 300)), " "),
+        (spans_frame(spark, random_span_rows(13, 300)), "c "),
+        (mentions, " the "),
+    ):
+        rows = df.collect()
+        out: dict = {}
+        for r in C.split_sentences(df, delimiter=delim).collect():
+            out.setdefault(r["doc_id"], {})[r["sent_id"]] = (r["text"], span_dicts(r["spans"]))
+        assert len(out) == len(rows) > 0
+        for r in rows:
+            py = split_sentences(r["text"], span_dicts(r["spans"]), delim)
+            assert out[r["doc_id"]] == dict(enumerate(py)), r["doc_id"]
 
 
-def test_split_sentences_jvm_matches_arrow_kernel(spark):
-    """The JVM fold split must be bit-equal to the mapInArrow kernel."""
-    from recon_spark.operators.corrections import split_sentences, split_sentences_jvm
+def test_add_tokens_matches_python_kernel(spark):
+    """add_tokens' token ids equal core.spans.tokenize_ws +
+    align_spans_to_tokens (extraction's token ids): repeated, leading
+    and trailing spaces make no tokens (written out), and random
+    multi-space texts agree row for row."""
+    import random
+
     from recon_spark.operators.extraction import detect_mentions
+    from recon_spark.operators.validation import add_tokens
 
-    d = detect_mentions(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ).select("doc_id", "text", "spans")
-    key = lambda r: (r["doc_id"], r["sent_id"], r["text"], tuple(map(tuple, r["spans"])))
-    a = sorted(map(key, split_sentences(d, delimiter=" the ").collect()))
-    b = sorted(map(key, split_sentences_jvm(d, delimiter=" the ").collect()))
-    assert a == b
+    cases = [
+        (1, "a  b c", [span_row("b", 3, 4)]),
+        (2, " a b", [span_row("a", 1, 2), span_row("b", 3, 4)]),
+    ]
+    got = {
+        r["doc_id"]: (
+            [tuple(t) for t in r["tokens"]],
+            [(s.text, s.token_start, s.token_end) for s in r["spans"]],
+        )
+        for r in add_tokens(spans_frame(spark, cases)).collect()
+    }
+    want = {
+        1: ([("a", 0, 1, 0), ("b", 3, 4, 1), ("c", 5, 6, 2)], [("b", 1, 1)]),
+        2: ([("a", 1, 2, 0), ("b", 3, 4, 1)], [("a", 0, 0), ("b", 1, 1)]),
+    }
+    assert got == want
+    for i, text, spans in cases:
+        toks = tokenize_ws(text)
+        aligned = align_spans_to_tokens([dict(zip(SPAN_FIELDS, s)) for s in spans], toks)
+        assert (toks, [(s["text"], s["token_start"], s["token_end"]) for s in aligned]) == want[i]
 
-
-def test_add_tokens_arrow_matches_jvm_fold(spark):
-    from recon_spark.operators.extraction import detect_mentions
-    from recon_spark.operators.validation import add_tokens, add_tokens_arrow
-
-    d = detect_mentions(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    key = lambda r: (
-        r["doc_id"],
-        tuple(map(tuple, r["tokens"])),
-        tuple(map(tuple, r["spans"])),
-    )
-    a = sorted(map(key, add_tokens(d).select("doc_id", "tokens", "spans").collect()))
-    b = sorted(map(key, add_tokens_arrow(d).select("doc_id", "tokens", "spans").collect()))
-    assert a == b
+    rng = random.Random(5)
+    rows = []
+    for i in range(300):
+        text = "".join(rng.choice(["ab", "c", " ", "  ", "d e"]) for _ in range(rng.randint(0, 10)))
+        spans = []
+        for _ in range(rng.randint(0, 3)):  # whole words align, others drop the row
+            a = rng.randint(0, len(text))
+            b = rng.randint(a, len(text))
+            spans.append(span_row(text[a:b], a, b))
+        rows.append((i, text, spans))
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    mentions = detect_mentions(docs).select("doc_id", "text", "spans")
+    for df in (spans_frame(spark, rows), mentions):
+        src = {r["doc_id"]: r for r in df.collect()}
+        out = {r["doc_id"]: r for r in add_tokens(df, drop_misaligned=False).collect()}
+        kept = {r["doc_id"] for r in add_tokens(df).select("doc_id").collect()}
+        assert set(out) == set(src)
+        for i, r in src.items():
+            toks = tokenize_ws(r["text"])
+            aligned = align_spans_to_tokens(span_dicts(r["spans"]), toks)
+            assert [tuple(t) for t in out[i]["tokens"]] == toks
+            assert (i in kept) == (aligned is not None)
+            if aligned is not None:
+                assert span_dicts(out[i]["spans"]) == aligned
+    assert kept == set(src)  # every detected mention aligns

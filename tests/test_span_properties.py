@@ -3,14 +3,17 @@ recon_spark/core/spans.py — beyond the reference's golden-only strategy
 (SURVEY.md §5: the reference has no property tests).
 
 Invariants checked on arbitrary inputs:
-- filter_overlaps: output is non-overlapping, sorted by start, a subset
-  of the input, maximal (no rejected span fits), and idempotent.
+- filter_overlaps: output is non-overlapping, sorted by (start, end), a
+  subset of the input, maximal (no rejected span fits), and idempotent —
+  also with zero-length spans, identical offsets from two sources and
+  arrays not sorted by start.
 - strip_annotation: offset invariant preserved; idempotent; never
   lengthens the span.
 - substitute_spans: every output span satisfies
   span.text == text[start:end]; non-substituted text is preserved.
 - split_sentences: sentences re-join to the original text; every
-  surviving span satisfies the offset invariant within its sentence.
+  surviving span satisfies the offset invariant within its sentence;
+  each sentence's spans are sorted by start, also for unsorted input.
 """
 
 import string
@@ -31,12 +34,22 @@ def span_lists(draw, max_len=120, max_spans=12):
     n = draw(st.integers(1, max_len))
     spans = []
     for _ in range(draw(st.integers(0, max_spans))):
-        a = draw(st.integers(0, n - 1))
-        b = draw(st.integers(a + 1, n))
-        spans.append(
-            {"text": "x" * (b - a), "start": a, "end": b, "label": draw(st.sampled_from("ABC"))}
-        )
-    return n, spans
+        a = draw(st.integers(0, n))
+        b = draw(st.integers(a, n))  # a == b: zero-length span
+        span = {
+            "text": "x" * (b - a), "start": a, "end": b,
+            "label": draw(st.sampled_from("ABC")),
+            "source": draw(st.sampled_from(["gazetteer", "model"])),
+        }
+        spans.append(span)
+        if draw(st.booleans()):  # the same offsets from the other source
+            other = "model" if span["source"] == "gazetteer" else "gazetteer"
+            spans.append({**span, "source": other})
+    return n, draw(st.permutations(spans))
+
+
+def span_key(s):
+    return (s["start"], s["end"], s["label"], s["source"])
 
 
 @given(span_lists())
@@ -46,18 +59,18 @@ def test_filter_overlaps_properties(case):
     out = filter_overlaps(spans)
     # non-overlapping and sorted
     for i in range(1, len(out)):
-        assert out[i - 1]["start"] <= out[i]["start"]
-        assert not spans_overlap(
-            out[i - 1]["start"], out[i - 1]["end"], out[i]["start"], out[i]["end"]
-        )
+        assert (out[i - 1]["start"], out[i - 1]["end"]) <= (out[i]["start"], out[i]["end"])
+    for i, a in enumerate(out):
+        for b in out[i + 1 :]:
+            assert not spans_overlap(a["start"], a["end"], b["start"], b["end"])
     # subset of input (by identity key)
-    keys = {(s["start"], s["end"], s["label"]) for s in spans}
-    assert all((s["start"], s["end"], s["label"]) in keys for s in out)
+    keys = {span_key(s) for s in spans}
+    assert all(span_key(s) in keys for s in out)
     # maximal: every dropped span overlaps something kept
     kept = [(s["start"], s["end"]) for s in out]
-    out_keys = {(s["start"], s["end"], s["label"]) for s in out}
+    out_keys = {span_key(s) for s in out}
     for s in spans:
-        if (s["start"], s["end"], s["label"]) not in out_keys:
+        if span_key(s) not in out_keys:
             assert any(spans_overlap(s["start"], s["end"], a, b) for a, b in kept)
     # idempotent
     assert filter_overlaps(out) == out
@@ -97,7 +110,7 @@ def doc_with_spans(draw):
         if draw(st.booleans()):
             spans.append({"text": w, "start": pos, "end": pos + len(w), "label": "X"})
         pos += len(w) + 1
-    return text, spans
+    return text, draw(st.permutations(spans))
 
 
 @given(doc_with_spans(), st.lists(st.text(alphabet="xyz", min_size=1, max_size=6), min_size=1, max_size=3))
@@ -124,10 +137,13 @@ def test_split_sentences_properties(case, delim):
     parts = split_sentences(text, spans, delimiter=delim)
     # sentences re-join to the original text
     assert delim.join(p[0] for p in parts) == text
-    # every surviving span satisfies the offset invariant in its sentence
+    # every surviving span satisfies the offset invariant in its sentence,
+    # and each sentence's spans come sorted by start
     for sent, sent_spans in parts:
         for s in sent_spans:
             assert s["text"] == sent[s["start"] : s["end"]]
+        starts = [s["start"] for s in sent_spans]
+        assert starts == sorted(starts)
     # no span is duplicated across sentences
     total = sum(len(p[1]) for p in parts)
     assert total <= len(spans)
