@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from recon_spark.operators.scratch import scratch
+from recon_spark.operators.scratch import iterate, scratch
 
 P = 1_000_000_007
 N_PERM = 16
@@ -296,7 +296,6 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iter: int = 50,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (id, component) where
@@ -312,8 +311,9 @@ def connected_components(
     (near-dup clusters are tiny, so 2-3 rounds). Each round is one
     shuffle on id; the frontier check stops early; AQE handles the
     shrinking join sizes. Both paths produce identical labels
-    (component = min reachable id): a component whose diameter needs
-    more than ``max_iter`` rounds raises ValueError instead of returning
+    (component = min reachable id): the rounds run through
+    scratch.iterate, so a component whose diameter needs more than
+    scratch.MAX_ROUNDS rounds raises ValueError instead of returning
     partial labels."""
     # single action: fetch threshold+1 rows; a full count would run the
     # (expensive) candidate-generation job twice
@@ -362,7 +362,8 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    for _ in range(max_iter):
+
+    def propagate(labels):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -383,19 +384,11 @@ def connected_components(
             .where(F.col("n.component") != F.col("o.component"))
             .count()
         )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        labels.unpersist()
-        edges.unpersist()
-        raise ValueError(
-            f"connected_components: label propagation did not converge "
-            f"within {max_iter} rounds"
-        )
-    edges.unpersist()
-    return labels.orderBy("id")
+        return new_labels, changed == 0
+
+    return iterate(
+        propagate, labels, "connected_components label propagation"
+    ).orderBy("id")
 
 
 def dedupe_corpus(

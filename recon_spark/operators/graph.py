@@ -24,8 +24,9 @@ Scale design (1000-executor reading 100 TB of triples):
   trained k-means quantizer in operators/similarity.py).
 
 Iterations use DataFrame lineage, not checkpoints: 5 fixed iterations
-keep the plan shallow. For deep iteration counts, localCheckpoint each
-K rounds (same pattern as dedupe.connected_components).
+keep the plan shallow. For deep iteration counts, pin each K rounds
+with operators/scratch.py (whose ``iterate`` loop drives
+dedupe.connected_components' label propagation).
 """
 
 from __future__ import annotations
@@ -653,8 +654,9 @@ def kcore(
     + two semi-joins of the edge list against the surviving node set —
     the node set shrinks monotonically and is broadcast-able long
     before the edge list is; AQE picks that up at runtime. For deep
-    peeling (k-core numbers, not one fixed k), localCheckpoint every
-    few rounds exactly as dedupe.connected_components does.
+    peeling (k-core numbers, not one fixed k), run the rounds to
+    convergence through scratch.iterate, as
+    dedupe.connected_components' label propagation does.
     """
     und = (
         edges.select(
@@ -676,8 +678,9 @@ def kcore(
         # unbroken, the doubled lineage re-executes the upstream
         # extraction 2^iters times, and plain persist() still pays a
         # recursive broadcast-materialization job per semi-join (measured
-        # 75s -> 2.6s on the sf0.01 canonical graph). Same pattern as
-        # dedupe.connected_components' per-round checkpoint.
+        # 75s -> 2.6s on the sf0.01 canonical graph). The label-
+        # propagation step of dedupe.connected_components pins the
+        # same way.
         und = (
             und.join(keep, und.a == keep.node, "left_semi")
             .join(keep, und.b == keep.node, "left_semi")

@@ -112,7 +112,8 @@ def resolve_surfaces(surfaces: DataFrame, col: str = "surface") -> DataFrame:
 
     Composition: SymSpell deletion-key blocking (never all-pairs) ->
     connected components (size-adaptive: driver union-find for small
-    edge sets, hash-min label propagation above the threshold) -> one
+    edge sets, hash-min label propagation above the threshold, which
+    raises past scratch.MAX_ROUNDS rounds) -> one
     component-size aggregate joined back. Only surfaces that
     participate in >= 1 fuzzy pair appear (singletons are already
     canonical).

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recon_spark.operators.scratch import iterate, pin_now
+
 TYPE_PRED = "type"
 
 # T-Box over the synthetic corpus' seven relation-operator predicates
@@ -163,10 +165,10 @@ def rdfs_entail(
     # distinct collapses them again. Dedup FIRST (map-side-combinable)
     # so the rule chain runs over the assertion set, not the assertion
     # bag — measured 125s -> collapse-proportional at 20M raw rows /
-    # 2.1M facts (scripts/scale_r5d_ops.py). Callers whose input is
-    # already a distinct set (the canonical KG) pass prededup=False to
-    # skip the extra exchange — at 10^12 stored triples a no-op
-    # distinct is NOT free.
+    # 2.1M facts (BENCH/BASELINE.md, "Round-5 final session"). Callers
+    # whose input is already a distinct set (the canonical KG) pass
+    # prededup=False to skip the extra exchange — at 10^12 stored
+    # triples a no-op distinct is NOT free.
     if prededup:
         base = base.dropDuplicates(["subj", "pred", "obj"])
     # rdfs7: (s p o), p ⊑+ q  ⟹  (s q o) — broadcast join, map-side
@@ -293,8 +295,8 @@ def shape_violations(
     entailed input is referenced twice, never once per shape. (The
     first cut compiled each shape to its own agg/anti-join; over an
     inline closure plan that re-evaluated the closure up to 8x —
-    measured 147s vs this engine at 20M triples in
-    scripts/scale_r5d_ops.py.)
+    measured 147s vs this engine at 20M triples; BENCH/BASELINE.md,
+    "Round-5 final session".)
     """
     is_subj = F.col("is_subj") == 1
     aggs: list = []
@@ -550,9 +552,6 @@ OWL_ONTOLOGY: tuple[tuple[str, str, str], ...] = ONTOLOGY + (
     ("sort", "propertyType", "Transitive"),
 )
 
-_OWL_PREDS = {"inverseOf", "propertyType"}
-OWL_MAX_ITERS = 32
-
 
 def split_owl_tbox(
     tbox: tuple[tuple[str, str, str], ...],
@@ -597,38 +596,29 @@ def owl_extend(
     spark: SparkSession,
     abox: DataFrame,
     tbox: tuple[tuple[str, str, str], ...] = OWL_ONTOLOGY,
-    max_iters: int = OWL_MAX_ITERS,
 ) -> DataFrame:
     """Close the A-Box under the OWL property rules to a FIXPOINT:
-    prp-inv (both directions), prp-symp, and prp-trp (one self-join
-    hop per round for each transitive property). The loop materializes
-    each round (scratch-pinned, count-stable termination), so the
-    iteration count is bounded by the longest transitive chain — graph
-    diameter, not size. Returns the extended distinct edge set.
+    prp-inv (both directions), prp-symp, and prp-trp. Each round
+    self-joins the whole transitive-edge set, so round k holds every
+    chain of up to 2^k edges (path doubling) and the round count grows
+    with log2 of the longest transitive chain, not with graph size. The
+    loop runs through scratch.iterate: each round is eagerly pinned and
+    the fixpoint is reached when the pinned row count stops changing.
+    Returns the extended distinct edge set.
 
     Scale: each round is |trans-pred edges| self-joined once (the
     naive-evaluation step; the distinct + stability check is the
     semi-naive gate), plus two map-side swaps. At 10^12 triples only
     the declared transitive predicates' partitions enter the join.
     """
-    from recon_spark.operators.scratch import reliable_mode
-
-    def pin(df: DataFrame) -> DataFrame:
-        if reliable_mode():
-            from pyspark.storagelevel import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df.localCheckpoint(eager=True)
-
     owl, _ = split_owl_tbox(tbox)
     inv_pairs = owl["inv"] + [(b, a) for a, b in owl["inv"]]
     inv = F.broadcast(_dim(spark, inv_pairs, "p", "q")) if inv_pairs else None
     sym = set(owl["sym"])
     trans = set(owl["trans"])
 
-    edges = pin(abox.select("subj", "pred", "obj").dropDuplicates())
-    n = edges.count()
-    for _ in range(max_iters):
+    def extend(state):
+        edges, n = state
         pieces = [edges]
         if inv is not None:
             pieces.append(
@@ -661,14 +651,13 @@ def owl_extend(
         nxt = pieces[0]
         for p in pieces[1:]:
             nxt = nxt.unionByName(p)
-        nxt = pin(nxt.dropDuplicates())
+        nxt = pin_now(nxt.dropDuplicates())
         n2 = nxt.count()
-        if n2 == n:
-            return nxt
-        edges, n = nxt, n2
-    raise ValueError(
-        f"OWL property closure did not converge within {max_iters} rounds"
-    )
+        return (nxt, n2), n2 == n
+
+    edges = pin_now(abox.select("subj", "pred", "obj").dropDuplicates())
+    edges, _ = iterate(extend, (edges, edges.count()), "OWL property closure")
+    return edges
 
 
 def owl_entail(
@@ -732,9 +721,11 @@ def sameas_rewrite(kg: DataFrame, sameas: DataFrame) -> DataFrame:
     operators/dedupe.py:connected_components (size-adaptive: driver
     union-find for dictionary-sized pair sets — the normal case, since
     sameAs links are entity-dictionary-scale — hash-min label
-    propagation above it). The representative map is entity-sized, so
-    both rewrite joins BROADCAST: the triple stream never shuffles for
-    the rewrite; the only wide exchange is the final distinct.
+    propagation above it, one round per hop of a class's diameter and
+    a ValueError past scratch.MAX_ROUNDS). The representative map is
+    entity-sized, so both rewrite joins BROADCAST: the triple stream
+    never shuffles for the rewrite; the only wide exchange is the final
+    distinct.
     """
     from recon_spark.operators.dedupe import connected_components
 

@@ -31,13 +31,29 @@ Two pin strategies, one explicit tradeoff:
 This knob is the resolution of the round-3 ADVICE item on
 operators/graph.py:71: neither strategy dominates — pick per
 deployment, in one place, documented.
+
+Driver-side fixpoint loops (sparql._plus_frame, reasoning.owl_extend,
+the distributed branch of dedupe.connected_components) are step
+functions run by ``iterate``: at most ``MAX_ROUNDS`` rounds, then a
+ValueError naming the loop, never partial results. ``pin_now`` is the
+EAGER twin of ``scratch`` for their round frames: each round runs an
+action anyway, and an eager checkpoint swaps the round's plan for a
+LogicalRDD, which keeps plans constant-size and avoids a Catalyst
+attribute-rewrite clash ("key not found: src#N") that a lazy one trips
+over a self-join + anti-join chain. Reliable mode persists instead.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
+
+# Round cap of every fixpoint loop. Path doubling and the OWL closure
+# need ~log2(diameter) rounds; the linear loops (seeded BFS, hash-min
+# labels) need one round per hop of the diameter.
+MAX_ROUNDS = 64
 
 
 def reliable_mode() -> bool:
@@ -53,3 +69,18 @@ def scratch(df: DataFrame) -> DataFrame:
 
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=False)
+
+
+def pin_now(df: DataFrame) -> DataFrame:
+    """Eagerly pin one round of a fixpoint loop (see module docstring)."""
+    return scratch(df) if reliable_mode() else df.localCheckpoint(eager=True)
+
+
+def iterate(step: Callable[[Any], tuple[Any, bool]], state: Any, what: str) -> Any:
+    """Run ``state, done = step(state)`` until ``done``; raise ValueError
+    naming ``what`` if ``MAX_ROUNDS`` rounds pass without convergence."""
+    for _ in range(MAX_ROUNDS):
+        state, done = step(state)
+        if done:
+            return state
+    raise ValueError(f"{what} did not converge within {MAX_ROUNDS} rounds")

@@ -219,27 +219,27 @@ def _verify_pairs(
     threshold: float,
     id_col: str,
     vec_col: str,
-    vectorized: bool = True,
-    broadcast_rows: int = _BCAST_VERIFY_ROWS,
 ) -> DataFrame:
     """Exact-cosine verify of deduped (id_a, id_b) candidates.
 
-    Two shapes, picked by vector-table size (one cheap count):
-    - small table (<= broadcast_rows): broadcast the id->vector matrix
-      to the python workers once and ship ONLY the id pairs through
-      Arrow — 2 longs/pair instead of 2 d-dim float arrays (~60x fewer
-      verify bytes at 64d; at sf0.1 the join shape moved ~475 MB of
-      vectors for 465k candidates).
-    - large table: per-pair vector joins + batched einsum — shuffles
+    Two shapes, picked by id type and vector-table size (one cheap
+    count):
+    - integral ids, small table (<= _BCAST_VERIFY_ROWS): broadcast the
+      id->vector matrix to the python workers once and ship ONLY the id
+      pairs through Arrow — 2 longs/pair instead of 2 d-dim float arrays
+      (~60x fewer verify bytes at 64d; at sf0.1 the join shape moved
+      ~475 MB of vectors for 465k candidates).
+    - otherwise: per-pair vector joins + batched einsum — shuffles
       scale with candidates only, never all-pairs.
-    Same float64 arithmetic either way (asserted equal in tests)."""
+    Same float64 arithmetic either way (both checked against numpy in
+    tests)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType
 
     integral_ids = isinstance(vectors.schema[id_col].dataType, (IntegerType, LongType))
     # count only when the broadcast path is reachable — the join path
     # must not pay a scan-and-count job it cannot use
-    if vectorized and integral_ids and vectors.count() <= broadcast_rows:
+    if integral_ids and vectors.count() <= _BCAST_VERIFY_ROWS:
         rows = vectors.select(id_col, vec_col).collect()
         ids = np.array([r[0] for r in rows], dtype=np.int64)
         mat = np.array([r[1] for r in rows], dtype=np.float64)
@@ -277,15 +277,7 @@ def _verify_pairs(
 
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = cand.join(va, "id_a").join(vb, "id_b")
-    if vectorized:
-        scored = with_cosine_vectorized(pairs)
-    else:
-        dot = _DOT.format(a="va", b="vb")
-        scored = pairs.withColumn(
-            "cos",
-            F.expr(f"{dot} / ({_NORM.format(a='va')} * {_NORM.format(a='vb')})"),
-        )
+    scored = with_cosine_vectorized(cand.join(va, "id_a").join(vb, "id_b"))
     return (
         scored.where(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
@@ -301,7 +293,6 @@ def lsh_neardup_pairs(
     n_bands: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized_verify: bool = True,
 ) -> DataFrame:
     """Approximate near-dup pairs: block on sign-LSH signature bands, then
     exact cosine verify within buckets. Recall grows with bands; verified
@@ -339,7 +330,7 @@ def lsh_neardup_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    return _verify_pairs(cand, vectors, threshold, id_col, vec_col, vectorized_verify)
+    return _verify_pairs(cand, vectors, threshold, id_col, vec_col)
 
 
 # Trained-IVF defaults (shared with the DuckDB oracle generator in
@@ -490,7 +481,6 @@ def ivf_neardup_pairs(
     nprobe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized_verify: bool = True,
 ) -> DataFrame:
     """IVF ANN with a trained coarse quantizer: deterministic Lloyd's
     k-means (kmeans_centroids), each vector assigned to its `nprobe`
@@ -524,4 +514,4 @@ def ivf_neardup_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    return _verify_pairs(cand, vectors, threshold, id_col, vec_col, vectorized_verify)
+    return _verify_pairs(cand, vectors, threshold, id_col, vec_col)

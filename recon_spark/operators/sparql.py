@@ -75,6 +75,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from recon_spark.operators.scratch import iterate, pin_now
+
 __all__ = ["SparqlError", "parse_sparql", "compile_sparql"]
 
 
@@ -962,49 +964,29 @@ def _pattern_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
     return _bind_terms(graph, pat.terms, positions)
 
 
-# Closure iteration cap: the frontier extends one edge per round, so
-# the cap bounds path LENGTH (graph diameter), not pair count. 64
-# covers any plausible KG diameter; a graph that hasn't closed by then
-# is reported, never silently truncated.
-_PATH_MAX_ITERS = 64
-
-
 def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
     """SPARQL 1.1 §9.1 OneOrMorePath (`?s <p>+ ?o`): the set of node
     pairs connected by one or more p-edges.
 
-    Compiled as an iterative distinct closure (the PageRank precedent:
-    a driver-side loop over scratch-pinned frames, one co-partitioned
-    join per round; the loop runs ACTIONS at compile time, so unlike
-    plain BGPs the returned plan is materialized-by-parts). Set
-    semantics come from `distinct` + the left-anti "new pairs only"
-    gate, which also guarantees termination on cyclic graphs.
+    Compiled as a driver-side fixpoint (scratch.iterate over eagerly
+    pinned frames, one co-partitioned join per round; the loop runs
+    ACTIONS at compile time, so unlike plain BGPs the returned plan is
+    materialized-by-parts). Set semantics come from `distinct`, which
+    also guarantees termination on cyclic graphs.
 
-    Scale shape: when either endpoint is ground the closure is SEEDED —
-    frontier starts at that node and only reachable pairs ever
-    materialize (the 10^12-triple-safe mode, a BFS). The fully-unbound
-    form materializes the whole closure and is the caller's explicit
-    choice, same contract as allow_product. Inside GRAPH ?g the closure
-    runs per graph (graph joins the key); GRAPH <iri> prunes edges
-    before the first iteration."""
-
-    def pin(df: DataFrame) -> DataFrame:
-        # EAGER pin, unlike operators/scratch.py's lazy default: the
-        # loop materializes every frame each round anyway (isEmpty),
-        # and lazy localCheckpoint over the round's alias self-join +
-        # anti-join chain trips a Catalyst attribute-rewrite clash
-        # ("key not found: src#N") when the ground-endpoint filter is
-        # present. Eager replaces each round's plan with a LogicalRDD,
-        # which both fixes the clash and keeps every iteration's plan
-        # constant-size. Reliable mode keeps lineage, as in pin().
-        from recon_spark.operators.scratch import reliable_mode
-
-        if reliable_mode():
-            from pyspark.storagelevel import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df.localCheckpoint(eager=True)
-
+    Two steps, picked by the pattern:
+    - either endpoint ground: the closure is SEEDED — a BFS whose
+      frontier starts at that node, so only reachable pairs ever
+      materialize (the 10^12-triple-safe mode). Each round adds one
+      hop, so the round cap bounds the path depth from the seed.
+    - both endpoints unbound: the whole closure materializes (the
+      caller's explicit choice, same contract as allow_product) by
+      PATH DOUBLING — each round joins the reached pairs with
+      themselves, so round k reaches every path of length ≤ 2^k and a
+      path of d hops closes in ⌈log2 d⌉ + 1 rounds (the last one sees
+      the pinned row count stop growing).
+    Inside GRAPH ?g the closure runs per graph (graph joins the key);
+    GRAPH <iri> prunes edges before the first round."""
     keys: list[str] = []
     if pat.g is not None:
         _require_graph_col(graph)
@@ -1034,45 +1016,53 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
         )
     seed = (pat.o.value if reverse
             else pat.s.value if isinstance(pat.s, Lit) else None)
-    edges = pin(edges)
-    frontier = pin(
-        edges.where(F.col("src") == F.lit(seed)) if seed is not None else edges
-    )
-    reached = frontier
-    on = ["src", "dst"] + keys
-    for _ in range(_PATH_MAX_ITERS):
-        stepped = (
-            frontier.alias("f")
+    edges = pin_now(edges)
+
+    def hop(left: DataFrame, right: DataFrame) -> DataFrame:
+        # pairs (a, c) with a -> b in left and b -> c in right
+        return (
+            left.alias("l")
             .join(
-                edges.alias("e"),
-                [F.col("f.dst") == F.col("e.src")]
-                + [F.col(f"f.{k}") == F.col(f"e.{k}") for k in keys],
+                right.alias("r"),
+                [F.col("l.dst") == F.col("r.src")]
+                + [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys],
             )
             .select(
-                F.col("f.src").alias("src"), F.col("e.dst").alias("dst"),
-                *[F.col(f"f.{k}").alias(k) for k in keys],
+                F.col("l.src").alias("src"), F.col("r.dst").alias("dst"),
+                *[F.col(f"l.{k}").alias(k) for k in keys],
             )
-            .distinct()
         )
-        # pin stepped BEFORE the anti-join: checkpointing a plan in
-        # which the same pinned relation appears on both sides (stepped
-        # shares frontier's lineage with reached) trips Catalyst's
-        # relation-dedup attribute rewrite ("key not found: src#N");
-        # with stepped pinned, every checkpointed plan from here on has
-        # each leaf relation at most once.
-        stepped = pin(stepped)
-        new = pin(stepped.join(reached, on=on, how="left_anti"))
-        if new.isEmpty():
-            break
-        # reached stays a plain union of PINNED leaves — ≤ cap leaves,
-        # so the plan grows linearly and never re-derives a round.
-        reached = reached.unionByName(new)
-        frontier = new
+
+    what = f"<{pat.p.value}>+ closure"
+    if seed is None:
+        def double(state):
+            reached, n = state
+            nxt = pin_now(reached.unionByName(hop(reached, reached)).distinct())
+            n2 = nxt.count()
+            return (nxt, n2), n2 == n
+
+        reached, _ = iterate(double, (edges, edges.count()), what)
     else:
-        raise SparqlError(
-            f"<{pat.p.value}>+ closure did not converge within "
-            f"{_PATH_MAX_ITERS} iterations"
-        )
+        def bfs(state):
+            frontier, reached = state
+            # pin the hop BEFORE the anti-join: checkpointing a plan in
+            # which the same pinned relation appears on both sides (the
+            # hop shares frontier's lineage with reached) trips
+            # Catalyst's relation-dedup attribute rewrite ("key not
+            # found: src#N"); with it pinned, every checkpointed plan
+            # has each leaf relation at most once.
+            stepped = pin_now(hop(frontier, edges).distinct())
+            new = pin_now(stepped.join(reached, on=["src", "dst"] + keys,
+                                       how="left_anti"))
+            if new.isEmpty():
+                return state, True
+            # reached stays a plain union of PINNED leaves — ≤ cap
+            # leaves, so the plan grows linearly and never re-derives a
+            # round.
+            return (new, reached.unionByName(new)), False
+
+        frontier = pin_now(edges.where(F.col("src") == F.lit(seed)))
+        _, reached = iterate(bfs, (frontier, frontier), what)
     if reverse:
         reached = reached.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"),

@@ -1415,8 +1415,9 @@ SPARQL_PLUS = "SELECT ?s ?o WHERE { ?s <join>+ ?o } ORDER BY ?s ?o"
 def q_sparql_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL 1.1 property path `<join>+` over the canonical KG: all
     entity pairs connected by one or more join-edges (OneOrMorePath,
-    set semantics; cyclic-safe). Compiled as an iterative seeded/full
-    distinct closure (operators/sparql.py:_plus_frame). The oracle is
+    set semantics; cyclic-safe). Both endpoints are unbound, so it
+    compiles to the path-doubling distinct closure
+    (operators/sparql.py:_plus_frame). The oracle is
     DuckDB's own WITH RECURSIVE engine — a genuinely independent
     fixpoint implementation."""
     from recon_spark.operators.sparql import compile_sparql

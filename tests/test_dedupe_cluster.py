@@ -76,14 +76,20 @@ def test_simhash_matches_python_spec(spark):
     assert got[9001] == 0 and len(set(got.values())) > 1
 
 
-def test_connected_components_raises_past_max_iter(spark):
-    """A 61-node chain needs 60 label-propagation rounds: past the
-    50-round cap the distributed branch raises instead of returning
-    partial labels, while the driver branch gives one component."""
-    chain = spark.createDataFrame([(i, i + 1) for i in range(60)], "id_a long, id_b long")
+def test_connected_components_raises_past_max_iter(spark, monkeypatch):
+    """A 12-node chain needs 11 label-propagation rounds: past an 8-round
+    cap the distributed branch raises instead of returning partial
+    labels, while the driver branch gives one component."""
+    from recon_spark.operators import scratch
+
+    monkeypatch.setattr(scratch, "MAX_ROUNDS", 8)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(11)], "id_a long, id_b long")
     got = connected_components(chain).collect()
-    assert {r["component"] for r in got} == {0} and len(got) == 61
-    with pytest.raises(ValueError, match="did not converge within 50 rounds"):
+    assert {r["component"] for r in got} == {0} and len(got) == 12
+    with pytest.raises(
+        ValueError,
+        match="connected_components label propagation did not converge within 8 rounds",
+    ):
         connected_components(chain, driver_threshold=0)
 
 

@@ -135,6 +135,44 @@ def test_lsh_recall_reported(spark, exact_pairs):
     assert recall >= 0.3, f"LSH overall recall {recall}"
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_lsh_neardup_verify_shapes_match_numpy(spark, id_type):
+    """Long ids take the broadcast verify shape, string ids the join
+    shape. Both must return exactly the pairs that share a sign-LSH
+    band and reach the threshold, each cos = round(numpy cosine, 6)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from recon_spark.operators.similarity import hyperplanes, lsh_neardup_pairs
+
+    threshold = 0.45
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select("vec_id", "embedding")
+    rows = emb.collect()
+    key = [r.vec_id for r in rows]
+    if id_type == "string":  # unpadded, so string order != numeric order
+        emb = emb.withColumn("vec_id", F.format_string("v%d", "vec_id"))
+        key = [f"v{i}" for i in key]
+    got = {
+        (r.id_a, r.id_b): r.cos
+        for r in lsh_neardup_pairs(emb, threshold=threshold, dim=64).collect()
+    }
+
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    sig = (mat @ np.asarray(hyperplanes(64, 16)).T > 0) @ (1 << np.arange(16))
+    same_band = np.zeros((len(rows), len(rows)), dtype=bool)
+    for b in range(4):
+        piece = (sig >> (4 * b)) & 15
+        same_band |= piece[:, None] == piece[None, :]
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    near = (mat @ mat.T) / np.outer(norms, norms) >= threshold - 1e-9
+    want = {}
+    for i, j in zip(*np.nonzero(same_band & near)):
+        c = float(mat[i] @ mat[j] / (norms[i] * norms[j]))
+        if key[i] < key[j] and c >= threshold:
+            want[(key[i], key[j])] = round(c, 6)
+    assert want and got == want
+
+
 def test_connected_components_string_ids(spark):
     # ADVICE r1: the driver union-find fast path must honor non-long id
     # types the same way the distributed path does

@@ -9,6 +9,8 @@ pushed into the scan)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from recon_spark.operators.sparql import (
@@ -597,6 +599,80 @@ def test_plus_long_chain(spark):
     )
     out = compile_sparql(chain, "SELECT ?o WHERE { <n00> <next>+ ?o }")
     assert out.count() == 40  # every later node reachable from n00
+
+
+@pytest.mark.parametrize("d", [65, 200])
+def test_plus_unbound_chain_closes_in_log_rounds(spark, monkeypatch, d):
+    """Path doubling: a d-edge chain closes in ceil(log2 d) + 1 rounds,
+    so the cap is patched to one above that; any linear (one hop per
+    round) closure would raise here."""
+    from recon_spark.operators import scratch
+
+    monkeypatch.setattr(scratch, "MAX_ROUNDS", math.ceil(math.log2(d)) + 2)
+    chain = spark.createDataFrame(
+        [(f"n{i:03d}", "next", f"n{i + 1:03d}") for i in range(d)],
+        "subj string, pred string, obj string",
+    )
+    plus = compile_sparql(chain, "SELECT ?s ?o WHERE { ?s <next>+ ?o }")
+    want = {(f"n{i:03d}", f"n{j:03d}") for i in range(d + 1) for j in range(i + 1, d + 1)}
+    got = list(map(tuple, plus.collect()))
+    assert len(got) == d * (d + 1) // 2 and set(got) == want
+    if d == 65:
+        star = compile_sparql(chain, "SELECT ?s ?o WHERE { ?s <next>* ?o }")
+        ident = {(f"n{i:03d}",) * 2 for i in range(d + 1)}
+        assert sorted(map(tuple, star.collect())) == sorted(want | ident)
+
+
+def _bfs_closure(edges):
+    """{(s, o): o reachable from s by one or more edges} by per-node BFS."""
+    succ: dict = {}
+    for s, o in edges:
+        succ.setdefault(s, set()).add(o)
+    out = set()
+    for start in succ:
+        seen, todo = set(), list(succ[start])
+        while todo:
+            n = todo.pop()
+            if n not in seen:
+                seen.add(n)
+                todo.extend(succ.get(n, ()))
+        out |= {(start, n) for n in seen}
+    return out
+
+
+def test_plus_star_random_named_graphs_match_bfs(spark):
+    """20 random <=12-node graphs (cycles, self-loops, node names shared
+    across graphs, a second predicate as noise) as 20 named graphs of
+    one quad frame: per-graph + and *, and the unbound + over the union
+    of all graphs, against a Python BFS closure."""
+    import random
+
+    rng = random.Random(11)
+    quads = []
+    for g in range(20):
+        nodes = [f"n{i}" for i in range(rng.randint(1, 12))]
+        for _ in range(rng.randint(0, 2 * len(nodes))):
+            quads.append((rng.choice(nodes), "p", rng.choice(nodes), f"g{g}"))
+        for _ in range(rng.randint(0, 3)):
+            quads.append((rng.choice(nodes), "q", rng.choice(nodes), f"g{g}"))
+    assert any(s == o for s, p, o, _ in quads if p == "p")  # a self-loop
+    frame = spark.createDataFrame(
+        quads, "subj string, pred string, obj string, graph string"
+    )
+    plus_g, star_g = set(), set()
+    for g in {q[3] for q in quads}:
+        cl = _bfs_closure([(s, o) for s, p, o, gg in quads if gg == g and p == "p"])
+        terms = {t for s, _, o, gg in quads if gg == g for t in (s, o)}
+        plus_g |= {(g, s, o) for s, o in cl}
+        star_g |= {(g, s, o) for s, o in cl} | {(g, t, t) for t in terms}
+
+    def run(q):
+        return sorted(map(tuple, compile_sparql(frame, q).collect()))
+
+    assert run("SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p>+ ?o } }") == sorted(plus_g)
+    assert run("SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p>* ?o } }") == sorted(star_g)
+    union = _bfs_closure([(s, o) for s, p, o, _ in quads if p == "p"])
+    assert run("SELECT ?s ?o WHERE { ?s <p>+ ?o }") == sorted(union)
 
 
 def test_plus_per_graph_scope(spark):
