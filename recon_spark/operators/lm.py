@@ -41,6 +41,24 @@ TOKEN_SPLIT = "[^a-z0-9]+"
 PPL_ROUND = 6
 
 
+# Log-probabilities are summed as integer nano-nats: an integer sum is
+# order-independent, so ppl is bit-equal across partitionings and
+# between the Spark and DuckDB twins (the dsir_bucket_weights pattern).
+SQL_PPL = (
+    "round(exp(-CAST(sum(CAST(round(ln(s) * 1e9) AS BIGINT)) AS DOUBLE)"
+    f" / 1e9 / count(*)), {PPL_ROUND})"
+)
+
+
+def _ppl(s: str):
+    """exp(-mean(ln s)) over the group's non-null s, from the fixed-point
+    log sum (the Spark side of SQL_PPL); NULL for a group with none."""
+    logp = F.sum(F.round(F.log(s) * 1e9).cast("bigint")).cast("double")
+    return F.when(
+        F.count(s) > 0, F.round(F.exp(-logp / 1e9 / F.count(s)), PPL_ROUND)
+    )
+
+
 def tokens_col(text_col: str = "text"):
     """Lower-cased alphanumeric tokens as an array column (empty strings
     from leading/trailing separators filtered JVM-side)."""
@@ -151,10 +169,7 @@ def score_perplexity(
     )
     return scored.groupBy("doc_id").agg(
         F.count("s").alias("n_bigrams"),
-        F.when(
-            F.count("s") > 0,
-            F.round(F.exp(-F.sum(F.log("s")) / F.count("s")), PPL_ROUND),
-        ).alias("ppl"),
+        _ppl("s").alias("ppl"),
     )
 
 
@@ -210,7 +225,7 @@ scored AS (
 ),
 per_doc AS (
   SELECT doc_id, count(*) AS n_bigrams,
-         round(exp(-sum(ln(s)) / count(*)), {PPL_ROUND}) AS ppl
+         {SQL_PPL} AS ppl
   FROM scored GROUP BY 1
 ),
 ppl AS (
@@ -325,10 +340,7 @@ def score_perplexity_trigram(
     )
     return scored.groupBy("doc_id").agg(
         F.count("s").alias("n_trigrams"),
-        F.when(
-            F.count("s") > 0,
-            F.round(F.exp(-F.sum(F.log("s")) / F.count("s")), PPL_ROUND),
-        ).alias("ppl"),
+        _ppl("s").alias("ppl"),
     )
 
 
@@ -374,7 +386,7 @@ scored3 AS (
 ),
 per_doc3 AS (
   SELECT doc_id, count(*) AS n_trigrams,
-         round(exp(-sum(ln(s)) / count(*)), {PPL_ROUND}) AS ppl
+         {SQL_PPL} AS ppl
   FROM scored3 GROUP BY 1
 ),
 ppl3 AS (

@@ -38,9 +38,8 @@ functions run by ``iterate``: at most ``MAX_ROUNDS`` rounds, then a
 ValueError naming the loop, never partial results. ``pin_now`` is the
 EAGER twin of ``scratch`` for their round frames: each round runs an
 action anyway, and an eager checkpoint swaps the round's plan for a
-LogicalRDD, which keeps plans constant-size and avoids a Catalyst
-attribute-rewrite clash ("key not found: src#N") that a lazy one trips
-over a self-join + anti-join chain. Reliable mode persists instead.
+LogicalRDD, so the next round's plan is constant-size instead of
+re-deriving every earlier round. Reliable mode persists instead.
 """
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 
 # Round cap of every fixpoint loop. Path doubling and the OWL closure
-# need ~log2(diameter) rounds; the linear loops (seeded BFS, hash-min
+# need ~log2(diameter) rounds; the linear loops (seeded `<p>+`, hash-min
 # labels) need one round per hop of the diameter.
 MAX_ROUNDS = 64
 

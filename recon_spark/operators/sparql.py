@@ -974,17 +974,19 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
     materialized-by-parts). Set semantics come from `distinct`, which
     also guarantees termination on cyclic graphs.
 
-    Two steps, picked by the pattern:
-    - either endpoint ground: the closure is SEEDED — a BFS whose
-      frontier starts at that node, so only reachable pairs ever
-      materialize (the 10^12-triple-safe mode). Each round adds one
-      hop, so the round cap bounds the path depth from the seed.
+    One step for both cases: each round pins
+    distinct(reached ∪ reached ⋈ right) and the loop stops when the
+    pinned row count stops growing.
     - both endpoints unbound: the whole closure materializes (the
       caller's explicit choice, same contract as allow_product) by
-      PATH DOUBLING — each round joins the reached pairs with
-      themselves, so round k reaches every path of length ≤ 2^k and a
-      path of d hops closes in ⌈log2 d⌉ + 1 rounds (the last one sees
-      the pinned row count stop growing).
+      PATH DOUBLING — right is reached itself, so round k reaches every
+      path of length ≤ 2^k and a path of d hops closes in
+      ⌈log2 d⌉ + 1 rounds.
+    - either endpoint ground: the closure is SEEDED — reached starts as
+      the seed's out-edges and right is the edge set, so only pairs
+      that start at the seed ever materialize (the 10^12-triple-safe
+      mode). Each round adds one hop, so a path of depth d takes d + 1
+      rounds and the round cap bounds the depth from the seed.
     Inside GRAPH ?g the closure runs per graph (graph joins the key);
     GRAPH <iri> prunes edges before the first round."""
     keys: list[str] = []
@@ -1033,36 +1035,18 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
             )
         )
 
-    what = f"<{pat.p.value}>+ closure"
-    if seed is None:
-        def double(state):
-            reached, n = state
-            nxt = pin_now(reached.unionByName(hop(reached, reached)).distinct())
-            n2 = nxt.count()
-            return (nxt, n2), n2 == n
+    # unbound: path doubling (right = reached); seeded: one hop per
+    # round from the seed's out-edges (right = edges)
+    start = edges if seed is None else pin_now(edges.where(F.col("src") == F.lit(seed)))
 
-        reached, _ = iterate(double, (edges, edges.count()), what)
-    else:
-        def bfs(state):
-            frontier, reached = state
-            # pin the hop BEFORE the anti-join: checkpointing a plan in
-            # which the same pinned relation appears on both sides (the
-            # hop shares frontier's lineage with reached) trips
-            # Catalyst's relation-dedup attribute rewrite ("key not
-            # found: src#N"); with it pinned, every checkpointed plan
-            # has each leaf relation at most once.
-            stepped = pin_now(hop(frontier, edges).distinct())
-            new = pin_now(stepped.join(reached, on=["src", "dst"] + keys,
-                                       how="left_anti"))
-            if new.isEmpty():
-                return state, True
-            # reached stays a plain union of PINNED leaves — ≤ cap
-            # leaves, so the plan grows linearly and never re-derives a
-            # round.
-            return (new, reached.unionByName(new)), False
+    def grow(state):
+        reached, n = state
+        right = reached if seed is None else edges
+        nxt = pin_now(reached.unionByName(hop(reached, right)).distinct())
+        n2 = nxt.count()
+        return (nxt, n2), n2 == n
 
-        frontier = pin_now(edges.where(F.col("src") == F.lit(seed)))
-        _, reached = iterate(bfs, (frontier, frontier), what)
+    reached, _ = iterate(grow, (start, start.count()), f"<{pat.p.value}>+ closure")
     if reverse:
         reached = reached.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"),

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recon_spark.operators.lm import (
-    PPL_ROUND,
     score_perplexity,
     sql_bigram_lm_ctes,
     train_bigram_lm,
@@ -61,7 +60,15 @@ def q_lm_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(F.col("ppl") <= F.col("thr"), 1).otherwise(0)
             ).alias("n_keep"),
-            F.round(F.avg("ppl"), PPL_ROUND).alias("avg_ppl"),
+            # mean of the 6-decimal ppl values from an integer micro
+            # sum, so it does not depend on summation order
+            F.when(
+                F.count("ppl") > 0,
+                F.round(
+                    F.sum(F.round(F.col("ppl") * 1e6).cast("bigint")).cast("double")
+                    / F.count("ppl")
+                ) / 1e6,
+            ).alias("avg_ppl"),
         )
     )
 
@@ -71,7 +78,8 @@ WITH {sql_bigram_lm_ctes(_SQL_TRAIN_WHERE)},
 thr AS (SELECT quantile_cont(ppl, 0.5) AS thr FROM ppl)
 SELECT d.source, count(*) AS n_docs,
        sum(CASE WHEN p.ppl <= thr.thr THEN 1 ELSE 0 END) AS n_keep,
-       round(avg(p.ppl), {PPL_ROUND}) AS avg_ppl
+       round(CAST(sum(CAST(round(p.ppl * 1e6) AS BIGINT)) AS DOUBLE)
+             / count(p.ppl)) / 1e6 AS avg_ppl
 FROM documents d
 JOIN ppl p ON d.doc_id = p.doc_id
 CROSS JOIN thr

@@ -489,172 +489,3 @@ def stream_user_sessions_continuous(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def stream_user_sessions_tws(
-    spark: SparkSession,
-    source_dir: str,
-    gap_ms: int = 1_800_000,
-    watermark: str = "2 hours",
-    schema_ddl: str = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ),
-):
-    """The ``transformWithStateInPandas`` twin of
-    ``stream_user_sessions_continuous`` — same contract (one row per
-    CLOSED session, sealed exactly when the event-time watermark passes
-    session end + gap, cross-batch disorder buffered, exactly-once on
-    (user_id, session_start_ms)), re-expressed on Spark 4's typed
-    stateful-processor API instead of the flat GroupState struct:
-
-    - the per-user event buffer is a typed ``ListState``: when an
-      invocation seals nothing (the common case for an open session),
-      new events are written with ``appendList`` — an element append,
-      not a rewrite of one monolithic struct row, which is the
-      structural win over applyInPandasWithState (there every touched
-      user re-serializes its whole buffer); only a seal that CONSUMES
-      buffered events pays a full ``put`` of the surviving tail;
-    - sealing is driven by REGISTERED TIMERS (``registerTimer`` +
-      ``handleExpiredTimer``): each invocation re-registers exactly one
-      timer at the earliest instant the user's open tail could seal
-      (max(next_seal, wm + 1), the same discipline the GroupState
-      variant documents), with the active expiry tracked in a
-      ``ValueState`` so stale timers are explicitly deleted;
-    - Spark drives no-data micro-batches through the timer path, so a
-      drained availableNow run still seals everything the final
-      watermark covers.
-
-    Emitted rows are bit-identical to both applyInPandasWithState
-    modes (the multi-batch disorder test runs the same protocol against
-    all variants), so the SAME DuckDB oracle locks all three.
-
-    SANDBOX GATE: transformWithStateInPandas drives its state store
-    through a protobuf-based Python<->JVM state-server protocol, and
-    this container ships no ``protobuf`` wheel (the raw failure mode is
-    an opaque "driver worker exited unexpectedly (crashed)" mid-query —
-    verified against pyspark 4.1.2: the worker dies on
-    ``from google.protobuf import descriptor``). Gated up front with a
-    clear ImportError, same policy as the spaCy DocBin loaders
-    (io.py); the applyInPandasWithState variants remain the exercised
-    production paths here.
-    """
-    import importlib.util
-
-    try:
-        _pb = importlib.util.find_spec("google.protobuf")
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        _pb = None
-    if _pb is None:
-        raise ImportError(
-            "stream_user_sessions_tws needs the protobuf wheel: Spark's "
-            "transformWithStateInPandas state-server protocol imports "
-            "google.protobuf in the Python worker (without it the worker "
-            "crashes opaquely mid-query). Install protobuf, or use "
-            "stream_user_sessions_continuous (applyInPandasWithState), "
-            "which has identical output semantics."
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    src = spark.readStream.schema(schema_ddl).parquet(source_dir)
-    events = (
-        src.withWatermark("ts", watermark)
-        .select("user_id", "ts", "event_id")
-    )
-    gap = gap_ms
-    out_cols = ["user_id", "session_start_ms", "session_end_ms", "n_events"]
-
-    class _Sessionizer(StatefulProcessor):
-        def init(self, handle):
-            self._handle = handle
-            self._buf = handle.getListState("evs", "ms BIGINT")
-            self._timer = handle.getValueState("timer_ms", "t BIGINT")
-
-        def _active_timer(self):
-            row = self._timer.get() if self._timer.exists() else None
-            return None if row is None else int(row[0])
-
-        def _drain(self, key, new_ms, wm):
-            had = (
-                [int(r[0]) for r in self._buf.get()]
-                if self._buf.exists() else []
-            )
-            buf = had + list(new_ms)
-            rows: list[tuple[int, int, int, int]] = []
-            keep: list[int] = []
-            next_seal = None
-            if buf:
-                buf.sort()
-                start = last = buf[0]
-                n = 1
-                sessions = []
-                for ms in buf[1:]:
-                    if ms - last > gap:
-                        sessions.append((start, last, n))
-                        start, n = ms, 0
-                    n += 1
-                    last = ms
-                sessions.append((start, last, n))
-                consumed = 0
-                for start, last, n in sessions:
-                    if last + gap <= wm:
-                        rows.append((key[0], start, last, n))
-                        consumed += n
-                    else:
-                        next_seal = last + gap
-                        keep = buf[consumed:]
-                        break
-            old = self._active_timer()
-            if keep:
-                if rows:
-                    # a seal consumed events: rewrite the surviving tail
-                    self._buf.put([(ms,) for ms in keep])
-                elif new_ms:
-                    # nothing sealed: element-append the new events only
-                    # (keep == sorted(had + new_ms); the store may hold
-                    # them unsorted — _drain re-sorts on every read)
-                    self._buf.appendList([(ms,) for ms in new_ms])
-                new_t = max(next_seal, wm + 1)
-                if old != new_t:
-                    if old is not None:
-                        self._handle.deleteTimer(old)
-                    self._handle.registerTimer(new_t)
-                    self._timer.update((new_t,))
-            else:
-                if old is not None:
-                    self._handle.deleteTimer(old)
-                self._buf.clear()
-                self._timer.clear()
-            yield pd.DataFrame(rows, columns=out_cols)
-
-        def handleInputRows(self, key, rows, timerValues):
-            ms: list[int] = []
-            for pdf in rows:
-                if len(pdf):
-                    # ns-resolution guard, same as the GroupState variant
-                    ms.extend(
-                        int(v) // 1_000_000
-                        for v in pdf["ts"].astype("datetime64[ns]")
-                        .astype("int64").tolist()
-                    )
-            yield from self._drain(key, ms, timerValues.getCurrentWatermarkInMs())
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # the expired timer is consumed by firing; forget it so
-            # _drain doesn't try to delete a timer that no longer exists
-            self._timer.clear()
-            yield from self._drain(key, [], timerValues.getCurrentWatermarkInMs())
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Sessionizer(),
-        outputStructType=(
-            "user_id long, session_start_ms long, session_end_ms long, "
-            "n_events long"
-        ),
-        outputMode="append",
-        timeMode="eventTime",
-    )

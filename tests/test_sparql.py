@@ -599,6 +599,10 @@ def test_plus_long_chain(spark):
     )
     out = compile_sparql(chain, "SELECT ?o WHERE { <n00> <next>+ ?o }")
     assert out.count() == 40  # every later node reachable from n00
+    # the seeded closure returns its last pinned round, not a union of
+    # one pinned leaf per round
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1
 
 
 @pytest.mark.parametrize("d", [65, 200])
@@ -643,8 +647,9 @@ def _bfs_closure(edges):
 def test_plus_star_random_named_graphs_match_bfs(spark):
     """20 random <=12-node graphs (cycles, self-loops, node names shared
     across graphs, a second predicate as noise) as 20 named graphs of
-    one quad frame: per-graph + and *, and the unbound + over the union
-    of all graphs, against a Python BFS closure."""
+    one quad frame: per-graph + and *, the unbound + over the union of
+    all graphs, and seeded +/* from three nodes (both directions, GRAPH
+    ?g and GRAPH <g3>), against a Python BFS closure."""
     import random
 
     rng = random.Random(11)
@@ -673,6 +678,19 @@ def test_plus_star_random_named_graphs_match_bfs(spark):
     assert run("SELECT ?g ?s ?o WHERE { GRAPH ?g { ?s <p>* ?o } }") == sorted(star_g)
     union = _bfs_closure([(s, o) for s, p, o, _ in quads if p == "p"])
     assert run("SELECT ?s ?o WHERE { ?s <p>+ ?o }") == sorted(union)
+
+    # seeded (ground endpoint) closures from three of the fixture's nodes
+    graphs = {q[3] for q in quads}
+    for n in rng.sample(sorted({t for s, _, o, _ in quads for t in (s, o)}), 3):
+        assert run(f"SELECT ?o WHERE {{ <{n}> <p>+ ?o }}") == sorted(
+            (o,) for s, o in union if s == n)
+        assert run(f"SELECT ?s WHERE {{ ?s <p>+ <{n}> }}") == sorted(
+            (s,) for s, o in union if o == n)
+        # a ground endpoint is its own zero-length path in every graph
+        assert run(f"SELECT ?g ?o WHERE {{ GRAPH ?g {{ <{n}> <p>* ?o }} }}") == sorted(
+            {(g, o) for g, s, o in plus_g if s == n} | {(g, n) for g in graphs})
+        assert run(f"SELECT ?o WHERE {{ GRAPH <g3> {{ <{n}> <p>+ ?o }} }}") == sorted(
+            (o,) for g, s, o in plus_g if g == "g3" and s == n)
 
 
 def test_plus_per_graph_scope(spark):

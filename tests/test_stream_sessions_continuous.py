@@ -174,67 +174,3 @@ def test_drain_partitions_restores_on_failure(spark):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_tws_sessionizer_gate_or_parity(spark, tmp_path):
-    """transformWithStateInPandas twin: without the protobuf wheel the
-    TWS state-server protocol crashes the Python worker opaquely, so
-    stream_user_sessions_tws must refuse up front with a clear
-    ImportError (the spaCy-loader gate policy). With protobuf present
-    it must pass the exact multi-batch disorder protocol of the
-    applyInPandasWithState variants."""
-    import importlib.util
-
-    from recon_spark.streaming import stream_user_sessions_tws
-
-    try:
-        has_pb = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_pb = False
-    if not has_pb:
-        with pytest.raises(ImportError, match="protobuf"):
-            stream_user_sessions_tws(spark, str(tmp_path))
-        return
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    f1 = [(1, BASE, 1), (2, BASE + 20 * MIN, 1), (3, BASE + 60 * MIN, 2)]
-    f2 = [
-        (4, BASE + 10 * MIN, 1),
-        (5, BASE + 180 * MIN, 1),
-        (6, BASE + 185 * MIN, 1),
-        (7, BASE + 80 * MIN, 2),
-    ]
-    f3 = [(8, BASE + 600 * MIN, SENTINEL_USER)]
-    for i, rows in enumerate([f1, f2, f3]):
-        p = str(tmp_path / f"stage{i}")
-        _write_batch(spark, p, rows)
-        part = [f for f in os.listdir(p) if f.endswith(".parquet")][0]
-        dst = f"{src}/batch-{i}.parquet"
-        os.rename(f"{p}/{part}", dst)
-        os.utime(dst, (time.time() + i, time.time() + i))
-
-    sdf = stream_user_sessions_tws(spark, src, gap_ms=GAP)
-    name = "sess_tws_" + uuid.uuid4().hex[:8]
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("maxFilesPerTrigger", 1)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start_ms, r.session_end_ms, r.n_events)
-        for r in spark.table(name).collect()
-    }
-    all_events = [(uid, ms) for batch in (f1, f2, f3) for (_, ms, uid) in batch]
-    expected = {
-        (uid, s, e, n)
-        for uid, sess in _batch_sessions(all_events).items()
-        if uid != SENTINEL_USER
-        for (s, e, n) in sess
-    }
-    assert got == expected

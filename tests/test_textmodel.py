@@ -20,7 +20,7 @@ from recon_spark.operators.bpe import (
 )
 from recon_spark.operators.lm import ALPHA, score_perplexity, train_bigram_lm
 from recon_spark.queries.textmodel import ORACLES, QUERIES
-from tests.conftest import SF_SMOKE, compare_query
+from tests.conftest import SF_ORACLE, SF_SMOKE, compare_query, register_views
 
 
 # ---------------------------------------------------------------- references
@@ -191,6 +191,22 @@ def test_lm_shuffle_and_broadcast_paths_agree(spark):
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_textmodel_query_matches_oracle(spark, ddb, name):
     compare_query(spark, ddb, QUERIES[name], ORACLES[name], SF_SMOKE)
+
+
+def test_lm_quality_gate_exact_at_any_partitioning(spark, ddb):
+    """Log-probs and the per-source mean are integer fixed-point sums,
+    so the gate's rows do not depend on the shuffle partition count and
+    equal the DuckDB twin exactly (no float tolerance)."""
+    register_views(ddb, SF_ORACLE)
+    want = sorted(ddb.sql(ORACLES["lm_quality_gate"]).fetchall())
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (2, 8, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            got = QUERIES["lm_quality_gate"](spark, SF_ORACLE).collect()
+            assert sorted(map(tuple, got)) == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_trigram_backoff_ladder_hand_computed(spark):
