@@ -44,6 +44,7 @@ def stats_main(argv: list[str]) -> int:
     from pyspark.sql import functions as F
 
     from recon_spark.operators.extraction import detect_mentions
+    from recon_spark.operators.scratch import scratch
     from recon_spark.session import get_spark
 
     spark = get_spark(app_name="recon_spark_stats", master=args.master)
@@ -53,7 +54,7 @@ def stats_main(argv: list[str]) -> int:
 
         ensure_pyfiles(spark)
         docs = spark.read.parquet(args.docs)
-        d = detect_mentions(docs).persist()  # shared by both aggregates
+        d = scratch(detect_mentions(docs))  # shared by both aggregates
         per_split = {
             r["source"]: {
                 "n_examples": r["n_examples"],
@@ -84,7 +85,6 @@ def stats_main(argv: list[str]) -> int:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        d.unpersist()
         dist: dict[str, dict[str, float]] = {}
         for r in label_counts:
             dist.setdefault(r["source"], {})[r["label"]] = float(r["n"])

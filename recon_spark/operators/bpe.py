@@ -24,8 +24,9 @@ Scale design (10^12-doc corpus):
   left-to-right semantics, bit-equal to the reference scan (see
   tests/test_textmodel.py's run-of-identical-symbols cases, where the
   naive regex-replace formulation is WRONG).
-- The dictionary is re-cached each round and the previous round
-  unpersisted, so round plans stay O(1) deep across any merge count.
+- Each round's dictionary is pinned with scratch.pin_now (an eager
+  localCheckpoint), so round plans stay O(1) deep across any merge
+  count.
 
 The DuckDB oracle replays training with an independent engine: each
 round's greedy application runs as a recursive-CTE state machine over
@@ -39,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from recon_spark.operators.lm import tokens_col
+from recon_spark.operators.scratch import pin_now
 
 EOW = "</w>"
 N_MERGES = 8
@@ -132,8 +134,7 @@ def bpe_train(
     b) tie-break, and the dictionary with all merges applied. Stops
     early if the dictionary runs out of adjacent pairs.
     """
-    words = word_freqs(docs, text_col).cache()
-    words.count()  # materialize before the loop
+    words, _ = pin_now(word_freqs(docs, text_col))
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -146,15 +147,7 @@ def bpe_train(
             break
         a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
         merges.append((rank, a, b, cnt))
-        nxt = words.withColumn("toks", merge_fold("toks", a, b)).cache()
-        nxt.count()
-        words.unpersist()
-        words = nxt
-    # hand back an UNCACHED frame: the lineage (chained folds over the
-    # dictionary agg) recomputes in one pass, and callers — registry
-    # queries — must leave zero cached blocks behind (the sweep test's
-    # hygiene invariant)
-    words.unpersist()
+        words, _ = pin_now(words.withColumn("toks", merge_fold("toks", a, b)))
     return merges, words
 
 

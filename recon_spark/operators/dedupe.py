@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from recon_spark.operators.scratch import iterate, scratch
+from recon_spark.operators.scratch import iterate, pin_now, scratch
 
 P = 1_000_000_007
 N_PERM = 16
@@ -309,12 +309,12 @@ def connected_components(
     label propagation — each round every node adopts the smallest label
     among itself and its neighbors; converges in O(diameter) rounds
     (near-dup clusters are tiny, so 2-3 rounds). Each round is one
-    shuffle on id; the frontier check stops early; AQE handles the
-    shrinking join sizes. Both paths produce identical labels
-    (component = min reachable id): the rounds run through
-    scratch.iterate, so a component whose diameter needs more than
-    scratch.MAX_ROUNDS rounds raises ValueError instead of returning
-    partial labels."""
+    checkpoint job (scratch.pin_now), which also counts the nodes whose
+    label dropped; the loop stops on the first round where none did.
+    Both paths produce identical labels (component = min reachable id):
+    the rounds run through scratch.iterate, so a component whose
+    diameter needs more than scratch.MAX_ROUNDS rounds raises ValueError
+    instead of returning partial labels."""
     # single action: fetch threshold+1 rows; a full count would run the
     # (expensive) candidate-generation job twice
     from pyspark.sql.types import StructField, StructType
@@ -369,22 +369,18 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = scratch(
+        new_labels, changed = pin_now(
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
                 F.least(
                     F.col("component"), F.coalesce("nbr_min", F.col("component"))
                 ).alias("component"),
-            )
+                (F.col("nbr_min") < F.col("component")).alias("changed"),
+            ),
+            F.sum(F.col("changed").cast("long")),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        return new_labels, changed == 0
+        return new_labels.drop("changed"), not changed
 
     return iterate(
         propagate, labels, "connected_components label propagation"

@@ -64,9 +64,8 @@ def pagerank(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    # localCheckpoint (GC-released) instead of persist: these frames are
-    # referenced every iteration in the returned lazy plan, and a
-    # persist would pin executor blocks for the session lifetime
+    # pinned: these frames are referenced every iteration in the
+    # returned lazy plan
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -175,9 +174,6 @@ def cooccurrence_pmi(
       to both sides of the pair frame; no shuffle for the PMI join.
     - N is one scalar count action (a long on the driver, not data).
     """
-    # localCheckpoint, not persist: blocks release when the DataFrame is
-    # GC'd (ContextCleaner), so long-lived sessions running many queries
-    # don't accumulate cached partitions the caller can never unpersist
     ment = (
         entity_docs.select(
             F.col(doc_col).alias("doc_id"), F.col(entity_col).alias("entity")
@@ -576,10 +572,8 @@ def random_walks(
         .where(F.col("s") != F.col("t"))
         .distinct()
     )
-    # localCheckpoint (GC-released) instead of persist: the adjacency is
-    # referenced walk_len times in the returned plan, but a persist here
-    # would pin executor blocks until someone unpersists — which no
-    # caller of a lazy return value can do at the right moment
+    # pinned: the adjacency is referenced walk_len times in the
+    # returned plan
     adj = (
         e.groupBy("s")
         .agg(F.sort_array(F.collect_list("t")).alias("nbrs"))
@@ -678,9 +672,7 @@ def kcore(
         # unbroken, the doubled lineage re-executes the upstream
         # extraction 2^iters times, and plain persist() still pays a
         # recursive broadcast-materialization job per semi-join (measured
-        # 75s -> 2.6s on the sf0.01 canonical graph). The label-
-        # propagation step of dedupe.connected_components pins the
-        # same way.
+        # 75s -> 2.6s on the sf0.01 canonical graph).
         und = (
             und.join(keep, und.a == keep.node, "left_semi")
             .join(keep, und.b == keep.node, "left_semi")
@@ -770,7 +762,6 @@ def negative_samples(
     negatives (the property recon's content-addressed store gives
     examples, recon/store.py:39-47).
     """
-    # localCheckpoint (GC-released) instead of persist — see random_walks
     t = (
         triples.select("subj", "pred", "obj")
         .distinct()

@@ -161,12 +161,7 @@ def hardest_examples_colocated(
     predicates (no explode, no join); empty-span docs are rows already.
 
     The per-document score frame (doc_id, count, fscore) is pinned with
-    operators.scratch.scratch(), and the returned plan reads that pin.
-    Under RECON_RELIABLE_SCRATCH=1 the pin is a persist() that the
-    caller releases (spark.catalog.clearCache()), the helper's
-    documented contract; by default it is a lazy localCheckpoint that
-    the ContextCleaner releases once the returned frame is
-    garbage-collected."""
+    operators.scratch.scratch(), and the returned plan reads that pin."""
     match = "p.start = g.start AND p.end = g.end AND p.label = g.label"
     per_doc = df.select(
         F.col(id_col).alias("doc_id"),

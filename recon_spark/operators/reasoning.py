@@ -651,12 +651,11 @@ def owl_extend(
         nxt = pieces[0]
         for p in pieces[1:]:
             nxt = nxt.unionByName(p)
-        nxt = pin_now(nxt.dropDuplicates())
-        n2 = nxt.count()
+        nxt, n2 = pin_now(nxt.dropDuplicates())
         return (nxt, n2), n2 == n
 
-    edges = pin_now(abox.select("subj", "pred", "obj").dropDuplicates())
-    edges, _ = iterate(extend, (edges, edges.count()), "OWL property closure")
+    start = pin_now(abox.select("subj", "pred", "obj").dropDuplicates())
+    edges, _ = iterate(extend, start, "OWL property closure")
     return edges
 
 

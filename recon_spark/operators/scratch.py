@@ -8,46 +8,32 @@ pinning it raises a lifecycle question because our query contract
 returns LAZY DataFrames — there is no post-execution hook where the
 operator could call unpersist.
 
-Two pin strategies, one explicit tradeoff:
-
-- default — ``localCheckpoint(eager=False)``: blocks are executor-local
-  and are released by the ContextCleaner when the driver-side DataFrame
-  is garbage-collected, so a long-lived session that runs thousands of
-  queries never accumulates pinned blocks (``DataFrame.persist`` pins in
-  the CacheManager by logical plan and is NEVER GC-released — the r2/r4
-  leak class). The cost: localCheckpoint truncates lineage with
-  non-replicated blocks, so on a real multi-executor cluster the loss of
-  an executor mid-job makes its blocks unrecoverable and the JOB fails
-  (callers must tolerate job-level retry). On local[N] — tests, bench,
-  the driver — executor loss is process death, so the tradeoff is free.
-
-- ``RECON_RELIABLE_SCRATCH=1`` — ``persist(MEMORY_AND_DISK)``: lineage
-  is kept, executor loss recomputes the lost partitions and the job
-  survives — the right mode for a 1000-executor cluster where retry is
-  expensive. The cost: blocks stay pinned until the CALLER releases
-  them (``spark.catalog.clearCache()`` between jobs, or session end);
-  a session that never releases accumulates scratch blocks.
-
-This knob is the resolution of the round-3 ADVICE item on
-operators/graph.py:71: neither strategy dominates — pick per
-deployment, in one place, documented.
+One pin strategy: ``localCheckpoint``. Its blocks are executor-local
+and the ContextCleaner releases them when the driver-side DataFrame is
+garbage-collected, so a long-lived session that runs thousands of
+queries never accumulates pinned blocks. The tradeoff: the blocks are
+not replicated and the lineage behind them is cut, so on a real
+multi-executor cluster losing an executor fails the job and the caller
+retries it. On local[N] executor loss is process death, so the
+tradeoff is free.
 
 Driver-side fixpoint loops (sparql._plus_frame, reasoning.owl_extend,
 the distributed branch of dedupe.connected_components) are step
 functions run by ``iterate``: at most ``MAX_ROUNDS`` rounds, then a
 ValueError naming the loop, never partial results. ``pin_now`` is the
-EAGER twin of ``scratch`` for their round frames: each round runs an
-action anyway, and an eager checkpoint swaps the round's plan for a
-LogicalRDD, so the next round's plan is constant-size instead of
-re-deriving every earlier round. Reliable mode persists instead.
+EAGER twin of ``scratch`` for their round frames, and it is the round's
+only job: the checkpoint swaps the round's plan for a LogicalRDD, so
+the next round's plan is constant-size instead of re-deriving every
+earlier round, and an Observation on the same job reports the metric
+the loop's stop test needs (a row count by default).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 # Round cap of every fixpoint loop. Path doubling and the OWL closure
 # need ~log2(diameter) rounds; the linear loops (seeded `<p>+`, hash-min
@@ -55,24 +41,20 @@ from pyspark.sql import DataFrame
 MAX_ROUNDS = 64
 
 
-def reliable_mode() -> bool:
-    return os.environ.get("RECON_RELIABLE_SCRATCH", "") == "1"
-
-
 def scratch(df: DataFrame) -> DataFrame:
     """Pin an intra-query intermediate that multiple downstream branches
-    of the same returned plan consume. See module docstring for the
-    lifecycle / fault-tolerance tradeoff the mode switch expresses."""
-    if reliable_mode():
-        from pyspark.storagelevel import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+    of the same returned plan consume (lazy; see module docstring)."""
     return df.localCheckpoint(eager=False)
 
 
-def pin_now(df: DataFrame) -> DataFrame:
-    """Eagerly pin one round of a fixpoint loop (see module docstring)."""
-    return scratch(df) if reliable_mode() else df.localCheckpoint(eager=True)
+def pin_now(df: DataFrame, metric: Column | None = None) -> tuple[DataFrame, Any]:
+    """Eagerly pin one round of a fixpoint loop and return
+    ``(pinned, value)``: ``value`` is ``metric`` (default ``count(1)``)
+    aggregated over ``df`` by the checkpoint job itself."""
+    obs = Observation()
+    m = F.count(F.lit(1)) if metric is None else metric
+    pinned = df.observe(obs, m.alias("m")).localCheckpoint(eager=True)
+    return pinned, obs.get["m"]
 
 
 def iterate(step: Callable[[Any], tuple[Any, bool]], state: Any, what: str) -> Any:

@@ -1018,7 +1018,7 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
         )
     seed = (pat.o.value if reverse
             else pat.s.value if isinstance(pat.s, Lit) else None)
-    edges = pin_now(edges)
+    edges, n_edges = pin_now(edges)
 
     def hop(left: DataFrame, right: DataFrame) -> DataFrame:
         # pairs (a, c) with a -> b in left and b -> c in right
@@ -1037,16 +1037,16 @@ def _plus_frame(graph: DataFrame, pat: TriplePattern) -> DataFrame:
 
     # unbound: path doubling (right = reached); seeded: one hop per
     # round from the seed's out-edges (right = edges)
-    start = edges if seed is None else pin_now(edges.where(F.col("src") == F.lit(seed)))
+    start = ((edges, n_edges) if seed is None
+             else pin_now(edges.where(F.col("src") == F.lit(seed))))
 
     def grow(state):
         reached, n = state
         right = reached if seed is None else edges
-        nxt = pin_now(reached.unionByName(hop(reached, right)).distinct())
-        n2 = nxt.count()
+        nxt, n2 = pin_now(reached.unionByName(hop(reached, right)).distinct())
         return (nxt, n2), n2 == n
 
-    reached, _ = iterate(grow, (start, start.count()), f"<{pat.p.value}>+ closure")
+    reached, _ = iterate(grow, start, f"<{pat.p.value}>+ closure")
     if reverse:
         reached = reached.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"),

@@ -3482,11 +3482,13 @@ def q_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     found = ivf_neardup_pairs(
         emb, threshold=_LSH_THRESHOLD, nprobe=_IVF_NPROBE, id_col="vec_id"
     ).select("id_a", "id_b")
-    n_exact = exact.count()
-    n_found = found.count()
-    return spark.createDataFrame(
-        [(n_exact, n_found, round(n_found / n_exact, 6) if n_exact else 0.0)],
-        "n_exact bigint, n_found bigint, recall double",
+    n_exact, n_found = F.col("n_exact"), F.col("n_found")
+    return (
+        exact.agg(F.count(F.lit(1)).alias("n_exact"))
+        .crossJoin(found.agg(F.count(F.lit(1)).alias("n_found")))
+        .withColumn(
+            "recall", F.when(n_exact > 0, F.round(n_found / n_exact, 6)).otherwise(0.0)
+        )
     )
 
 

@@ -101,15 +101,11 @@ def test_connected_components_branches_agree_within_cap(spark):
     assert driver == dist == sorted(union_find(edges).items())
 
 
-def test_scratch_reliable_mode_same_results_and_releasable(spark):
-    """RECON_RELIABLE_SCRATCH=1 switches scratch() pins from
-    localCheckpoint to persist(MEMORY_AND_DISK) (lineage kept for
-    executor-loss recovery on real clusters). Same results, and the
-    caller-side release contract (clearCache) leaves nothing pinned."""
-    import os
-
-    from recon_spark.operators.dedupe import connected_components
-
+def test_distributed_cc_pins_are_gc_released(spark):
+    """The distributed branch pins every label round with an eager
+    localCheckpoint; once its result is collected and dropped, the
+    ContextCleaner releases every block (the registry sweep only runs
+    the driver branch)."""
     import gc
     import time
 
@@ -118,20 +114,12 @@ def test_scratch_reliable_mode_same_results_and_releasable(spark):
         # distributed label-propagation path via the threshold param
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "id_a long, id_b long"
     )
-    base = sorted(map(tuple, connected_components(pairs, driver_threshold=0).collect()))
-    os.environ["RECON_RELIABLE_SCRATCH"] = "1"
-    try:
-        rel = sorted(
-            map(tuple, connected_components(pairs, driver_threshold=0).collect())
-        )
-    finally:
-        os.environ.pop("RECON_RELIABLE_SCRATCH", None)
-    assert rel == base == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
-                           (20, 20), (21, 20), (22, 20)]
-    # caller-side release contract: clearCache drops the CacheManager
-    # pins (reliable mode); default-mode localCheckpoint blocks release
-    # via GC — poll like the registry sweep does
-    spark.catalog.clearCache()
+    spark.catalog.clearCache()  # earlier tests' CacheManager pins
+    got = sorted(map(tuple, connected_components(pairs, driver_threshold=0).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+                   (20, 20), (21, 20), (22, 20)]
+    # localCheckpoint blocks release via GC — poll like the registry
+    # sweep does
     deadline = time.time() + 60
     stored = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     while stored and time.time() < deadline:

@@ -83,11 +83,11 @@ def _span_tuples(spans):
     return [(s.text, s.start, s.end, s.label) for s in spans]
 
 
-def test_colocated_insights_match_reference(spark, monkeypatch):
+def test_colocated_insights_match_reference(spark):
     """Per-row error classification and hardest scoring equal the
     driver-side reference (tests/reference_impl), hardest rows in their
     returned orderBy(score, count, doc_id) order, on the detected spans
-    and on degenerate inputs, in both scratch-pin modes."""
+    and on degenerate inputs."""
     from recon_spark.operators import insights as I
     from tests.reference_impl import get_hardest_examples, top_prediction_errors
 
@@ -116,14 +116,9 @@ def test_colocated_insights_match_reference(spark, monkeypatch):
         assert hardest == get_hardest_examples(rows) and len(hardest) == n_docs
         return hardest
 
-    try:
-        for mode in ("", "1"):  # default localCheckpoint pin, then persist
-            monkeypatch.setenv("RECON_RELIABLE_SCRATCH", mode)
-            assert len({r[2] for r in check(both)}) > 1
-            assert {r[1:] for r in check(perfect)} == {(0, 0.0)}
-            assert len({r[2] for r in check(one_side)}) > 1
-    finally:
-        spark.catalog.clearCache()  # the reliable-mode caller release
+    assert len({r[2] for r in check(both)}) > 1
+    assert {r[1:] for r in check(perfect)} == {(0, 0.0)}
+    assert len({r[2] for r in check(one_side)}) > 1
 
 
 def test_insights_hand_counted(spark):
@@ -159,13 +154,12 @@ def test_insights_hand_counted(spark):
     assert get_hardest_examples(ref_rows) == hardest
 
 
-def test_hardest_examples_colocated_plan_reads_pin(spark, monkeypatch):
+def test_hardest_examples_colocated_plan_reads_pin(spark):
     """The returned plan reads the pinned score frame, not the Python
     extraction kernel: the caller's materialization and the orderBy's
     sampling job do not re-run mapInArrow."""
     from recon_spark.operators import insights as I
 
-    monkeypatch.delenv("RECON_RELIABLE_SCRATCH", raising=False)
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     both = detect_mentions_both(docs)
 

@@ -11,3 +11,27 @@ from tests.conftest import SF_SMOKE, compare_query
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_extra_query_matches_oracle(spark, ddb, name):
     compare_query(spark, ddb, QUERIES[name], ORACLES[name], SF_SMOKE)
+
+
+def test_neardup_recall_with_no_exact_pairs(spark, tmp_path):
+    """Six random 64-d vectors (pairwise cosine at most 0.19) leave the
+    exact set empty: recall is 0.0 on both engines, not a division by
+    zero."""
+    import duckdb
+    import numpy as np
+
+    from recon_spark.queries.extra import SQL_NEARDUP_RECALL, q_neardup_recall
+
+    vecs = np.random.default_rng(3).normal(size=(6, 64)).astype(np.float32)
+    rows = [(i, [float(x) for x in v], 0) for i, v in enumerate(vecs)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet/*.parquet'"
+    )
+    want = con.sql(SQL_NEARDUP_RECALL).fetchall()
+    con.close()
+    got = [tuple(r) for r in q_neardup_recall(spark, str(tmp_path)).collect()]
+    assert got == want == [(0, 0, 0.0)]

@@ -96,6 +96,9 @@ def test_registry_sweep_pandas_roundtrip_and_hygiene(spark):
     import gc
     import time as _time
 
+    # the loop variable still references the last query's frame, whose
+    # plan may read a pin (bpe_doc_tokens reads bpe_train's last round)
+    del df
     deadline = _time.time() + 60
     cached = _cached_rdds(spark)
     while cached and _time.time() < deadline:
