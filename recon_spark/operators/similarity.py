@@ -8,10 +8,17 @@ Scale notes: brute force is O(Q·N·d) with the query side broadcast —
 right answer when Q is small (dedupe against a blocklist, eval probes).
 The LSH path bounds the candidate set per query; at 100 TB the bucketed
 join shuffles only (signature, id) pairs, and signatures are computed
-per-row with zero shuffle. The exact pair scan (cosine_neardup_pairs)
-and the k-means assignment run as JVM higher-order aggregates over the
-zipped arrays; top-k, LSH signatures and candidate verification run as
-Arrow-batched numpy kernels.
+per-row with zero shuffle.
+
+Every cosine is decided by one numpy function, ``_cosines``, run inside
+Arrow-batched kernels: the exact pair scan (one kernel per tile pair),
+candidate verification, k-means/IVF cell assignment and top-k. It sums
+the float64 products dimension by dimension, in order, and the squared
+norms the same way, then divides: the IEEE sequence of a left fold over
+the zipped arrays. So every path puts a pair on the same side of
+``cos >= threshold``, and the IVF pairs are a subset of the exact pairs
+by construction. A zero vector has no cosine (0/0 is NaN): it pairs
+with nothing, and in a cell ranking it sorts last, as DuckDB's NULL does.
 """
 
 from __future__ import annotations
@@ -19,26 +26,45 @@ from __future__ import annotations
 import random
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, IntegralType, StructField, StructType
 
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
-_NORM = "sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-
-
-def _round_half_away(x, ndigits: int = 6):
-    """Round half away from zero, matching Spark's F.round and DuckDB's
-    round for doubles — np.round rounds half to even, which disagrees on
-    exact midpoints (e.g. 13/128 = 0.1015625 at 6 decimals)."""
-    import numpy as np
-
-    m = 10.0 ** ndigits
-    return np.sign(x) * np.floor(np.abs(x) * m + 0.5) / m
+TILE = 256  # ids per tile of the exact all-pairs scan
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding", out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, F.expr(_NORM.format(a=vec_col)))
+def _cosines(A: np.ndarray, B: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+    """cos(A[ia[p]], B[ib[p]]) for every p, in float64.
+
+    Products are added into a 0.0 accumulator one dimension at a time,
+    in order; each norm is the square root of its squares summed the
+    same way; the result is dot / (|a| * |b|). NaN when either vector
+    is zero."""
+    At = np.ascontiguousarray(A.T)  # row k = dimension k
+    Bt = np.ascontiguousarray(B.T)
+    dot = np.zeros(len(ia))
+    sa = np.zeros(A.shape[0])
+    sb = np.zeros(B.shape[0])
+    for k in range(A.shape[1]):
+        a, b = At[k], Bt[k]
+        dot += a[ia] * b[ib]
+        sa += a * a
+        sb += b * b
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (np.sqrt(sa)[ia] * np.sqrt(sb)[ib])
+
+
+def _matrix(vecs: pd.Series) -> np.ndarray:
+    """A non-empty Series of equal-length arrays as an (n, d) float64 matrix."""
+    return np.array(list(vecs), dtype=np.float64)
+
+
+def _rounded(pairs: DataFrame) -> DataFrame:
+    return pairs.select("id_a", "id_b", F.round("cos", 6).alias("cos")).orderBy(
+        "id_a", "id_b"
+    )
 
 
 def cosine_topk(
@@ -50,24 +76,23 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (self
     excluded): (query_id, neighbor_id, cos, rank), ranked by unrounded
-    cosine with neighbor-id tiebreak, cosine rounded for output.
+    cosine with neighbor-id tiebreak, cosine rounded for output. A zero
+    vector has no cosine, so it is nobody's neighbor and, as a query,
+    has none.
 
     Two-stage top-k: the query matrix is collected (Q x d — queries are
-    few by contract) and broadcast; each Arrow batch computes a
-    (batch x Q) einsum and emits only its LOCAL top-k rows per query; a
-    final window ranks the union (Q * k * n_batches rows, tiny). Exact:
-    global top-k of per-batch top-ks = top-k, with the same
-    (cos DESC, neighbor_id) tie-break. ~5x an interpreted crossJoin +
-    fold plan; the window input does not grow with N."""
+    few by contract) and broadcast; each Arrow batch scores its
+    (batch x Q) cosines with ``_cosines`` and emits only its LOCAL top-k
+    rows per query; a final window ranks the union (Q * k * n_batches
+    rows, tiny). Exact: global top-k of per-batch top-ks = top-k, with
+    the same (cos DESC, neighbor_id) tie-break. The window input does
+    not grow with N."""
     import heapq
-
-    import numpy as np
 
     spark = vectors.sparkSession
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     b_q = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def _gen(batches):
@@ -78,18 +103,18 @@ def cosine_topk(
             bids = pdf[id_col].to_numpy(dtype=np.int64)
             if not len(bids):
                 continue
-            bmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            bmat = bmat / np.linalg.norm(bmat, axis=1, keepdims=True)
-            sims = bmat @ mat.T  # (batch, Q)
+            ib, iq = np.divmod(np.arange(len(bids) * len(ids)), len(ids))
+            sims = _cosines(_matrix(pdf[vec_col]), mat, ib, iq).reshape(len(bids), len(ids))
             for qi in range(len(ids)):
                 col = sims[:, qi]
                 # lexsort keys are (last key primary): sort by -cos then
                 # id — exact (cos DESC, neighbor_id ASC) pre-selection,
                 # so equal-cosine ties keep the smallest ids (a value-only
-                # argpartition could drop the tie-break winner)
+                # argpartition could drop the tie-break winner); NaN sorts
+                # last and is skipped
                 order = np.lexsort((bids, -col))[: k + 1]
                 for j in order:
-                    if bids[j] == ids[qi]:
+                    if bids[j] == ids[qi] or np.isnan(col[j]):
                         continue
                     item = (col[j], -int(bids[j]))  # rank: cos desc, id asc
                     h = heaps[qi]
@@ -124,21 +149,48 @@ def cosine_neardup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs with cosine >= threshold, (id_a < id_b, cos rounded).
-    Exact all-pairs (test-SF oracle baseline); use lsh_neardup_pairs at
-    scale."""
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    dot = _DOT.format(a="va", b="vb")
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos",
-            F.expr(f"{dot} / ({_NORM.format(a='va')} * {_NORM.format(a='vb')})"),
+    Exact all-pairs (test-SF oracle baseline); use lsh_neardup_pairs or
+    ivf_neardup_pairs at scale.
+
+    Blocked scan over integral ids: tile = id div TILE, so tiles are id
+    ranges and every id in tile ta is below every id in a later tile tb.
+    The distinct tiles self-join into the tile pairs ta <= tb (T^2/2
+    rows of two ints); each vector row joins the pairs it takes part in
+    as the left or the right tile, and one Arrow kernel per tile pair
+    scores its id_a < id_b pairs — each id pair lands in exactly one
+    tile pair. Only the tile-pair table is broadcast: the vectors are
+    never collected to the driver, and each is shuffled once per tile
+    pair it is in (T times), the inherent cost of an all-pairs scan.
+    Dense ids fill the tiles; sparse ids leave them small and make the
+    kernel calls many."""
+    if not isinstance(vectors.schema[id_col].dataType, IntegralType):
+        raise TypeError(f"cosine_neardup_pairs: {id_col} must be an integral id column")
+    t = vectors.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+    ).withColumn("tile", F.expr(f"id div {TILE}"))
+    keys = t.select("tile").distinct()
+    pairs = F.broadcast(
+        keys.select(F.col("tile").alias("ta")).join(
+            keys.select(F.col("tile").alias("tb")), F.col("ta") <= F.col("tb")
         )
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-        .orderBy("id_a", "id_b")
     )
+    sides = t.join(pairs, F.col("tile") == F.col("ta")).withColumn("side", F.lit(0)).unionByName(
+        t.join(pairs, F.col("tile") == F.col("tb")).withColumn("side", F.lit(1))
+    )
+
+    def _block(pdf: pd.DataFrame) -> pd.DataFrame:
+        left, right = pdf[pdf["side"] == 0], pdf[pdf["side"] == 1]
+        ida = left["id"].to_numpy(dtype=np.int64)
+        idb = right["id"].to_numpy(dtype=np.int64)
+        ia, ib = np.nonzero(ida[:, None] < idb[None, :])
+        cos = _cosines(_matrix(left["v"]), _matrix(right["v"]), ia, ib)
+        keep = cos >= threshold
+        return pd.DataFrame({"id_a": ida[ia[keep]], "id_b": idb[ib[keep]], "cos": cos[keep]})
+
+    scored = sides.select("ta", "tb", "side", "id", "v").groupBy("ta", "tb").applyInPandas(
+        _block, "id_a long, id_b long, cos double"
+    )
+    return _rounded(scored)
 
 
 def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
@@ -158,8 +210,6 @@ def with_lsh_signature(
     dot(vec, plane_j) > 0 in float64. Arrow-vectorized numpy kernel (one
     (batch x dim) @ (dim x n_planes) matmul per Arrow batch); per-row,
     shuffle-free."""
-    import numpy as np
-
     planes = hyperplanes(dim, n_planes, seed)
 
     @F.pandas_udf("long")
@@ -177,42 +227,6 @@ def with_lsh_signature(
     return df.withColumn(out_col, _sig(F.col(vec_col)))
 
 
-def with_cosine_vectorized(
-    pairs: DataFrame,
-    a_col: str = "va",
-    b_col: str = "vb",
-    out_col: str = "cos",
-) -> DataFrame:
-    """Cosine between two array columns — Arrow-vectorized numpy kernel
-    (einsum over the stacked batch). float64 end to end, so values agree
-    with the interpreted JVM fold / DuckDB ``list_dot_product`` to the
-    last ulp of summation order (asserted equal after round(6) in
-    tests). Use on verify hot paths: candidate sets are O(pairs), and
-    an interpreted 64-element fold per pair was the slowest stage of
-    lsh_neardup (465k candidates at sf0.1)."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def _cos(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for va, vb in batches:
-            if len(va):
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in va])
-                B = np.stack([np.asarray(v, dtype=np.float64) for v in vb])
-                dots = np.einsum("ij,ij->i", A, B)
-                out = dots / (
-                    np.sqrt(np.einsum("ij,ij->i", A, A))
-                    * np.sqrt(np.einsum("ij,ij->i", B, B))
-                )
-            else:
-                out = np.array([], dtype=np.float64)
-            yield pd.Series(out, dtype="float64")
-
-    return pairs.withColumn(out_col, _cos(F.col(a_col), F.col(b_col)))
-
-
-_BCAST_VERIFY_ROWS = 500_000  # ~256 MB of float64 at 64d — broadcastable
-
-
 def _verify_pairs(
     cand: DataFrame,
     vectors: DataFrame,
@@ -220,69 +234,36 @@ def _verify_pairs(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Exact-cosine verify of deduped (id_a, id_b) candidates.
-
-    Two shapes, picked by id type and vector-table size (one cheap
-    count):
-    - integral ids, small table (<= _BCAST_VERIFY_ROWS): broadcast the
-      id->vector matrix to the python workers once and ship ONLY the id
-      pairs through Arrow — 2 longs/pair instead of 2 d-dim float arrays
-      (~60x fewer verify bytes at 64d; at sf0.1 the join shape moved
-      ~475 MB of vectors for 465k candidates).
-    - otherwise: per-pair vector joins + batched einsum — shuffles
-      scale with candidates only, never all-pairs.
-    Same float64 arithmetic either way (both checked against numpy in
-    tests)."""
-    import numpy as np
-    from pyspark.sql.types import IntegerType, LongType
-
-    integral_ids = isinstance(vectors.schema[id_col].dataType, (IntegerType, LongType))
-    # count only when the broadcast path is reachable — the join path
-    # must not pay a scan-and-count job it cannot use
-    if integral_ids and vectors.count() <= _BCAST_VERIFY_ROWS:
-        rows = vectors.select(id_col, vec_col).collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        b = cand.sparkSession.sparkContext.broadcast(
-            ({int(i): k for k, i in enumerate(ids)}, mat, norms)
-        )
-
-        def _gen(batches):
-            idx, m, nr = b.value
-            for pdf in batches:
-                ia = pdf["id_a"].to_numpy(dtype=np.int64)
-                ib = pdf["id_b"].to_numpy(dtype=np.int64)
-                if len(ia):
-                    ka = np.array([idx[int(x)] for x in ia], dtype=np.int64)
-                    kb = np.array([idx[int(x)] for x in ib], dtype=np.int64)
-                    cos = np.einsum("ij,ij->i", m[ka], m[kb]) / (nr[ka] * nr[kb])
-                    keep = cos >= threshold
-                    out = pd.DataFrame(
-                        {
-                            "id_a": ia[keep],
-                            "id_b": ib[keep],
-                            "cos": _round_half_away(cos[keep]),
-                        }
-                    )
-                else:
-                    out = pd.DataFrame({"id_a": ia, "id_b": ib, "cos": ia.astype(float)})
-                yield out
-
-        return (
-            cand.select("id_a", "id_b")
-            .mapInPandas(_gen, "id_a long, id_b long, cos double")
-            .orderBy("id_a", "id_b")
-        )
-
+    """Exact-cosine verify of deduped (id_a, id_b) candidates, any id
+    type: each candidate joins its two vectors (shuffles scale with the
+    candidates, never all-pairs) and an Arrow kernel scores every batch
+    with ``_cosines``, keeping the pairs with cos >= threshold."""
+    id_type = vectors.schema[id_col].dataType.simpleString()
     va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    scored = with_cosine_vectorized(cand.join(va, "id_a").join(vb, "id_b"))
-    return (
-        scored.where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-        .orderBy("id_a", "id_b")
+
+    def _verify(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            p = np.arange(len(pdf))
+            cos = _cosines(_matrix(pdf["va"]), _matrix(pdf["vb"]), p, p)
+            keep = cos >= threshold
+            yield pd.DataFrame(
+                {
+                    "id_a": pdf["id_a"].to_numpy()[keep],
+                    "id_b": pdf["id_b"].to_numpy()[keep],
+                    "cos": cos[keep],
+                }
+            )
+
+    scored = (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", "va", "vb")
+        .mapInPandas(_verify, f"id_a {id_type}, id_b {id_type}, cos double")
     )
+    return _rounded(scored)
 
 
 def lsh_neardup_pairs(
@@ -341,6 +322,33 @@ KMEANS_ITERS = 3
 KMEANS_ROUND = 6
 
 
+def _nearest_cells(
+    df: DataFrame, vec_col: str, cents: list[tuple[int, list[float]]], n: int
+) -> DataFrame:
+    """``df`` plus a ``cent_id`` column: each row once for each of its
+    ``n`` most similar centroids, ranked by (cosine DESC, cent_id) with
+    ``_cosines``; a NaN cosine (zero vector or zero centroid) ranks
+    last. ``cents`` is sorted by cent_id and travels in the kernel's
+    closure (k ~ sqrt(N) centroids), so the vector rows are neither
+    joined nor shuffled."""
+    cent_ids = np.array([cid for cid, _ in cents], dtype=np.int32)
+    C = np.array([cv for _, cv in cents], dtype=np.float64)
+
+    def _cells(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ib, ic = np.divmod(np.arange(len(pdf) * len(C)), len(C))
+            sim = _cosines(_matrix(pdf[vec_col]), C, ib, ic).reshape(len(pdf), len(C))
+            # a stable sort keeps equal cosines in cent_id order
+            top = np.argsort(-np.where(np.isnan(sim), -np.inf, sim), axis=1, kind="stable")[:, :n]
+            rows = np.repeat(np.arange(len(pdf)), top.shape[1])
+            yield pdf.iloc[rows].assign(cent_id=cent_ids[top.ravel()])
+
+    schema = StructType(df.schema.fields + [StructField("cent_id", IntegerType())])
+    return df.mapInPandas(_cells, schema)
+
+
 def kmeans_init_frame(
     vectors: DataFrame,
     k: int,
@@ -392,21 +400,23 @@ def kmeans_centroids(
       pseudo-random draw with NO global sort anywhere: orderBy+limit is
       a per-partition top-k (TakeOrderedAndProject), and md5 is
       reproducible in any engine.
-    - assignment: argmax cosine, ties broken by lower cent_id.
+    - assignment: argmax cosine, ties broken by lower cent_id; a zero
+      vector (no cosine) goes to the lowest cent_id.
     - update: per-dimension mean of assigned vectors, rounded to
       KMEANS_ROUND decimals (rounding absorbs summation-order
       differences between engines, keeping iterations bit-comparable);
       a cell with no members keeps its previous centroid.
 
-    Scale shape: each iteration is one broadcast join (k ~ sqrt(N)
-    centroids) + one (cent_id, dim) aggregation — map-side combinable,
-    shuffle volume k*d doubles. Centroids live on the driver between
-    iterations (k*d floats). Past ``max_train_rows`` the quantizer
-    trains on a deterministic hash-strided sample of about that size
-    (the standard IVF practice — centroid quality saturates long before
-    the full table; assignment still covers every vector). At the test
-    SFs the table is below the bound, so the sample IS the table and
-    the oracle replica is unaffected."""
+    Scale shape: each iteration is one shuffle-free assignment kernel
+    (the k ~ sqrt(N) centroids ride in its closure) + one (cent_id, dim)
+    aggregation — map-side combinable, shuffle volume k*d doubles.
+    Centroids live on the driver between iterations (k*d floats). Past
+    ``max_train_rows`` the quantizer trains on a deterministic
+    hash-strided sample of about that size (the standard IVF practice —
+    centroid quality saturates long before the full table; assignment
+    still covers every vector). At the test SFs the table is below the
+    bound, so the sample IS the table and the oracle replica is
+    unaffected."""
     n = vectors.count()
     if n == 0:
         raise ValueError("kmeans_centroids: empty vector table")
@@ -432,28 +442,11 @@ def kmeans_centroids(
         (i, [float(x) for x in r["v"]])
         for i, r in enumerate(sorted(init, key=lambda r: (r["__mk"], r["id"])))
     ]
-    spark = vectors.sparkSession
+    points = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     for _ in range(iters):
-        cdf = spark.createDataFrame(
-            [(cid, cv) for cid, cv in cents], "cent_id int, cv array<double>"
-        )
-        dot = _DOT.format(a="v", b="cv")
-        sim = f"({dot}) / ({_NORM.format(a='v')} * {_NORM.format(a='cv')})"
-        assigned = (
-            vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-            .crossJoin(F.broadcast(cdf))
-            .withColumn("__sim", F.expr(sim))
-            .withColumn(
-                "__rk",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.desc("__sim"), "cent_id")
-                ),
-            )
-            .where(F.col("__rk") == 1)
-            .select("cent_id", "v")
-        )
         means = (
-            assigned.select("cent_id", F.posexplode("v").alias("dim", "x"))
+            _nearest_cells(points, "v", cents, 1)
+            .select("cent_id", F.posexplode("v").alias("dim", "x"))
             .groupBy("cent_id", "dim")
             .agg(F.round(F.avg("x"), KMEANS_ROUND).alias("mu"))
             .collect()
@@ -486,27 +479,14 @@ def ivf_neardup_pairs(
     k-means (kmeans_centroids), each vector assigned to its `nprobe`
     nearest cells (multi-probe: the standard IVF recall lever),
     candidate pairs sharing a cell, exact cosine verify on deduped id
-    pairs. At scale the cell assignment is a broadcast join (centroid
-    count ~ sqrt(N)) and the verify join shuffles only within-cell id
-    pairs. Recall vs the exact pair set is asserted in tests and
-    tabulated in BENCH/BASELINE.md."""
+    pairs. At scale the cell assignment is a shuffle-free kernel
+    (centroid count ~ sqrt(N), held in its closure) and the verify join
+    shuffles only within-cell id pairs. Recall vs the exact pair set is
+    asserted in tests and tabulated in BENCH/BASELINE.md."""
     cents = kmeans_centroids(vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    spark = vectors.sparkSession
-    cdf = spark.createDataFrame(cents, "cent_id int, cv array<double>")
-    dot = _DOT.format(a=vec_col, b="cv")
-    sim = f"({dot}) / ({_NORM.format(a=vec_col)} * {_NORM.format(a='cv')})"
-    assigned = (
-        vectors.crossJoin(F.broadcast(cdf))
-        .withColumn("__sim", F.expr(sim))
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.desc("__sim"), "cent_id")
-            ),
-        )
-        .where(F.col("__rk") <= nprobe)
-        .select(F.col(id_col).alias("id"), "cent_id")
-    )
+    assigned = _nearest_cells(
+        vectors.select(id_col, vec_col), vec_col, cents, nprobe
+    ).select(F.col(id_col).alias("id"), "cent_id")
     a = assigned.alias("a")
     b = assigned.alias("b")
     cand = (

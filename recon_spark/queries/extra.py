@@ -3422,7 +3422,7 @@ def _sql_ivf_parts() -> list[str]:
         parts.append(
             f"""m{i} AS (
   SELECT cent_id, j, round(avg(e[j]), {KMEANS_ROUND}) AS mu
-  FROM a{i}, (SELECT unnest(generate_series(1, {_LSH_DIM})) AS j)
+  FROM (SELECT cent_id, e, unnest(generate_series(1, len(e))) AS j FROM a{i})
   GROUP BY cent_id, j)"""
         )
         parts.append(

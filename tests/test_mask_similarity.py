@@ -84,6 +84,24 @@ def test_ent_label_sub_sub_prob_masks_targets():
         assert (f"t{j}" not in new_text) == (j in keep)
 
 
+def sequential_cosines(mat):
+    """All-pairs cosine matrix of the rows of ``mat`` in the engine's
+    summation order, written out independently of its kernel: products
+    and squares added into 0.0 one dimension at a time, in order, then
+    dot / (|a| * |b|)."""
+    import numpy as np
+
+    n, d = mat.shape
+    dot = np.zeros((n, n))
+    sq = np.zeros(n)
+    for k in range(d):
+        col = mat[:, k]
+        dot += np.outer(col, col)
+        sq += col * col
+    norms = np.sqrt(sq)
+    return dot / np.outer(norms, norms)
+
+
 def numpy_pairs(emb, threshold):
     """Exact all-pairs cosine >= threshold, computed with numpy on the
     collected vectors: {(id_a, id_b)} with id_a < id_b."""
@@ -92,8 +110,7 @@ def numpy_pairs(emb, threshold):
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
     mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    a, b = np.nonzero(mat @ mat.T >= threshold)
+    a, b = np.nonzero(sequential_cosines(mat) >= threshold)
     return {(int(ids[i]), int(ids[j])) for i, j in zip(a, b) if ids[i] < ids[j]}
 
 
@@ -137,9 +154,10 @@ def test_lsh_recall_reported(spark, exact_pairs):
 
 @pytest.mark.parametrize("id_type", ["long", "string"])
 def test_lsh_neardup_verify_shapes_match_numpy(spark, id_type):
-    """Long ids take the broadcast verify shape, string ids the join
-    shape. Both must return exactly the pairs that share a sign-LSH
-    band and reach the threshold, each cos = round(numpy cosine, 6)."""
+    """Long and string ids (unpadded, so string order is not numeric
+    order) go through the same join-shaped verify. Both must return
+    exactly the pairs that share a sign-LSH band and reach the
+    threshold, each cos = round(numpy cosine, 6)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -192,25 +210,24 @@ def test_cosine_topk_matches_numpy(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from recon_spark.operators.similarity import _round_half_away, cosine_topk
+    from recon_spark.operators.similarity import cosine_topk
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") % 50 == 0)
     got = [tuple(r) for r in cosine_topk(emb, queries, k=10).collect()]
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    cos = sequential_cosines(np.array([r[1] for r in rows], dtype=np.float64))
     want = []
     for qi in sorted(np.nonzero(ids % 50 == 0)[0], key=lambda i: ids[i]):
-        sims = mat @ mat[qi]
+        sims = cos[qi]
         order = sorted((j for j in range(len(ids)) if j != qi), key=lambda j: (-sims[j], ids[j]))
         for rank, j in enumerate(order[:10], 1):
-            want.append((int(ids[qi]), int(ids[j]), float(_round_half_away(sims[j])), rank))
+            want.append((int(ids[qi]), int(ids[j]), float(sims[j]), rank))
     assert len(got) == len(want) > 0
     for g, w in zip(got, want):
         assert g[0] == w[0] and g[1] == w[1] and g[3] == w[3]
-        assert abs(g[2] - w[2]) <= 1e-6
+        assert abs(g[2] - w[2]) <= 5e-7 + 1e-12  # cos is rounded to 6 places
 
 
 def test_kmeans_partitioning_independent(spark):
@@ -276,3 +293,96 @@ def test_cosine_topk_vectorized_tie_break(spark):
     q = df.where("vec_id = 7")
     got = [tuple(r) for r in cosine_topk(df, q, k=5).collect()]
     assert got == [(7, j, 1.0, rank) for rank, j in enumerate([0, 1, 2, 3, 4], 1)]
+
+
+EDGE_VECTORS = [
+    (1, [3.0, 4.0]),
+    (2, [1.0, 0.0]),  # cos(1, 2) = 3 / (5 * 1) = 0.6 exactly
+    (3, [3.0, 4.0]),  # duplicate of 1
+    (4, [-1.0, -2.0]),
+    (5, [0.0, 0.0]),  # zero vector: no cosine with anything
+    (6, [-3.0, -4.0]),
+    (7, [0.5, -0.25]),
+]
+
+
+def test_cosine_edge_vectors_match_duckdb_twins(spark, tmp_path):
+    """Hand-made vectors through the exact scan, the k-means quantizer
+    and IVF (assignment + verify), against their DuckDB twins: duplicate
+    vectors, a cosine exactly at the threshold, negative components and
+    a zero vector. The zero vector pairs with nothing and, having no
+    cosine with any centroid, is assigned where DuckDB puts a NULL
+    similarity: last, so to the lowest cent_id."""
+    import duckdb
+
+    from recon_spark.operators.similarity import (
+        KMEANS_ITERS,
+        cosine_neardup_pairs,
+        cosine_topk,
+        ivf_neardup_pairs,
+        kmeans_centroids,
+    )
+    from recon_spark.queries.extra import SQL_IVF_NEARDUP, _sql_ivf_parts
+    from recon_spark.queries.pipeline import SQL_EMBEDDING_NEARDUP
+
+    spark.createDataFrame(
+        EDGE_VECTORS, "vec_id long, embedding array<float>"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    emb = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet/*.parquet'"
+    )
+
+    def at_06(sql):
+        assert ">= 0.45" in sql
+        return sql.replace(">= 0.45", ">= 0.6")
+
+    exact = [tuple(r) for r in cosine_neardup_pairs(emb, threshold=0.6).collect()]
+    assert exact == con.sql(at_06(SQL_EMBEDDING_NEARDUP)).fetchall()
+    assert {(a, b) for a, b, _ in exact} == {(1, 2), (1, 3), (2, 3), (2, 7), (4, 6)}
+
+    cents = kmeans_centroids(emb)
+    twin = con.sql(
+        "WITH " + ",\n".join(_sql_ivf_parts())
+        + f"\nSELECT cent_id, cv FROM c{KMEANS_ITERS} ORDER BY cent_id"
+    ).fetchall()
+    assert cents == [(cid, list(cv)) for cid, cv in twin]
+
+    ivf = [tuple(r) for r in ivf_neardup_pairs(emb, threshold=0.6).collect()]
+    assert ivf == con.sql(at_06(SQL_IVF_NEARDUP)).fetchall() == exact
+    con.close()
+
+    top = cosine_topk(emb, emb, k=10).collect()
+    assert all(5 not in (r.query_id, r.neighbor_id) for r in top)
+    assert len(top) == 6 * 5
+
+
+def test_one_cosine_summation_order_in_package():
+    """Every cosine in the package goes through similarity._cosines: no
+    other summation order (an interpreted zip_with fold, einsum, a
+    normalize-first norm) appears under recon_spark/."""
+    import pathlib
+
+    from recon_spark.operators import similarity
+
+    pkg = pathlib.Path(similarity.__file__).resolve().parents[1]
+    offenders = [
+        f"{path.relative_to(pkg)}:{lineno}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if any(bad in line for bad in ("zip_with(", "einsum(", "np.linalg.norm"))
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_ivf_pairs_are_a_subset_of_exact_pairs(spark):
+    """With one summation order the IVF verify and the exact scan decide
+    every pair the same way, so the ivf_neardup rows (cos included) are
+    a subset of the embedding_neardup rows."""
+    from recon_spark.queries.extra import q_ivf_neardup
+    from recon_spark.queries.pipeline import q_embedding_neardup
+
+    exact = {tuple(r) for r in q_embedding_neardup(spark, SF_ORACLE).collect()}
+    ivf = {tuple(r) for r in q_ivf_neardup(spark, SF_ORACLE).collect()}
+    assert ivf and ivf <= exact

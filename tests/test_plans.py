@@ -18,6 +18,17 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def subtree(lines: list[str], i: int) -> list[str]:
+    """The plan lines below node ``lines[i]`` (deeper tree indent)."""
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    below = []
+    for line in lines[i + 1 :]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        below.append(line)
+    return below
+
+
 def with_literal_spans(docs):
     """A Python-free span column: each doc's first word as a span,
     plus one that starts mid-word (misaligned)."""
@@ -154,15 +165,33 @@ def test_language_id_and_split_stats_are_jvm_single_shuffle(spark):
     assert "Exchange" not in plan  # per-row predicate: zero shuffle
 
 
-def test_ivf_assignment_join_is_broadcast(spark):
+def test_ivf_assignment_never_shuffles_centroids(spark):
     from recon_spark.operators.similarity import ivf_neardup_pairs
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    plan = plan_of(ivf_neardup_pairs(emb, threshold=0.45))
-    # centroid assignment must broadcast the (small) centroid side; the
-    # within-cell self-join SHOULD shuffle on cent_id — cells are the
-    # parallelism unit at scale
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    lines = plan_of(ivf_neardup_pairs(emb, threshold=0.45)).splitlines()
+    # cell assignment is one Python stage holding the (small) centroid
+    # set in its closure: nothing below it is an Exchange. The
+    # within-cell self-join and the verify SHOULD shuffle on cent_id /
+    # ids — cells are the parallelism unit at scale.
+    stages = [i for i, line in enumerate(lines) if "MapInPandas _cells(" in line]
+    assert stages
+    for i in stages:
+        below = subtree(lines, i)
+        assert below and not any("Exchange" in line for line in below), "\n".join(below)
+
+
+def test_exact_scan_never_broadcasts_vectors(spark):
+    from recon_spark.operators.similarity import cosine_neardup_pairs
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    lines = plan_of(cosine_neardup_pairs(emb, threshold=0.45)).splitlines()
+    # only the tile-pair table (ints) may be broadcast; the vectors
+    # stream through the joins into the per-tile-pair kernel
+    broadcasts = [i for i, line in enumerate(lines) if "BroadcastExchange" in line]
+    assert broadcasts and "FlatMapGroupsInPandas" in "\n".join(lines)
+    for i in broadcasts:
+        assert not any("embedding#" in line for line in subtree(lines, i))
 
 
 def test_fused_extraction_single_python_stage(spark):
@@ -174,17 +203,6 @@ def test_fused_extraction_single_python_stage(spark):
     assert plan.count("MapInArrow") == 1
     assert "ArrowEvalPython" not in plan
     assert "Exchange" not in plan  # per-row: zero shuffle
-
-
-def test_broadcast_verify_ships_ids_only(spark):
-    from recon_spark.operators.similarity import lsh_neardup_pairs
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    plan = plan_of(lsh_neardup_pairs(emb, threshold=0.45, dim=64))
-    # small-table verify: candidates go to Python as (id_a, id_b) longs;
-    # no per-pair join re-attaching the d-dim vector arrays
-    assert "MapInPandas" in plan
-    assert plan.count("Join") <= 1  # only the band self-join remains
 
 
 def test_prediction_errors_null_pred_label(spark):
