@@ -21,6 +21,12 @@ whitespace tokens, longest surface first. tests/test_extraction.py checks
 the kernel against the token-loop scanner of tests/reference_impl.py; the
 DuckDB oracles restate the spec in SQL.
 
+SVO triples come from one JVM rule, ``_svo_windows``: consecutive
+(entity, predicate, entity) windows of the single-space token split.
+``extract_triples_tokens`` returns its rows as they are; the pages
+pipeline's ``triples.extract_triples_spans`` projects them to char
+offsets.
+
 Scale notes: extraction is embarrassingly parallel (per-row, no shuffle).
 Upstream bucketing by url/doc-id hash keeps re-extraction deterministic and
 co-located; nothing here widens the plan.
@@ -229,17 +235,13 @@ def entity_unigrams() -> list[str]:
     return sorted(s for s in list(GAZ_FIXED) + list(GAZ_AMBIG) if " " not in s)
 
 
-def extract_triples_tokens(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """SVO triple extraction over raw tokens, pure JVM (no shuffle):
-    consecutive (subj ∈ entities, pred ∈ predicates, obj ∈ entities)
-    token windows. Returns (doc_id, subj, pred, obj, pos) long format.
-
-    This is the demo/oracle-checkable form; the pages pipeline
-    (recon_spark/triples.py) adds char-offset provenance and entity
-    linking on top.
-    """
+def _svo_windows(df: DataFrame, id_col: str, text_col: str, *keep: str) -> DataFrame:
+    """The SVO window rule, the one place it is written: consecutive
+    token windows of ``split(text, ' ')`` with subj and obj in the
+    entity unigrams and pred in PREDICATES, one row per match:
+    (id, *keep, subj, pred, obj, pos), pos the 0-based token index of
+    subj. Pure JVM, no shuffle. ``keep`` may name ``__w``, the split
+    tokens, for callers that derive more from a match."""
     uni = entity_unigrams()
     uni_arr = "array(" + ", ".join(f"'{s}'" for s in uni) + ")"
     pred_arr = "array(" + ", ".join(f"'{s}'" for s in PREDICATES) + ")"
@@ -260,6 +262,16 @@ def extract_triples_tokens(
     """
     return (
         df.withColumn(w, F.split(F.col(text_col), " "))
-        .select(id_col, F.explode(F.expr(expr)).alias("t"))
-        .select(id_col, "t.subj", "t.pred", "t.obj", "t.pos")
+        .select(id_col, *keep, F.explode(F.expr(expr)).alias("t"))
+        .select(id_col, *keep, "t.subj", "t.pred", "t.obj", "t.pos")
     )
+
+
+def extract_triples_tokens(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """SVO triples over raw tokens: (doc_id, subj, pred, obj, pos), the
+    rule's rows as they are. This is the demo/oracle-checkable form;
+    the pages pipeline (recon_spark/triples.py) projects the same rows
+    to char-offset provenance and links them."""
+    return _svo_windows(df, id_col, text_col)

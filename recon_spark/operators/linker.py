@@ -5,11 +5,16 @@ surface, :15-21) and SpacyEntityLinker (KB candidate lookup, take the
 top candidate, :23-36); alias machinery in
 /root/reference/recon/preprocess.py:100-131.
 
-Spark shape: explode mentions → broadcast-hash join against the alias
-dictionary (small dimension table) → row_number() = 1 by
-(score desc, entity_id asc) for deterministic top-1. The alias dict is
-broadcast, so linking adds no shuffle on the fact side; the only wide
-exchange in canonicalization is the final groupBy, which AQE handles.
+This module is the one home of the top-1 alias mapping: ``top_aliases``
+ranks each alias's candidates with row_number() = 1 by
+(score desc, entity_id asc), and ``to_entity`` replaces a surface column
+with its top-1 entity id (broadcast left join, surface kept when no
+alias matches). ``link_mentions`` attaches the full top-1 row instead;
+every canonical-triple path (triples.py, queries/core.py,
+queries/graph.py) goes through ``to_entity``. The alias dict is a small
+dimension table and always broadcast, so linking adds no shuffle on the
+fact side; the only wide exchange in canonicalization is a caller's
+final groupBy, which AQE handles.
 """
 
 from __future__ import annotations
@@ -26,29 +31,41 @@ def alias_df(spark: SparkSession) -> DataFrame:
     )
 
 
+def top_aliases(aliases: DataFrame) -> DataFrame:
+    """Each alias's top-1 candidate row, ranked by (score DESC,
+    entity_id): the one definition of the linker's pick."""
+    rank = Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
+    return (
+        aliases.withColumn("rk", F.row_number().over(rank))
+        .where(F.col("rk") == 1)
+        .drop("rk")
+    )
+
+
 def link_mentions(
     mentions: DataFrame, aliases: DataFrame, surface_col: str = "surface"
 ) -> DataFrame:
     """Attach (entity_id, name, score) of the best-scoring alias candidate
     to each mention row; mentions with no candidate keep NULL kb columns
     (left join — the reference returns the span unlinked)."""
-    w = Window.partitionBy(surface_col, "doc_id", "label").orderBy(
-        F.desc("score"), "entity_id"
-    )
-    best = (
-        F.broadcast(aliases)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
+    best = F.broadcast(top_aliases(aliases))
     return mentions.join(
         best, mentions[surface_col] == best["alias"], "left"
     ).drop("alias")
+
+
+def to_entity(df: DataFrame, col: str, best: DataFrame) -> DataFrame:
+    """``df`` with surface column ``col`` replaced by its top-1 entity id
+    from ``best`` (top_aliases output; broadcast left join); a surface
+    with no alias keeps its form."""
+    b = F.broadcast(
+        best.select(F.col("alias").alias("__alias"), F.col("entity_id").alias("__eid"))
+    )
+    return (
+        df.join(b, df[col] == b["__alias"], "left")
+        .withColumn(col, F.coalesce("__eid", col))
+        .drop("__alias", "__eid")
+    )
 
 
 def fuzzy_surface_pairs(

@@ -119,7 +119,6 @@ def score_perplexity(
     model: dict[str, DataFrame],
     text_col: str = "text",
     alpha: float = ALPHA,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(doc_id, n_bigrams, ppl): per-document perplexity under the
     stupid-backoff bigram model; docs with fewer than 2 tokens get
@@ -127,23 +126,21 @@ def score_perplexity(
 
     ppl = exp(-mean(ln S)) over the doc's adjacent pairs, with
     S = c12/c1 for observed bigrams, else alpha * (c2+1)/(N+V).
-    ``broadcast_model=True`` is the production path (the model is a
-    worker-resident artifact, CCNet-style); the flag exists so tests
-    can exercise the shuffle-join plan too.
+    Every model probe is a broadcast join (the model is a
+    worker-resident artifact, CCNet-style).
     """
-    wrap = F.broadcast if broadcast_model else (lambda df: df)
     uni = model["uni"]
     bi = model["bi"]
     bg = doc_bigrams(docs, text_col)
     scored = (
-        bg.join(wrap(bi), ["w1", "w2"], "left")
-        .join(wrap(uni.select(F.col("w").alias("w1"), "c1")), "w1", "left")
+        bg.join(F.broadcast(bi), ["w1", "w2"], "left")
+        .join(F.broadcast(uni.select(F.col("w").alias("w1"), "c1")), "w1", "left")
         .join(
-            wrap(uni.select(F.col("w").alias("w2"), F.col("c1").alias("c2"))),
+            F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c1").alias("c2"))),
             "w2",
             "left",
         )
-        .join(wrap(model["totals"]))  # 1-row dimension
+        .join(F.broadcast(model["totals"]))  # 1-row dimension
         .select(
             "doc_id",
             F.when(
@@ -285,7 +282,6 @@ def score_perplexity_trigram(
     model: dict[str, DataFrame],
     text_col: str = "text",
     alpha: float = ALPHA,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(doc_id, n_trigrams, ppl) under the chained stupid backoff:
     S = c123/c12 when the trigram was observed, else alpha * (c23/c2
@@ -293,18 +289,17 @@ def score_perplexity_trigram(
     one-shuffle shape as the bigram scorer: every model probe is a
     broadcast join, short docs ride the same agg as null-scored rows.
     """
-    wrap = F.broadcast if broadcast_model else (lambda df: df)
     uni, bi, tri = model["uni"], model["bi"], model["tri"]
     tg = doc_trigrams(docs, text_col)
     scored = (
-        tg.join(wrap(tri), ["w1", "w2", "w3"], "left")
+        tg.join(F.broadcast(tri), ["w1", "w2", "w3"], "left")
         .join(
-            wrap(bi.select(F.col("w1"), F.col("w2"), F.col("c12").alias("c12_ctx"))),
+            F.broadcast(bi.select(F.col("w1"), F.col("w2"), F.col("c12").alias("c12_ctx"))),
             ["w1", "w2"],
             "left",
         )
         .join(
-            wrap(
+            F.broadcast(
                 bi.select(
                     F.col("w1").alias("w2"),
                     F.col("w2").alias("w3"),
@@ -314,9 +309,9 @@ def score_perplexity_trigram(
             ["w2", "w3"],
             "left",
         )
-        .join(wrap(uni.select(F.col("w").alias("w2"), F.col("c1").alias("c2"))), "w2", "left")
-        .join(wrap(uni.select(F.col("w").alias("w3"), F.col("c1").alias("c3"))), "w3", "left")
-        .join(wrap(model["totals"]))
+        .join(F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c1").alias("c2"))), "w2", "left")
+        .join(F.broadcast(uni.select(F.col("w").alias("w3"), F.col("c1").alias("c3"))), "w3", "left")
+        .join(F.broadcast(model["totals"]))
         .select(
             "doc_id",
             F.when(

@@ -480,18 +480,21 @@ def ivf_neardup_pairs(
     nearest cells (multi-probe: the standard IVF recall lever),
     candidate pairs sharing a cell, exact cosine verify on deduped id
     pairs. At scale the cell assignment is a shuffle-free kernel
-    (centroid count ~ sqrt(N), held in its closure) and the verify join
-    shuffles only within-cell id pairs. Recall vs the exact pair set is
+    (centroid count ~ sqrt(N), held in its closure) that runs once: its
+    ids are grouped by cell and each cell's id list is crossed with
+    itself, so only ids shuffle, and the verify join shuffles only
+    within-cell id pairs. Recall vs the exact pair set is
     asserted in tests and tabulated in BENCH/BASELINE.md."""
     cents = kmeans_centroids(vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    assigned = _nearest_cells(
-        vectors.select(id_col, vec_col), vec_col, cents, nprobe
-    ).select(F.col(id_col).alias("id"), "cent_id")
-    a = assigned.alias("a")
-    b = assigned.alias("b")
+    cells = (
+        _nearest_cells(vectors.select(id_col, vec_col), vec_col, cents, nprobe)
+        .groupBy("cent_id")
+        .agg(F.collect_list(id_col).alias("ids"))
+    )
     cand = (
-        a.join(b, (F.col("a.cent_id") == F.col("b.cent_id")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        cells.select("ids", F.explode("ids").alias("id_a"))
+        .select("id_a", F.explode("ids").alias("id_b"))
+        .where(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
     return _verify_pairs(cand, vectors, threshold, id_col, vec_col)

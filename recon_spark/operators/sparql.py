@@ -1,7 +1,7 @@
 """SPARQL basic-graph-pattern compiler over the materialized KG.
 
 The engine materializes (subj, pred, obj) triple tables
-(queries/core.py:canonicalize_triples — the graph-materialization shape
+(queries/core.py:canonical_triple_counts — the graph-materialization shape
 named in the project north star). This module adds the missing consumer
 side: a small SPARQL subset compiled straight to DataFrame plans, so the
 constructed KG can be *queried* with the lingua franca of triple stores
@@ -44,7 +44,7 @@ clause the non-aggregate projection variables group implicitly (SPARQL 1.1
 §11.1 semantics). CONSTRUCT (§10.2) instantiates each template triple per
 solution, drops instantiations left incomplete by unbound OPTIONAL
 variables, and returns the resulting triple SET as a (subj, pred, obj)
-DataFrame — the same shape canonicalize_triples materializes, so the
+DataFrame — the same shape canonical_triple_counts materializes, so the
 output feeds recon_spark/rdf.py's N-Triples sink or a further SPARQL
 query directly (KG -> derived KG -> export, all one Catalyst plan).
 
@@ -1424,7 +1424,7 @@ def compile_sparql(
     """Compile a SPARQL query to a DataFrame plan over ``graph``.
 
     ``graph`` must expose string columns (subj, pred, obj) — the
-    materialized-KG shape of queries/core.py:canonicalize_triples — plus
+    materialized-KG shape of queries/core.py:canonical_triple_counts — plus
     a ``graph`` column (the quad shape rdf.py's read_ntriples parses
     from N-Quads) when the query uses GRAPH patterns.
     BGP bag semantics follow SPARQL 1.1: duplicates survive unless

@@ -85,14 +85,25 @@ def _psl_rule_list(psl) -> list[str]:
 
 def _psl_ps_len_sql(rules: list[str]) -> str:
     """SQL text (over a parameter named ``h``) computing the
-    public-suffix LABEL COUNT of host ``h`` under PSL semantics —
-    the one place the rule literals appear. Generated as a single SQL
-    string because building the same predicate through the Column API
-    creates one JVM literal per rule via py4j: at the full list's 9.5k
-    rules that is ~9s of py4j round trips PER QUERY, vs one parse of
-    this string per session (the SQL UDF below). The parsed plan is
-    identical — Catalyst's OptimizeIn still turns each label-count
-    group's IN into an InSet hash probe."""
+    public-suffix LABEL COUNT of host ``h`` under Public Suffix List
+    semantics (publicsuffix.org algorithm): the public suffix is the
+    longest matching rule — exception rules void their wildcard,
+    wildcard ``*.b`` adds one label to its base, unlisted TLDs fall
+    back to the implicit 1-label default rule. The one place the rule
+    literals appear.
+
+    Pure JVM, zero shuffle, and whole-stage-codegen friendly: rules are
+    grouped by label count k, the host's last-k-labels suffix is built
+    with element_at/concat_ws (plain expressions), and each group is
+    one IN — Catalyst's OptimizeIn turns a >10-element IN into InSet,
+    an O(1) hash probe compiled into the scan stage. Higher-order
+    transform/filter lambdas over a suffix array run interpreted and
+    measured ~2.3x slower at 5M rows. The rule table never becomes a
+    join. Generated as a single SQL string because building the same
+    predicate through the Column API creates one JVM literal per rule
+    via py4j: at the full list's 9.5k rules that is ~9s of py4j round
+    trips PER QUERY, vs one parse of this string per session (the SQL
+    UDF below)."""
     exact, wild, exc = _psl_lookup_maps(rules)
     labels = "split(h, '\\\\.')"
     n = f"size({labels})"
@@ -143,11 +154,11 @@ _PSL_UDF_CACHE: dict = {}
 def _ensure_psl_len_udf(spark, rules: list[str]) -> str:
     """CREATE (once per session per rule set) the SQL scalar UDF
     ``psl_ps_len_<hash>(h STRING) RETURNS INT`` and return its name.
-    SQL UDFs are inlined by the analyzer, so call sites compile to the
-    same InSet-probe map stage as the Column-built twin — but the 9.5k
-    rule literals cross py4j as ONE string, parsed once per session
-    instead of rebuilt per query (~9s -> ~0.2s per query at the full
-    list; measured in BENCH/BASELINE.md round-5 notes)."""
+    SQL UDFs are inlined by the analyzer, so call sites compile to an
+    InSet-probe map stage, and the 9.5k rule literals cross py4j as ONE
+    string, parsed once per session instead of rebuilt per query (~9s
+    -> ~0.2s per query at the full list; measured in BENCH/BASELINE.md
+    round-5 notes)."""
     import hashlib
 
     h = hashlib.md5("\n".join(rules).encode()).hexdigest()[:10]
@@ -178,78 +189,6 @@ def _reg_domain_from_ps_len(host: Column, ps_len: Column) -> Column:
     )
 
 
-def _registered_domain_psl(host: Column, psl) -> Column:
-    """SPEC TWIN (Column-built): kept as the independently-constructed
-    reference for the SQL-UDF production route (_ensure_psl_len_udf +
-    _reg_domain_from_ps_len) — tests assert the two produce identical
-    results. Not used on the hot path: building 9.5k rule literals
-    through the Column API costs ~9s of py4j round trips per query.
-
-    Registered domain under real Public Suffix List semantics
-    (publicsuffix.org algorithm): the public suffix is the longest
-    matching rule — exception rules void their wildcard, wildcard
-    ``*.b`` adds one label to its base, unlisted TLDs fall back to the
-    implicit 1-label default rule — and the registered domain is the
-    public suffix plus one label. A host that IS a public suffix (e.g.
-    ``foo.ck`` under ``*.ck``) has no registrable parent and passes
-    through unchanged, same convention as single-label hosts.
-
-    Pure JVM, zero shuffle, and WHOLE-STAGE-CODEGEN friendly: rules are
-    grouped by label count k, the host's last-k-labels suffix is built
-    with element_at/concat_ws (plain expressions), and each group is
-    one ``isin`` — Catalyst turns a >10-element IN into InSet, an O(1)
-    hash probe compiled into the scan stage. The first cut used
-    higher-order transform/filter lambdas over a suffix array; lambda
-    functions execute interpreted (outside codegen) and measured ~2.3x
-    slower at 5M rows. The rule table never becomes a join.
-    """
-    exact, wild, exc = _psl_lookup_maps(psl)
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-
-    def by_len(m: dict) -> dict[int, list[str]]:
-        out: dict[int, list[str]] = {}
-        for r in m:
-            out.setdefault(len(r.split(".")), []).append(r)
-        return out
-
-    def suffix(k: int) -> Column:
-        # last k labels re-joined; guarded so ANSI element_at(-i) never
-        # sees an out-of-bounds index (when() evaluates lazily per row)
-        s = F.concat_ws(".", *[F.element_at(labels, -i) for i in range(k, 0, -1)])
-        return F.when(n >= k, s)
-
-    def best(groups: dict[int, list[str]], value, cond=None) -> Column:
-        # greatest() skips NULLs, so each group contributes its ps
-        # label count only when its suffix matches
-        cands = []
-        for k, rules in sorted(groups.items()):
-            hit = suffix(k).isin(rules)
-            if cond is not None:
-                hit = hit & cond(k)
-            cands.append(F.when(hit, F.lit(value(k))))
-        if not cands:
-            return F.lit(None).cast("int")
-        return cands[0] if len(cands) == 1 else F.greatest(*cands)
-
-    exc_len = best(by_len(exc), lambda k: k - 1)
-    rule_len = best(by_len(exact), lambda k: k)
-    # wildcard *.b implies a (labels(b)+1)-label public suffix — only
-    # applicable when the host actually has that many labels
-    wild_len = best(by_len(wild), lambda k: k + 1, cond=lambda k: n >= k + 1)
-    ps_len = F.coalesce(
-        exc_len,
-        F.greatest(
-            F.coalesce(rule_len, F.lit(1)),
-            F.coalesce(wild_len, F.lit(1)),
-            F.lit(1),
-        ),
-    )
-    return F.when(n <= ps_len, host).otherwise(
-        F.array_join(F.slice(labels, n - ps_len, ps_len + 1), ".")
-    )
-
-
 def registered_domain(
     df: DataFrame,
     host_col: str = "host",
@@ -273,8 +212,8 @@ def registered_domain(
     # PSL mode: the rule literals live in a session-cached SQL UDF
     # (_ensure_psl_len_udf) — the ps-len lands in a temp column so the
     # analyzer inlines the UDF body exactly ONCE per query, and the
-    # arithmetic references the attribute. Same map-only InSet plan as
-    # the Column-built spec twin (_registered_domain_psl), tested equal.
+    # arithmetic references the attribute: one map-only InSet plan,
+    # tested against a pure-Python PSL reference.
     fn = _ensure_psl_len_udf(df.sparkSession, _psl_rule_list(psl))
     tmp = f"_psl_ps_len_{out_col}"
     rd = _reg_domain_from_ps_len(host, F.col(tmp))
@@ -293,7 +232,7 @@ def _registered_domain(host: Column) -> Column:
     last 2 labels, or last 3 when the host ends in a compound suffix
     like .co.uk. Pure JVM: split + slice from the end + array_join.
     Demo/oracle mode — real-crawl runs should pass a PSL to
-    registered_domain/normalize_url (see _registered_domain_psl); this
+    registered_domain/normalize_url (see _psl_ps_len_sql); this
     heuristic mis-groups registry classes the 7-entry IN-list misses
     (``foo.ne.jp``, ``<user>.github.io``)."""
     labels = F.split(host, r"\.")
@@ -334,7 +273,7 @@ def normalize_url(
     ``psl``: None = the bounded IN-list suffix heuristic (oracle/demo
     mode); a rule list or ``rule``-column DataFrame = full Public
     Suffix List semantics for reg_domain (same map-only plan shape —
-    see _registered_domain_psl).
+    see _psl_ps_len_sql).
     """
     # temp columns, dropped below — Catalyst collapses the projections
     # so the executed plan is one codegen'd map stage

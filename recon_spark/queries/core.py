@@ -34,7 +34,7 @@ from recon_spark.operators.extraction import (
     extract_triples_tokens,
     mentions_long,
 )
-from recon_spark.operators.linker import alias_df, link_mentions
+from recon_spark.operators.linker import alias_df, link_mentions, to_entity, top_aliases
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,37 +484,15 @@ SELECT doc_id, subj, pred, obj, pos FROM triples ORDER BY doc_id, pos
 """
 
 
-def canonicalize_triples(spark: SparkSession, t: DataFrame) -> DataFrame:
-    """Canonicalize raw (subj, pred, obj) triples through the
-    best-scoring alias dictionary (broadcast joins; unlinkable surfaces
-    keep their surface form) and aggregate to (subj, pred, obj, n) —
-    the KG materialization shape. Shared by the direct-text and
-    WARC-ingest paths."""
-    from pyspark.sql import Window
-
-    best = (
-        alias_df(spark)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where("rk = 1")
-        .select("alias", "entity_id")
-    )
-    t = (
-        t.join(F.broadcast(best).withColumnRenamed("entity_id", "subj_id"),
-               t.subj == F.col("alias"), "left").drop("alias")
-        .join(F.broadcast(best).withColumnRenamed("entity_id", "obj_id"),
-              t.obj == F.col("alias"), "left").drop("alias")
-    )
+def canonical_triple_counts(spark: SparkSession, t: DataFrame) -> DataFrame:
+    """Canonicalize raw (subj, pred, obj) triples through the top-1
+    alias candidate (operators.linker: broadcast joins; unlinkable
+    surfaces keep their surface form) and aggregate to
+    (subj, pred, obj, n) — the KG materialization shape. Shared by the
+    direct-text and WARC-ingest paths."""
+    best = top_aliases(alias_df(spark))
     return (
-        t.select(
-            F.coalesce("subj_id", "subj").alias("subj"),
-            "pred",
-            F.coalesce("obj_id", "obj").alias("obj"),
-        )
+        to_entity(to_entity(t, "subj", best), "obj", best)
         .groupBy("subj", "pred", "obj")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "subj", "pred", "obj")
@@ -525,7 +503,7 @@ def q_triples_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triples with subj/obj canonicalized through the alias dictionary
     (unlinkable surfaces keep their surface form), aggregated to
     (subj, pred, obj, n) — the KG materialization shape."""
-    return canonicalize_triples(
+    return canonical_triple_counts(
         spark, extract_triples_tokens(_docs(spark, sf_dir))
     )
 

@@ -14,13 +14,13 @@ Oracle notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from recon_spark.gazetteer import sql_alias_values
 from recon_spark.operators.extraction import extract_triples_tokens
 from recon_spark.operators.graph import DAMPING, PR_ITERATIONS, degree_stats, pagerank
-from recon_spark.operators.linker import alias_df
+from recon_spark.operators.linker import alias_df, to_entity, top_aliases
 from recon_spark.operators.textstats import (
     PII_EMAIL,
     PII_IPV4,
@@ -37,38 +37,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(src, dst) edges of the canonical KG: triples with subj/obj
-    mapped through the top-1 alias candidate (broadcast), the same
-    derivation as the ``triples_canonical`` query."""
-    t = extract_triples_tokens(_docs(spark, sf_dir))
-    best = (
-        alias_df(spark)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where("rk = 1")
-        .select("alias", "entity_id")
-    )
-    t = (
-        t.join(
-            F.broadcast(best).withColumnRenamed("entity_id", "subj_id"),
-            t.subj == F.col("alias"),
-            "left",
-        )
-        .drop("alias")
-        .join(
-            F.broadcast(best).withColumnRenamed("entity_id", "obj_id"),
-            t.obj == F.col("alias"),
-            "left",
-        )
-        .drop("alias")
-    )
-    return t.select(
-        F.coalesce("subj_id", "subj").alias("src"),
-        F.coalesce("obj_id", "obj").alias("dst"),
+    """(src, dst) edges of the canonical KG: subj/obj of the
+    ``_canonical_triples`` rows, the same derivation as the
+    ``triples_canonical`` query."""
+    return _canonical_triples(spark, sf_dir).select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
 
 
@@ -287,27 +260,10 @@ def _canonical_entity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recon_spark.operators.graph import cooccurrence_pmi  # noqa: F401
 
     t = extract_triples_tokens(_docs(spark, sf_dir))
-    best = (
-        alias_df(spark)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where("rk = 1")
-        .select("alias", "entity_id")
+    ment = t.select("doc_id", F.col("subj").alias("entity")).unionAll(
+        t.select("doc_id", F.col("obj").alias("entity"))
     )
-    ment = t.select("doc_id", F.col("subj").alias("surface")).unionAll(
-        t.select("doc_id", F.col("obj").alias("surface"))
-    )
-    return (
-        ment.join(F.broadcast(best), ment.surface == F.col("alias"), "left")
-        .select(
-            "doc_id", F.coalesce("entity_id", "surface").alias("entity")
-        )
-        .distinct()
-    )
+    return to_entity(ment, "entity", top_aliases(alias_df(spark))).distinct()
 
 
 def _sql_canonical_mentions() -> str:
@@ -663,42 +619,12 @@ def _canonical_triples(
     mapped derivation as triples_canonical, before its rollup.
     ``doc_filter`` (SQL over documents columns) restricts the source
     corpus — the snapshot lever for kg_snapshot_diff."""
-    from pyspark.sql import Window
-
     docs = _docs(spark, sf_dir)
     if doc_filter is not None:
         docs = docs.where(doc_filter)
-    t = extract_triples_tokens(docs)
-    best = (
-        alias_df(spark)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where("rk = 1")
-        .select("alias", "entity_id")
-    )
-    t = (
-        t.join(
-            F.broadcast(best).withColumnRenamed("entity_id", "subj_id"),
-            t.subj == F.col("alias"),
-            "left",
-        )
-        .drop("alias")
-        .join(
-            F.broadcast(best).withColumnRenamed("entity_id", "obj_id"),
-            t.obj == F.col("alias"),
-            "left",
-        )
-        .drop("alias")
-    )
-    return t.select(
-        F.coalesce("subj_id", "subj").alias("subj"),
-        "pred",
-        F.coalesce("obj_id", "obj").alias("obj"),
-    )
+    best = top_aliases(alias_df(spark))
+    t = to_entity(to_entity(extract_triples_tokens(docs), "subj", best), "obj", best)
+    return t.select("subj", "pred", "obj")
 
 
 def q_kg_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1002,9 +928,9 @@ FROM g ORDER BY pred
 # --------------------------------------------------------------------------
 
 def _canonical_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.queries.core import canonical_triple_counts
 
-    return canonicalize_triples(
+    return canonical_triple_counts(
         spark, extract_triples_tokens(_docs(spark, sf_dir))
     ).select("subj", "pred", "obj")
 
@@ -1186,10 +1112,10 @@ def q_rdf_ntriples_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     escaping, one anchored regex) with Spark's text writer as the sink
     — map-only both directions, no Python, no shuffle until the final
     orderBy."""
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.queries.core import canonical_triple_counts
     from recon_spark.rdf import ENT, PRED, local_name, read_ntriples, serialize_triples
 
-    kg = canonicalize_triples(
+    kg = canonical_triple_counts(
         spark, extract_triples_tokens(_docs(spark, sf_dir))
     ).select("subj", "pred", "obj")
     out = _stage_rdf(spark, sf_dir, "nt", serialize_triples(kg))

@@ -313,7 +313,7 @@ ranked AS (
   SELECT query_id, neighbor_id, cos_raw,
          row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id)
            AS rank
-  FROM scored
+  FROM scored WHERE cos_raw IS NOT NULL  -- a zero vector has no cosine
 )
 SELECT query_id, neighbor_id, round(cos_raw, 6) AS cos, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
@@ -2804,7 +2804,7 @@ def q_triples_mined_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     (subj, pred, obj) rollup, same as triples_canonical. Multi-word
     mined aliases ('hash table', '<surf> engine') simply never match
     unigram triple slots — unlinkable surfaces keep their surface form,
-    per the canonicalize_triples contract. The oracle re-derives the
+    per the canonical_triple_counts contract. The oracle re-derives the
     mined dictionary, the rank-1 pick, and both coalesce joins
     relationally."""
     from recon_spark.operators.extraction import extract_triples_tokens
@@ -3631,16 +3631,16 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full WARC round trip: distributed .warc.gz sink -> binaryFile +
     Arrow record-parse source -> html text extraction. One task per
     WARC file — Common Crawl's own distribution unit; see
-    recon_spark/warc.py. Extraction is the REAL-CRAWL path
-    (html_to_text_v2: charset-aware, script/style/comment-stripping,
-    full entity unescape) — on these clean fixtures it is byte-equal to
-    the pinned v1 contract, which the oracle's regex replay proves."""
-    from recon_spark.pages import extract_text_column_v2
+    recon_spark/warc.py. Extraction is pages.html_to_text
+    (charset-aware, script/style/comment-stripping, full entity
+    unescape); on these clean fixtures it reduces to tag stripping and
+    whitespace collapse, which the oracle's regex replay restates."""
+    from recon_spark.pages import extract_text_column
     from recon_spark.warc import read_warc
 
     out_dir = _stage_warc(spark, sf_dir)
     pages = read_warc(spark, out_dir)
-    pages = extract_text_column_v2(pages, content_type_col="content_type")
+    pages = extract_text_column(pages, content_type_col="content_type")
     return pages.select(
         "url",
         "warc_ts_s",
@@ -3680,19 +3680,19 @@ def q_warc_to_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     the way into the KG (the per-url byte-identical text contract,
     extended to the triples it produces)."""
     from recon_spark.operators.extraction import extract_triples_tokens
-    from recon_spark.pages import extract_text_column_v2
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.pages import extract_text_column
+    from recon_spark.queries.core import canonical_triple_counts
     from recon_spark.warc import read_warc
 
     out_dir = _stage_warc(spark, sf_dir)
-    pages = extract_text_column_v2(
+    pages = extract_text_column(
         read_warc(spark, out_dir), content_type_col="content_type"
     )
     docs = pages.select(
         F.regexp_extract("url", r"/d/([0-9]+)$", 1).cast("long").alias("doc_id"),
         "text",
     )
-    return canonicalize_triples(spark, extract_triples_tokens(docs))
+    return canonical_triple_counts(spark, extract_triples_tokens(docs))
 
 
 def _sql_warc_to_triples() -> str:
@@ -3708,14 +3708,14 @@ def _sql_warc_to_triples() -> str:
 
 
 # --------------------------------------------------------------------------
-# Real-crawl HTML extraction (pages.html_to_text_v2 over WARC bytes).
+# Real-crawl HTML extraction (pages.html_to_text over WARC bytes).
 # Fixtures are deliberately MESSY — the three ways actual Common Crawl
 # pages break a naive extractor (r4 verdict gap #1): script/style/
 # comment content, the full HTML5 entity table (incl. the compound
 # "&amp;lt;" single-pass subtlety and unknown entities), and a
 # non-UTF-8 (ISO-8859-1) page declared via http-equiv meta. The oracle
 # never replays the extractor: it KNOWS the expected text because it
-# constructs the page around it — any v2 bug (wrong strip order, double
+# constructs the page around it — any extractor bug (wrong strip order, double
 # unescape, charset misdetect) hash-fails.
 # --------------------------------------------------------------------------
 
@@ -3745,7 +3745,7 @@ _MESSY_HEAD_ENTITIES = (
     "<html><body><p>&amp;lt;e&amp;gt; &#38; &unknown; "
 )
 
-# expected decoded prefixes (what html_to_text_v2 must emit)
+# expected decoded prefixes (what html_to_text must emit)
 _EXP_UTF8 = "caf\xe9 — \"q\" &lt;tag&gt; 's' … "
 _EXP_LATIN1 = _MESSY_PREFIX_LATIN1
 _EXP_ENTITIES = "&lt;e&gt; & &unknown; "
@@ -3802,15 +3802,15 @@ def _stage_warc_messy(spark: SparkSession, sf_dir: str) -> str:
 
 def q_warc_real_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-crawl extraction over messy WARC bytes: read_warc ->
-    html_to_text_v2 (charset from Content-Type/meta, script/style/
+    html_to_text (charset from Content-Type/meta, script/style/
     comment content stripped, full entity unescape). Map-only after the
     one-task-per-file scan — the same plan shape as warc_ingest; the
     per-page md5 pins every byte of the extracted text."""
-    from recon_spark.pages import extract_text_column_v2
+    from recon_spark.pages import extract_text_column
     from recon_spark.warc import read_warc
 
     out_dir = _stage_warc_messy(spark, sf_dir)
-    pages = extract_text_column_v2(
+    pages = extract_text_column(
         read_warc(spark, out_dir), content_type_col="content_type"
     )
     return pages.select(
@@ -3828,7 +3828,7 @@ _WET_STAGING: dict = {}
 
 def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full CC text-distribution loop (round 5): raw messy WARC ->
-    read_warc -> html_to_text_v2 -> write_wet_files (WET ``conversion``
+    read_warc -> html_to_text -> write_wet_files (WET ``conversion``
     records, text/plain, streamed + atomically published) -> read_warc
     again over the WET output. Verified against the SAME oracle as
     warc_real_html: the round trip through the WET container must
@@ -3842,7 +3842,7 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from recon_spark.pages import extract_text_column_v2
+    from recon_spark.pages import extract_text_column
     from recon_spark.warc import read_warc, write_wet_files
 
     key = os.path.abspath(sf_dir)
@@ -3850,7 +3850,7 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_dir = _stage_warc_messy(spark, sf_dir)
         wet_dir = tempfile.mkdtemp(prefix="recon_wet_")
         atexit.register(shutil.rmtree, wet_dir, ignore_errors=True)
-        pages = extract_text_column_v2(
+        pages = extract_text_column(
             read_warc(spark, src_dir), content_type_col="content_type"
         )
         manifest = write_wet_files(
@@ -3915,7 +3915,7 @@ FROM ex ORDER BY url
 # --------------------------------------------------------------------------
 # WARC-first curation funnel: the dress-rehearsal DAG the r4 verdict
 # asked for — raw crawl bytes through EVERY production gate to the KG,
-# one composed plan with per-stage survivor counts. Stages: v2 text
+# one composed plan with per-stage survivor counts. Stages: text
 # extraction (messy fixtures) -> full Gopher gate on the EXTRACTED text
 # -> full-PSL registered-domain blocklist -> benchmark decontamination
 # -> exact dedup (the staging injects true duplicate records) ->
@@ -3932,7 +3932,7 @@ _FUNNEL_WARC_BLOCK = ("example.co.uk", "city.kawasaki.jp")
 
 
 def q_curation_funnel_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end survivor report FROM RAW WARC BYTES: extract (v2) ->
+    """End-to-end survivor report FROM RAW WARC BYTES: extract text ->
     gopher -> PSL blocklist -> decontaminate -> exact dedup -> triples.
     Returns (stage, n_in, n_out); the 5_triples row's n_out is the
     count of distinct canonical (subj, pred, obj) the survivors emit —
@@ -3944,12 +3944,12 @@ def q_curation_funnel_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recon_spark.operators.extraction import extract_triples_tokens
     from recon_spark.operators.textstats import gopher_quality_filter
     from recon_spark.operators.webops import registered_domain
-    from recon_spark.pages import extract_text_column_v2
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.pages import extract_text_column
+    from recon_spark.queries.core import canonical_triple_counts
     from recon_spark.warc import read_warc
 
     out_dir = _stage_warc_messy(spark, sf_dir)
-    docs = extract_text_column_v2(
+    docs = extract_text_column(
         read_warc(spark, out_dir), content_type_col="content_type"
     ).select(
         F.regexp_extract("url", r"/m/([0-9]+)$", 1).cast("long").alias("doc_id"),
@@ -4032,7 +4032,7 @@ def q_curation_funnel_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3 = s2 & ~F.coalesce("ic", F.lit(False))
     s4 = s3 & F.col("kd")
     surv = flags.where(s4).select("doc_id")
-    canon = canonicalize_triples(
+    canon = canonical_triple_counts(
         spark, extract_triples_tokens(docs.join(surv, "doc_id"))
     )
     tcnt = canon.agg(F.count(F.lit(1)).alias("nt"))
@@ -4156,7 +4156,7 @@ def q_reg_domain_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     (webops.registered_domain, DataFrame/table mode over the bundled
     snapshot): per host, the PSL longest-match owner. Map-only literal
     plan — the rule table never becomes a join; see
-    webops._registered_domain_psl for the 10^12-row rationale."""
+    webops._psl_ps_len_sql for the 10^12-row rationale."""
     return (
         _docs_with_psl_hosts(spark, sf_dir)
         .where(F.col("doc_id") < 500)

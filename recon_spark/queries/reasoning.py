@@ -87,13 +87,13 @@ def q_rdfs_entail_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact because the RDFS fragment is linear in the assertions."""
     from recon_spark.operators.extraction import extract_triples_tokens
     from recon_spark.operators.reasoning import rdfs_entail_delta
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.queries.core import canonical_triple_counts
     from recon_spark.queries.graph import _docs
 
     docs = _docs(spark, sf_dir)
 
     def kg_of(d: DataFrame) -> DataFrame:
-        return canonicalize_triples(spark, extract_triples_tokens(d)).select(
+        return canonical_triple_counts(spark, extract_triples_tokens(d)).select(
             "subj", "pred", "obj"
         )
 
@@ -279,13 +279,13 @@ def q_stream_entailment(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence is driver-checked, not just unit-tested."""
     from recon_spark.operators.extraction import extract_triples_tokens
     from recon_spark.operators.reasoning import rdfs_entail_delta
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.queries.core import canonical_triple_counts
 
     src, chk, out = _stage_entail_stream(spark, sf_dir)
     schema = spark.read.parquet(f"{src}/batch-0.parquet").schema
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        kg = canonicalize_triples(
+        kg = canonical_triple_counts(
             spark, extract_triples_tokens(batch_df)
         ).select("subj", "pred", "obj")
         if batch_id == 0:

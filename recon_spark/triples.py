@@ -7,8 +7,10 @@ The end-to-end KG-construction pipeline (BASELINE.json north_star):
        transform in production)
     -> Arrow-vectorized mention detection (operators.extraction)
     -> span-offset validation gate (operators.validation)
-    -> JVM SVO triple extraction with char-offset provenance (below)
-    -> canonicalization via broadcast alias dictionary (operators.linker)
+    -> JVM SVO triple extraction: the one window rule
+       (operators.extraction), projected to char-offset provenance below
+    -> canonicalization: subj/obj replaced by their top-1 alias entity
+       (operators.linker, broadcast)
     -> partitioned (subj, pred, obj) table, idempotent MERGE into a
        SnapshotStore (storage.py) with per-partition lineage + metrics
 
@@ -20,106 +22,54 @@ of the reference's replay-pending-ops on load (recon/dataset.py:353-382).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recon_spark.gazetteer import PREDICATES
-from recon_spark.operators.extraction import detect_mentions, entity_unigrams
-from recon_spark.operators.linker import alias_df
+from recon_spark.operators.extraction import _svo_windows, detect_mentions
+from recon_spark.operators.linker import alias_df, to_entity, top_aliases
 from recon_spark.operators.validation import validate_span_offsets
 from recon_spark.storage import SnapshotStore
-
-_TOK_DDL = "ARRAY<STRUCT<w: STRING, s: INT, e: INT>>"
 
 
 def extract_triples_spans(
     df: DataFrame, id_col: str = "page_id", text_col: str = "text", url_col: str = "url"
 ) -> DataFrame:
-    """SVO triples with char-offset provenance, pure JVM per-row:
-    consecutive token windows (subj ENT, pred, obj ENT) ->
-    (url, subj, pred, obj, subj_span, obj_span). Zero shuffle."""
-    uni = entity_unigrams()
-    uni_arr = "array(" + ", ".join(f"'{s}'" for s in uni) + ")"
-    pred_arr = "array(" + ", ".join(f"'{s}'" for s in PREDICATES) + ")"
-    toks = f"""
-    aggregate(
-      split({text_col}, ' '),
-      named_struct('pos', 0, 'ts', CAST(array() AS {_TOK_DDL})),
-      (acc, w) -> named_struct(
-        'pos', acc.pos + length(w) + 1,
-        'ts', array_append(acc.ts, named_struct('w', w, 's', acc.pos, 'e', acc.pos + length(w)))),
-      acc -> acc.ts
-    )
-    """
-    trip = f"""
-    filter(
-      transform(
-        CASE WHEN size(__toks) >= 3 THEN sequence(1, size(__toks) - 2)
-             ELSE CAST(array() AS ARRAY<INT>) END,
-        i -> named_struct(
-          'subj', element_at(__toks, i).w,
-          'pred', element_at(__toks, i + 1).w,
-          'obj',  element_at(__toks, i + 2).w,
-          'subj_span', named_struct('start', element_at(__toks, i).s,
-                                    'end', element_at(__toks, i).e),
-          'obj_span', named_struct('start', element_at(__toks, i + 2).s,
-                                   'end', element_at(__toks, i + 2).e))
-      ),
-      t -> array_contains({uni_arr}, t.subj)
-           AND array_contains({pred_arr}, t.pred)
-           AND array_contains({uni_arr}, t.obj)
-    )
-    """
-    return (
-        df.withColumn("__toks", F.expr(toks))
-        .select(id_col, url_col, F.explode(F.expr(trip)).alias("t"))
-        .select(
-            id_col,
-            url_col,
-            "t.subj",
-            "t.pred",
-            "t.obj",
-            "t.subj_span",
-            "t.obj_span",
+    """SVO triples with char-offset provenance: the rows of the one SVO
+    window rule (operators.extraction) projected to (page_id, url, subj,
+    pred, obj, subj_span, obj_span). Offsets are computed only for
+    matched windows, from the subj token index ``pos``: tokens are
+    single-space separated, so subj starts one past the length of the
+    ``pos`` tokens before it joined by spaces (0 for the first token).
+    Pure JVM, zero shuffle."""
+    t = _svo_windows(df, id_col, text_col, url_col, "__w")
+    before = F.array_join(F.slice("__w", F.lit(1), F.col("pos")), " ")
+    t = t.withColumn(
+        "__s", F.when(F.col("pos") == 0, 0).otherwise(F.length(before) + 1)
+    ).withColumn("__o", F.col("__s") + F.length("subj") + F.length("pred") + 2)
+
+    def span(start: str, word: str) -> Column:
+        return F.struct(
+            F.col(start).alias("start"), (F.col(start) + F.length(word)).alias("end")
         )
+
+    return t.select(
+        id_col,
+        url_col,
+        "subj",
+        "pred",
+        "obj",
+        span("__s", "subj").alias("subj_span"),
+        span("__o", "obj").alias("obj_span"),
     )
 
 
 def canonicalize_triples(spark: SparkSession, triples: DataFrame) -> DataFrame:
     """Map subj/obj surfaces to canonical entity ids through the top-1
-    alias candidate (broadcast); unlinkable surfaces keep their form."""
-    best = (
-        alias_df(spark)
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("alias").orderBy(F.desc("score"), "entity_id")
-            ),
-        )
-        .where("rk = 1")
-        .select("alias", "entity_id")
-    )
-    t = (
-        triples.join(
-            F.broadcast(best).withColumnRenamed("entity_id", "subj_id"),
-            triples.subj == F.col("alias"),
-            "left",
-        )
-        .drop("alias")
-    )
-    t = t.join(
-        F.broadcast(best).withColumnRenamed("entity_id", "obj_id"),
-        t.obj == F.col("alias"),
-        "left",
-    ).drop("alias")
-    return t.select(
-        F.coalesce("subj_id", "subj").alias("subj"),
-        "pred",
-        F.coalesce("obj_id", "obj").alias("obj"),
-        "url",
-        "subj_span",
-        "obj_span",
-    )
+    alias candidate (operators.linker); unlinkable surfaces keep their
+    form."""
+    best = top_aliases(alias_df(spark))
+    t = to_entity(to_entity(triples, "subj", best), "obj", best)
+    return t.select("subj", "pred", "obj", "url", "subj_span", "obj_span")
 
 
 def build_triples(

@@ -6,8 +6,9 @@ canonicalization — with deliberately different machinery (a character
 state machine instead of regex tag stripping; a token-index scan instead
 of a regex alternation). The BASELINE contract is checked against this:
 byte-identical text per url, triple-set P/R >= 0.95. The error-analysis
-operators (insights.py) and the MinHash/SimHash kernels (dedupe.py) are
-checked against the plain-Python versions at the end of this file.
+operators (insights.py), the MinHash/SimHash kernels (dedupe.py) and the
+Public Suffix List registered domain (webops.py) are checked against the
+plain-Python versions at the end of this file.
 """
 
 from __future__ import annotations
@@ -201,3 +202,40 @@ def ref_simhash(text: str, hash_mode: str = "wcode") -> int:
     return sum(
         1 << j for j in range(32) if sum(1 if (g >> j) & 1 else -1 for g in gs) > 0
     )
+
+
+# --- registered domain under Public Suffix List rules (webops) ------------
+
+
+def ref_registered_domain(host: str, rules) -> str:
+    """Pure-Python publicsuffix.org algorithm (independent of the Spark
+    expression): exception beats all; else longest of {exact matches,
+    wildcard base + 1}; default rule = 1 label; registered domain =
+    public suffix + 1 label, host itself when it IS a public suffix."""
+    labels = host.split(".")
+    n = len(labels)
+    sufs = {".".join(labels[i:]): n - i for i in range(n)}
+    exact, wild, exc = {}, {}, {}
+    for raw in rules:
+        r = raw.lower()
+        if r.startswith("!"):
+            exc[r[1:]] = len(r[1:].split(".")) - 1
+        elif r.startswith("*."):
+            wild[r[2:]] = len(r[2:].split(".")) + 1
+        else:
+            exact[r] = len(r.split("."))
+    ps = None
+    for s in sufs:
+        if s in exc:
+            ps = exc[s] if ps is None else max(ps, exc[s])
+    if ps is None:
+        cands = [1]
+        for s in sufs:
+            if s in exact:
+                cands.append(exact[s])
+            if s in wild and wild[s] <= n:
+                cands.append(wild[s])
+        ps = max(cands)
+    if n <= ps:
+        return host
+    return ".".join(labels[n - ps - 1 :])

@@ -312,7 +312,8 @@ def test_cosine_edge_vectors_match_duckdb_twins(spark, tmp_path):
     vectors, a cosine exactly at the threshold, negative components and
     a zero vector. The zero vector pairs with nothing and, having no
     cosine with any centroid, is assigned where DuckDB puts a NULL
-    similarity: last, so to the lowest cent_id."""
+    similarity: last, so to the lowest cent_id. Top-k gives it no
+    neighbours and makes it nobody's neighbour, like its twin."""
     import duckdb
 
     from recon_spark.operators.similarity import (
@@ -323,7 +324,11 @@ def test_cosine_edge_vectors_match_duckdb_twins(spark, tmp_path):
         kmeans_centroids,
     )
     from recon_spark.queries.extra import SQL_IVF_NEARDUP, _sql_ivf_parts
-    from recon_spark.queries.pipeline import SQL_EMBEDDING_NEARDUP
+    from recon_spark.queries.pipeline import (
+        SQL_ANN_COSINE_TOPK,
+        SQL_EMBEDDING_NEARDUP,
+        q_ann_cosine_topk,
+    )
 
     spark.createDataFrame(
         EDGE_VECTORS, "vec_id long, embedding array<float>"
@@ -351,11 +356,24 @@ def test_cosine_edge_vectors_match_duckdb_twins(spark, tmp_path):
 
     ivf = [tuple(r) for r in ivf_neardup_pairs(emb, threshold=0.6).collect()]
     assert ivf == con.sql(at_06(SQL_IVF_NEARDUP)).fetchall() == exact
-    con.close()
 
     top = cosine_topk(emb, emb, k=10).collect()
     assert all(5 not in (r.query_id, r.neighbor_id) for r in top)
     assert len(top) == 6 * 5
+
+    # ann_cosine_topk against its twin: ids x50 make every vector, the
+    # zero one (250) included, both a query and a candidate
+    x50 = tmp_path / "x50"
+    spark.createDataFrame(
+        [(50 * i, v) for i, v in EDGE_VECTORS], "vec_id long, embedding array<float>"
+    ).write.parquet(str(x50 / "embeddings.parquet"))
+    con.execute(
+        f"CREATE OR REPLACE VIEW embeddings AS SELECT * FROM '{x50}/embeddings.parquet/*.parquet'"
+    )
+    top = [tuple(r) for r in q_ann_cosine_topk(spark, str(x50)).collect()]
+    assert top == con.sql(SQL_ANN_COSINE_TOPK).fetchall()
+    assert len(top) == 6 * 5 and all(250 not in r[:2] for r in top)
+    con.close()
 
 
 def test_one_cosine_summation_order_in_package():

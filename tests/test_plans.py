@@ -172,13 +172,23 @@ def test_ivf_assignment_never_shuffles_centroids(spark):
     lines = plan_of(ivf_neardup_pairs(emb, threshold=0.45)).splitlines()
     # cell assignment is one Python stage holding the (small) centroid
     # set in its closure: nothing below it is an Exchange. The
-    # within-cell self-join and the verify SHOULD shuffle on cent_id /
+    # within-cell grouping and the verify SHOULD shuffle on cent_id /
     # ids — cells are the parallelism unit at scale.
     stages = [i for i, line in enumerate(lines) if "MapInPandas _cells(" in line]
     assert stages
     for i in stages:
         below = subtree(lines, i)
         assert below and not any("Exchange" in line for line in below), "\n".join(below)
+
+
+def test_ivf_assigns_each_vector_once(spark):
+    from recon_spark.operators.similarity import ivf_neardup_pairs
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    plan = plan_of(ivf_neardup_pairs(emb, threshold=0.45))
+    # one assignment pass feeds the candidate pairs; a self-join of the
+    # assigned rows would run the kernel once per side
+    assert plan.count("MapInPandas _cells(") == 1, plan
 
 
 def test_exact_scan_never_broadcasts_vectors(spark):
@@ -434,7 +444,7 @@ def test_rdfs_entailment_rule_joins_all_broadcast(spark):
 
 
 def test_lm_scoring_model_joins_are_broadcast(spark):
-    """score_perplexity's production path ships the model to workers:
+    """score_perplexity ships the model to workers:
     all three model joins broadcast, document bigrams never shuffle
     (the one exchange is the per-doc logprob agg on doc_id)."""
     from recon_spark.operators.lm import score_perplexity, train_bigram_lm

@@ -360,10 +360,10 @@ def test_sparql_on_canonical_kg(spark):
     from pyspark.sql import functions as F
 
     from recon_spark.operators.extraction import extract_triples_tokens
-    from recon_spark.queries.core import canonicalize_triples
+    from recon_spark.queries.core import canonical_triple_counts
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kg = canonicalize_triples(spark, extract_triples_tokens(docs)).select(
+    kg = canonical_triple_counts(spark, extract_triples_tokens(docs)).select(
         "subj", "pred", "obj"
     )
     got = _spark_rows(

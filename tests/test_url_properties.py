@@ -17,6 +17,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from recon_spark.operators.webops import TRACKING_PARAM_RE, normalize_url
+from tests.reference_impl import ref_registered_domain
 
 _TRACK = re.compile(TRACKING_PARAM_RE)
 
@@ -114,40 +115,6 @@ def test_python_reference_is_idempotent(url):
 # --------------------------------------------------------------------------
 
 
-def _psl_reference(host: str, rules) -> str:
-    """Pure-Python publicsuffix.org algorithm (independent of the Spark
-    expression): exception beats all; else longest of {exact matches,
-    wildcard base + 1}; default rule = 1 label; registered domain =
-    public suffix + 1 label, host itself when it IS a public suffix."""
-    labels = host.split(".")
-    n = len(labels)
-    sufs = {".".join(labels[i:]): n - i for i in range(n)}
-    exact, wild, exc = {}, {}, {}
-    for raw in rules:
-        r = raw.lower()
-        if r.startswith("!"):
-            exc[r[1:]] = len(r[1:].split(".")) - 1
-        elif r.startswith("*."):
-            wild[r[2:]] = len(r[2:].split(".")) + 1
-        else:
-            exact[r] = len(r.split("."))
-    ps = None
-    for s in sufs:
-        if s in exc:
-            ps = exc[s] if ps is None else max(ps, exc[s])
-    if ps is None:
-        cands = [1]
-        for s in sufs:
-            if s in exact:
-                cands.append(exact[s])
-            if s in wild and wild[s] <= n:
-                cands.append(wild[s])
-        ps = max(cands)
-    if n <= ps:
-        return host
-    return ".".join(labels[n - ps - 1 :])
-
-
 psl_host = st.lists(
     st.one_of(
         st.sampled_from(
@@ -173,7 +140,7 @@ def test_registered_domain_psl_matches_python_reference(spark, hosts):
         for r in registered_domain(df, psl=list(PSL_RULES)).collect()
     }
     for h in hosts:
-        assert got[h] == _psl_reference(h, PSL_RULES), h
+        assert got[h] == ref_registered_domain(h, PSL_RULES), h
 
 
 def test_registered_domain_full_psl_matches_python_reference(spark):
@@ -216,7 +183,7 @@ def test_registered_domain_full_psl_matches_python_reference(spark):
         for r in registered_domain(df, psl=list(rules)).collect()
     }
     for h in hosts:
-        assert got[h] == _psl_reference(h, rules), h
+        assert got[h] == ref_registered_domain(h, rules), h
 
 
 # --------------------------------------------------------------------------

@@ -488,19 +488,15 @@ def test_registered_domain_full_psl_plan_keeps_codegen(spark):
     assert "lambdafunction" not in plan.lower()
 
 
-def test_psl_sql_udf_route_matches_column_spec_twin(spark):
-    """The production PSL route is a session-cached SQL scalar UDF
-    (one Catalyst parse of the 9.5k literals per session instead of
-    ~9s of py4j Literal round trips per query). The Column-built
-    builder stays as the independently-constructed spec twin — this
-    locks the two bit-equal on every host class, full list included."""
-    from pyspark.sql import functions as F
-
+def test_registered_domain_psl_fixed_hosts_match_python_reference(spark):
+    """The SQL-UDF PSL route against the independent pure-Python
+    publicsuffix.org reference on every fixed host class, for both the
+    bundled snapshot and the full rule list (the full list adds the
+    kawasaki.jp wildcard-with-exception family and private-section
+    rules)."""
     from recon_spark.data.psl_snapshot import PSL_RULES, full_psl_rules
-    from recon_spark.operators.webops import (
-        _registered_domain_psl,
-        registered_domain,
-    )
+    from recon_spark.operators.webops import registered_domain
+    from tests.reference_impl import ref_registered_domain
 
     hosts = [h for h, _ in PSL_CASES] + [
         "a.b.city.kawasaki.jp",   # wildcard w/ exception family (full list)
@@ -510,17 +506,8 @@ def test_psl_sql_udf_route_matches_column_spec_twin(spark):
     ]
     df = spark.createDataFrame([(h,) for h in hosts], "host string")
     for rules in (list(PSL_RULES), list(full_psl_rules())):
-        host = F.col("host")
-        spec = df.withColumn(
-            "reg_domain",
-            F.when(host.startswith("[") | (host == ""), host).otherwise(
-                _registered_domain_psl(host, rules)
-            ),
-        )
-        got = registered_domain(df, psl=rules)
-        a = sorted((r["host"], r["reg_domain"]) for r in spec.collect())
-        b = sorted((r["host"], r["reg_domain"]) for r in got.collect())
-        assert a == b
+        got = {r["host"]: r["reg_domain"] for r in registered_domain(df, psl=rules).collect()}
+        assert got == {h: ref_registered_domain(h, rules) for h in hosts}
 
 
 def test_psl_sql_udf_created_once_per_session(spark):
